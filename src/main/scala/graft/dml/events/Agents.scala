@@ -265,30 +265,44 @@ object Agents {
 
   /** MONITOR MODEL FOR drift_detection (S11): per-feature standardized mean
     * shift between a reference window and a current window, computed with
-    * decimal-exact sums (deterministic) in one aggregate pass per side. */
+    * decimal-exact sums (deterministic) in ONE aggregate pass over both
+    * sides, grouped by side. Each side's per-row terms are computed before
+    * the union, so the sums, squares and counts are exactly those of an
+    * aggregate over that side alone. */
   def driftScores(
       reference: DataFrame, current: DataFrame,
       features: Seq[String]): Map[String, Double] = {
-    def stats(df: DataFrame): Map[String, (Double, Double, Long)] = {
-      val aggs = features.flatMap { f =>
+    def terms(df: DataFrame, side: Int): DataFrame =
+      df.select(lit(side).as("_side") +: features.flatMap { f =>
         Seq(
-          sum(col(f).cast("decimal(28,8)")).cast("double").as(s"${f}_sum"),
-          sum((col(f) * col(f)).cast("decimal(28,8)")).cast("double").as(s"${f}_sq"),
-          count(col(f)).as(s"${f}_n"))
-      }
-      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      features.map { f =>
-        val s = row.getAs[Double](s"${f}_sum")
-        val sq = row.getAs[Double](s"${f}_sq")
-        val n = row.getAs[Long](s"${f}_n")
-        f -> (s / n, math.sqrt(math.max(sq / n - (s / n) * (s / n), 1e-12)), n)
-      }.toMap
+          col(f).cast("decimal(28,8)").as(s"${f}_v"),
+          (col(f) * col(f)).cast("decimal(28,8)").as(s"${f}_sq"),
+          col(f).isNotNull.as(s"${f}_nn"))
+      }: _*)
+    val aggs = features.flatMap { f =>
+      Seq(
+        sum(col(s"${f}_v")).cast("double").as(s"${f}_sum"),
+        sum(col(s"${f}_sq")).cast("double").as(s"${f}_sq"),
+        count_if(col(s"${f}_nn")).as(s"${f}_n"))
     }
-    val ref = stats(reference)
-    val cur = stats(current)
+    val rows = terms(reference, 0).unionAll(terms(current, 1))
+      .groupBy("_side").agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getInt(0) -> r).toMap
+    // a side with no rows has no group: its sums read as 0 and n as 0, as
+    // an ungrouped aggregate over the empty side would give
+    def stats(side: Int): Map[String, (Double, Double)] =
+      features.map { f =>
+        val (s, sq, n) = rows.get(side).fold((0.0, 0.0, 0L)) { row =>
+          (row.getAs[Double](s"${f}_sum"), row.getAs[Double](s"${f}_sq"),
+            row.getAs[Long](s"${f}_n"))
+        }
+        f -> (s / n, math.sqrt(math.max(sq / n - (s / n) * (s / n), 1e-12)))
+      }.toMap
+    val ref = stats(0)
+    val cur = stats(1)
     features.map { f =>
-      val (m0, sd0, _) = ref(f)
-      val (m1, _, _) = cur(f)
+      val (m0, sd0) = ref(f)
+      val (m1, _) = cur(f)
       f -> math.abs(m1 - m0) / sd0
     }.toMap
   }
@@ -354,15 +368,15 @@ object Agents {
   }
 
   /** Drift agent: evaluates scores and publishes an alert event per
-    * drifted feature (WHEN drift > threshold THEN PUBLISH, DSL.md:346-351). */
+    * drifted feature (WHEN drift > threshold THEN PUBLISH, DSL.md:346-351),
+    * all of one check's alerts in one event-log append. */
   def driftAgent(
       bus: EventBus,
       reference: DataFrame, current: DataFrame,
       features: Seq[String], threshold: Double = 0.5): Map[String, Double] = {
     val scores = driftScores(reference, current, features)
-    scores.filter(_._2 > threshold).foreach { case (f, s) =>
-      bus.publish("drift_alert", Map("feature" -> f, "score" -> s.toString))
-    }
+    bus.publishAll(features.distinct.filter(scores(_) > threshold).map(f =>
+      "drift_alert" -> Map("feature" -> f, "score" -> scores(f).toString)))
     scores
   }
 

@@ -107,18 +107,32 @@ final class EventBus(spark: SparkSession, path: String) {
   import spark.implicits._
 
   /** PUBLISH EVENT 'type' WITH PAYLOAD {...} (S12) — appends one file;
-    * at scale publishers batch events and append partitioned files. */
+    * at scale publishers batch events ([[publishAll]]) and append
+    * partitioned files. */
   def publish(
       eventType: String, payload: Map[String, String] = Map.empty,
-      value: Double = 0.0, userId: Long = -1L): Unit = {
-    val props = payload.map { case (k, v) =>
-      s"${graft.dml.PyJson.dumpString(k)}: ${graft.dml.PyJson.dumpString(v)}"
-    }.mkString("{", ", ", "}")
-    Seq((System.nanoTime(), new java.sql.Timestamp(System.currentTimeMillis()),
-      userId, eventType, value, props))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("append").parquet(path)
-  }
+      value: Double = 0.0, userId: Long = -1L): Unit =
+    append(Seq((eventType, payload, value, userId)))
+
+  /** Publish a batch of (type, payload) events as ONE appended file — one
+    * write job however many events, in the given order (event ids
+    * ascending). An empty batch writes nothing. */
+  def publishAll(events: Seq[(String, Map[String, String])]): Unit =
+    append(events.map { case (t, p) => (t, p, 0.0, -1L) })
+
+  private def append(events: Seq[(String, Map[String, String], Double, Long)]): Unit =
+    if (events.nonEmpty) {
+      val id0 = System.nanoTime()
+      val ts = new java.sql.Timestamp(System.currentTimeMillis())
+      events.zipWithIndex.map { case ((eventType, payload, value, userId), i) =>
+        val props = payload.map { case (k, v) =>
+          s"${graft.dml.PyJson.dumpString(k)}: ${graft.dml.PyJson.dumpString(v)}"
+        }.mkString("{", ", ", "}")
+        (id0 + i, ts, userId, eventType, value, props)
+      }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1)
+        .write.mode("append").parquet(path)
+    }
 
   /** Fold the one-file-per-publish appends into `targetFiles` parquet
     * files — the maintenance counterpart [[publish]]'s doc promises at
@@ -245,19 +259,22 @@ final case class WhenRule(
 final class RuleEngine(rules: Seq[WhenRule]) {
 
   /** Dispatch rules against a batch of events; returns fired-rule names
-    * with match counts. Each rule is one filter over the batch — rules
-    * share the scan via the DataFrame cache. */
-  def dispatchBatch(events: DataFrame): Map[String, Long] = {
-    val cached = events.cache()
-    try rules.flatMap { r =>
-      val hits = cached
-        .filter(col("event_type").like(Events.patternToLike(r.eventTypePattern)))
-        .filter(r.condition)
-      val n = hits.count()
-      if (n > 0) { r.action(hits); Some(r.name -> n) } else None
-    }.toMap
-    finally { cached.unpersist(); () }
-  }
+    * with match counts. Every rule's count comes from one `count_if`
+    * aggregate over the batch — one scan for all rules. A rule matches
+    * where its type pattern and its condition are both true (a NULL
+    * condition does not match, as in a filter). Each fired rule's action
+    * gets its matching rows as a lazy filter over the batch. */
+  def dispatchBatch(events: DataFrame): Map[String, Long] =
+    if (rules.isEmpty) Map.empty
+    else {
+      val matches = rules.map(r =>
+        col("event_type").like(Events.patternToLike(r.eventTypePattern)) && r.condition)
+      val counts = events.agg(count_if(matches.head), matches.tail.map(count_if): _*).head()
+      rules.zip(matches).zipWithIndex.flatMap { case ((r, m), i) =>
+        val n = counts.getLong(i)
+        if (n > 0) { r.action(events.filter(m)); Some(r.name -> n) } else None
+      }.toMap
+    }
 
   /** Streaming dispatcher: rules evaluated per micro-batch. */
   def runStream(

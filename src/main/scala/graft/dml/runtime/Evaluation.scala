@@ -1,6 +1,7 @@
 package graft.dml.runtime
 
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.classification.{DecisionTreeClassificationModel, GBTClassificationModel, LogisticRegressionModel, RandomForestClassificationModel}
 import org.apache.spark.ml.evaluation._
 import org.apache.spark.ml.linalg.Vector
@@ -12,6 +13,8 @@ import AlgorithmRegistry.{Classification, Clustering, Regression, Task}
 /** evaluate_model / compare_models / feature_importance (SURVEY §2.6,
   * reference/DSL.md:214-233). All metric computation is distributed — the
   * evaluators run aggregate jobs; nothing is collected except scalars.
+  * A task's standard metrics come from one aggregate pass
+  * ([[computeMetrics]]), not one job per metric.
   */
 object Evaluation {
 
@@ -43,47 +46,62 @@ object Evaluation {
   }
 
   /** Standard metric map per task over a transformed (predictions)
-    * DataFrame. The frame is cached for the duration: each evaluator is an
-    * independent Spark job, and without the cache every one would re-run
-    * the model transform and the full source lineage (per chunk, in the
-    * STOP WHEN loop). */
-  def computeMetrics(predictions0: DataFrame, task: Task): Map[String, Double] = {
-    val predictions = predictions0.cache()
-    try computeMetricsUncached(predictions, task)
-    finally { predictions.unpersist(); () }
+    * DataFrame, one pass per metric family: every classification metric
+    * reads the one confusion matrix of a single `MulticlassMetrics`, every
+    * regression metric the one column summary of a single
+    * `RegressionMetrics` — the same objects `evaluate` builds per metric,
+    * so the values are bit-identical to the per-metric evaluators. Binary
+    * AUC (a sort over the scores) and silhouette take passes of their own;
+    * only then is the frame cached for the duration, since without the
+    * cache each pass would re-run the model transform and the full source
+    * lineage (per chunk, in the STOP WHEN loop). */
+  def computeMetrics(predictions: DataFrame, task: Task): Map[String, Double] = {
+    val withAuc = task == Classification && rawPredictionWidth(predictions) == 2
+    if (withAuc || task == Clustering) {
+      val cached = predictions.cache()
+      try metricsOf(cached, task, withAuc)
+      finally { cached.unpersist(); () }
+    } else metricsOf(predictions, task, withAuc)
   }
 
-  private def computeMetricsUncached(
-      predictions: DataFrame, task: Task): Map[String, Double] = {
+  private def metricsOf(
+      predictions: DataFrame, task: Task, withAuc: Boolean): Map[String, Double] =
     task match {
       case Classification =>
-        val mc = new MulticlassClassificationEvaluator()
+        val mm = new MulticlassClassificationEvaluator().getMetrics(predictions)
         val base = Map(
-          "accuracy" -> mc.setMetricName("accuracy").evaluate(predictions),
-          "f1" -> mc.setMetricName("f1").evaluate(predictions),
-          "precision" -> mc.setMetricName("weightedPrecision").evaluate(predictions),
-          "recall" -> mc.setMetricName("weightedRecall").evaluate(predictions))
-        // AUC only when the model itself is binary: the rawPrediction vector
-        // must be width 2 (distinct labels in the eval split can undercount
-        // the model's classes, e.g. the indexer's handleInvalid bucket)
-        val binary = predictions.schema.fieldNames.contains("rawPrediction") && {
-          predictions.select("rawPrediction").head(1).headOption.exists(
-            _.getAs[Vector](0).size == 2)
-        }
-        if (binary)
+          "accuracy" -> mm.accuracy,
+          "f1" -> mm.weightedFMeasure,
+          "precision" -> mm.weightedPrecision,
+          "recall" -> mm.weightedRecall)
+        if (withAuc)
           base + ("auc" -> new BinaryClassificationEvaluator()
             .setMetricName("areaUnderROC").evaluate(predictions))
         else base
       case Regression =>
-        val re = new RegressionEvaluator()
+        val rm = new RegressionEvaluator().getMetrics(predictions)
         Map(
-          "rmse" -> re.setMetricName("rmse").evaluate(predictions),
-          "mae" -> re.setMetricName("mae").evaluate(predictions),
-          "r2" -> re.setMetricName("r2").evaluate(predictions))
+          "rmse" -> rm.rootMeanSquaredError,
+          "mae" -> rm.meanAbsoluteError,
+          "r2" -> rm.r2)
       case Clustering =>
         Map("silhouette" -> new ClusteringEvaluator().evaluate(predictions))
     }
-  }
+
+  /** Width of the rawPrediction vector. AUC applies only when the model
+    * itself is binary, width 2: distinct labels in the eval split can
+    * undercount the model's classes, e.g. the indexer's handleInvalid
+    * bucket. The classifier records the width in the column's attribute
+    * metadata; only when that is missing is one row read. -1 when the
+    * frame has no rawPrediction column or no rows. */
+  private def rawPredictionWidth(predictions: DataFrame): Int =
+    if (!predictions.schema.fieldNames.contains("rawPrediction")) -1
+    else {
+      val declared = AttributeGroup.fromStructField(predictions.schema("rawPrediction")).size
+      if (declared >= 0) declared
+      else predictions.select("rawPrediction").head(1).headOption
+        .fold(-1)(_.getAs[Vector](0).size)
+    }
 
   /** evaluate_model(model, test_data, metrics) — DSL.md:214-219. */
   def evaluateModel(

@@ -2,9 +2,12 @@ package graft.dml.runtime
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.dml.{PyJson, Value}
 
@@ -14,31 +17,50 @@ import graft.dml.{PyJson, Value}
   * as a parquet table beside the saved PipelineModels.
   *
   * Layout: `basePath/registry` (parquet, append-only) and
-  * `basePath/models/<name>/v<version>` (PipelineModel.save).
+  * `basePath/models/<name>/v<version>` (PipelineModel.save). Both tables
+  * are read with their fixed schema, so no read infers one from the
+  * parquet footers (a Spark job per read).
+  *
+  * In-memory slot: the registry keeps, per model name, the latest version
+  * this instance registered or loaded, with its fitted `PipelineModel`.
+  * Disk stays the source of truth: [[load]] always resolves the version
+  * (the latest one, from the registry table, unless named) and uses the
+  * slot only when its version is that one — so a TRAIN followed by
+  * PREDICT hands the fitted model over without re-reading it, while a
+  * version registered by another instance, or an older version asked
+  * for by number, is read from disk. [[register]] still writes the model
+  * and the registry row before it fills the slot. The slot holds the
+  * caller's model object itself: mutating its params after `register`
+  * changes what `load` returns.
   */
 final class ModelRegistry(spark: SparkSession, basePath: String) {
   import spark.implicits._
 
   private val registryPath = s"$basePath/registry"
+  private val deploymentsPath = s"$basePath/deployments"
   private def modelPath(name: String, version: Int) =
     s"$basePath/models/$name/v$version"
 
-  def list(): DataFrame =
-    if (Files.exists(Paths.get(registryPath)))
-      spark.read.parquet(registryPath)
-    else
-      Seq.empty[(String, String, Int, Seq[String], String, String, String, Long)]
-        .toDF("name", "algorithm", "version", "features", "target",
-          "metrics_json", "config_json", "created_at_ms")
+  /** name → (version, model): the latest version seen per name. */
+  private val slots = TrieMap.empty[String, (Int, PipelineModel)]
 
-  def nextVersion(name: String): Int = {
-    val cur = list().filter($"name" === name)
-      .agg(max($"version")).collect()(0)
-    if (cur.isNullAt(0)) 1 else cur.getInt(0) + 1
-  }
+  private def read(path: String, schema: StructType): DataFrame =
+    if (Files.exists(Paths.get(path))) spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  def list(): DataFrame = read(registryPath, ModelRegistry.registrySchema)
+
+  /** Latest registered version of `name`, if any. The name's versions
+    * (one registry row each) are collected and maxed on the driver: a
+    * scan without the exchange, and the extra job, of an aggregate. */
+  private def latestVersion(name: String): Option[Int] =
+    list().filter($"name" === name).select("version").collect()
+      .map(_.getInt(0)).maxOption
+
+  def nextVersion(name: String): Int = latestVersion(name).fold(1)(_ + 1)
 
   /** Persist the fitted model and append its registry row; returns the
-    * assigned version. */
+    * assigned version. The model then fills the name's in-memory slot. */
   def register(report: Trainer.TrainReport): Int = {
     val spec = report.spec
     val version = nextVersion(spec.name)
@@ -51,17 +73,23 @@ final class ModelRegistry(spark: SparkSession, basePath: String) {
       .toDF("name", "algorithm", "version", "features", "target",
         "metrics_json", "config_json", "created_at_ms")
     row.write.mode("append").parquet(registryPath)
+    slots(spec.name) = (version, report.model)
     version
   }
 
+  /** The model at `version`, else at the latest registered version. The
+    * version is always resolved on disk; the in-memory slot answers only
+    * when it holds exactly that version. */
   def load(name: String, version: Option[Int] = None): PipelineModel = {
-    val v = version.getOrElse {
-      val cur = list().filter($"name" === name).agg(max($"version")).collect()(0)
-      if (cur.isNullAt(0))
-        throw new IllegalArgumentException(s"model not found: $name")
-      cur.getInt(0)
+    val v = version.orElse(latestVersion(name)).getOrElse(
+      throw new IllegalArgumentException(s"model not found: $name"))
+    slots.get(name) match {
+      case Some((`v`, model)) => model
+      case slot =>
+        val model = PipelineModel.load(modelPath(name, v))
+        if (slot.forall(_._1 < v)) slots(name) = (v, model)
+        model
     }
-    PipelineModel.load(modelPath(name, v))
   }
 
   /** DEPLOY MODEL … (S3): mark a version as the serving endpoint — a
@@ -72,7 +100,7 @@ final class ModelRegistry(spark: SparkSession, basePath: String) {
     if (v < 1) throw new IllegalArgumentException(s"model not found: $name")
     Seq((name, endpoint, v, System.currentTimeMillis()))
       .toDF("name", "endpoint", "version", "deployed_at_ms")
-      .write.mode("append").parquet(s"$basePath/deployments")
+      .write.mode("append").parquet(deploymentsPath)
   }
 
   /** `WHEN MODEL … THEN rollback` (S6 reactive block, reference
@@ -109,11 +137,7 @@ final class ModelRegistry(spark: SparkSession, basePath: String) {
     prev
   }
 
-  def deployments(): DataFrame =
-    if (Files.exists(Paths.get(s"$basePath/deployments")))
-      spark.read.parquet(s"$basePath/deployments")
-    else Seq.empty[(String, String, Int, Long)]
-      .toDF("name", "endpoint", "version", "deployed_at_ms")
+  def deployments(): DataFrame = read(deploymentsPath, ModelRegistry.deploymentsSchema)
 
   /** PREDICT USING MODEL m FROM t STORE RESULTS IN r (S4). */
   def predict(name: String, fromTable: String, storeIn: String): DataFrame = {
@@ -121,4 +145,24 @@ final class ModelRegistry(spark: SparkSession, basePath: String) {
     out.createOrReplaceTempView(storeIn)
     out
   }
+}
+
+object ModelRegistry {
+  /** The registry table's columns, as [[ModelRegistry.register]] writes them. */
+  private val registrySchema: StructType = StructType(Seq(
+    StructField("name", StringType),
+    StructField("algorithm", StringType),
+    StructField("version", IntegerType),
+    StructField("features", ArrayType(StringType)),
+    StructField("target", StringType),
+    StructField("metrics_json", StringType),
+    StructField("config_json", StringType),
+    StructField("created_at_ms", LongType)))
+
+  /** The deployments table's columns, as [[ModelRegistry.deploy]] writes them. */
+  private val deploymentsSchema: StructType = StructType(Seq(
+    StructField("name", StringType),
+    StructField("endpoint", StringType),
+    StructField("version", IntegerType),
+    StructField("deployed_at_ms", LongType)))
 }

@@ -20,8 +20,8 @@ import graft.dml.events.{Agents, EventBus, RuleEngine, WhenRule}
   * Definition statements (WHEN / MONITOR / CREATE ENSEMBLE) register state
   * on the runner; evaluation entry points (`dispatch`, `checkModelRules`,
   * `runMonitor`) fire them against data. Everything stays DataFrame-shaped:
-  * rules are Column predicates over the events scan, monitors one aggregate
-  * pass per side.
+  * rules are Column predicates counted in one aggregate over the events
+  * scan, monitors one aggregate pass over both sides.
   */
 object StatementRunner {
   final case class RunResult(
@@ -56,7 +56,28 @@ final class StatementRunner(
   private val trainSpecs = mutable.LinkedHashMap.empty[String, TrainSpec]
   private val rawSpecs = mutable.LinkedHashMap.empty[String, TrainSpec]
 
-  def run(stmt: Statement): RunResult = stmt match {
+  /** Run one statement. Its Spark jobs carry the job description
+    * `dml:<kind> <name>` (e.g. `dml:train churn_model`); the caller's
+    * description is restored afterwards. */
+  def run(stmt: Statement): RunResult =
+    withJobDescription(s"dml:${label(stmt)}")(execute(stmt))
+
+  private def label(stmt: Statement): String = stmt match {
+    case t: TrainSpec         => s"train ${t.name}"
+    case c: ComputeSpec       => s"compute ${c.name}"
+    case p: PredictSpec       => s"predict ${p.model}"
+    case d: DeploySpec        => s"deploy ${d.model}"
+    case ts: TrafficSplitSpec => s"traffic_split ${ts.endpoint}"
+    case p: PublishSpec       => s"publish ${p.eventType}"
+    case s: SubscribeSpec     => s"subscribe ${s.pattern}"
+    case t: TransformerSpec   => s"transformer ${t.name}"
+    case e: EnsembleSpec      => s"ensemble ${e.name}"
+    case ex: ExplainSpec      => s"explain ${ex.model}"
+    case m: MonitorSpec       => s"monitor ${m.model}"
+    case w: WhenSpec          => s"when ${w.trigger}"
+  }
+
+  private def execute(stmt: Statement): RunResult = stmt match {
     case t: TrainSpec =>
       val report = Trainer.train(spark, t)
       val v = registry.register(report)
@@ -249,21 +270,27 @@ final class StatementRunner(
   // ----- evaluation entry points ------------------------------------------
 
   /** Registered event rules as a RuleEngine over an events batch; fires
-    * matching actions (named handler, else a `rule_fired` event). */
-  def dispatch(events: DataFrame): Map[String, Long] = {
-    val eventRules = whenRules.toSeq.filter(_.trigger.startsWith("event:"))
-    val rules = eventRules.zipWithIndex.map { case (w, i) =>
-      // rule names must be unique or dispatchBatch's result map collapses
-      // same-action rules and under-reports match counts
-      val dup = eventRules.indexWhere(_.action == w.action) != i
-      WhenRule(
-        name = if (dup) s"${w.action}#$i" else w.action,
-        eventTypePattern = w.trigger.stripPrefix("event:"),
-        condition = w.condition.map(conditionColumn).getOrElse(lit(true)),
-        action = actionFor(w.action))
+    * matching actions (named handler, else a `rule_fired` event). The
+    * batch's `rule_fired` events are published together, as one append,
+    * in rule order. Jobs carry the description `dml:dispatch`. */
+  def dispatch(events: DataFrame): Map[String, Long] =
+    withJobDescription("dml:dispatch") {
+      val eventRules = whenRules.toSeq.filter(_.trigger.startsWith("event:"))
+      val fired = mutable.ArrayBuffer.empty[(String, Map[String, String])]
+      val rules = eventRules.zipWithIndex.map { case (w, i) =>
+        // rule names must be unique or dispatchBatch's result map collapses
+        // same-action rules and under-reports match counts
+        val dup = eventRules.indexWhere(_.action == w.action) != i
+        WhenRule(
+          name = if (dup) s"${w.action}#$i" else w.action,
+          eventTypePattern = w.trigger.stripPrefix("event:"),
+          condition = w.condition.map(conditionColumn).getOrElse(lit(true)),
+          action = handlerFor(w.action).getOrElse(
+            (_: DataFrame) => fired += ruleFired(w.action)))
+      }
+      try new RuleEngine(rules).dispatchBatch(events)
+      finally bus.publishAll(fired.toSeq)
     }
-    new RuleEngine(rules).dispatchBatch(events)
-  }
 
   /** WHEN MODEL rules evaluated against the latest registry metrics of each
     * model; returns the fired actions. `rollback` and `retrain` are
@@ -296,15 +323,17 @@ final class StatementRunner(
             trainSpecs(model) = report.spec
             bus.publish("model_retrained",
               Map("model" -> model, "version" -> v.toString))
-          case _ => actionFor(w.action)(spark.emptyDataFrame)
+          case _ => handlerFor(w.action)
+            .fold(bus.publishAll(Seq(ruleFired(w.action))))(_(spark.emptyDataFrame))
         }
         w.action
     }
 
   /** Fire a registered monitor: drift scores between two slices, alerts
-    * published for features crossing the ALERT threshold (default 0.5). */
+    * published for features crossing the ALERT threshold (default 0.5).
+    * Jobs carry the description `dml:monitor <model>`. */
   def runMonitor(model: String, reference: DataFrame, current: DataFrame)
-      : Map[String, Double] = {
+      : Map[String, Double] = withJobDescription(s"dml:monitor $model") {
     val m = monitors.find(_.model == model).getOrElse(
       throw new IllegalArgumentException(s"no monitor registered for '$model'"))
     // the drift agent alerts when a feature's drift score EXCEEDS the
@@ -411,9 +440,15 @@ final class StatementRunner(
     StopCondition.parse(cond.toLowerCase).eval(metrics)
   }
 
-  private def actionFor(action: String): DataFrame => Unit = {
-    val handlerName = action.split("\\s+").head
-    handlers.getOrElse(handlerName,
-      (_: DataFrame) => bus.publish("rule_fired", Map("action" -> action)))
+  private def handlerFor(action: String): Option[DataFrame => Unit] =
+    handlers.get(action.split("\\s+").head)
+
+  private def ruleFired(action: String) = "rule_fired" -> Map("action" -> action)
+
+  private def withJobDescription[T](description: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try body finally sc.setJobDescription(previous)
   }
 }

@@ -28,6 +28,12 @@ import AlgorithmRegistry.{Classification, Clustering, Regression, Task}
   * are randomSplit (narrow, no shuffle); MLlib's iterative optimizers do
   * treeAggregate gradient reduction, which is the distributed-training story
   * the reference's DISTRIBUTED.md tier aspires to (SURVEY §2.7).
+  *
+  * Fixed cost: a step that needs a scan takes one pass, not one per
+  * column, split or metric — the string label and string features share one
+  * multi-column StringIndexer (one fit job), the split sizes come from one
+  * grouped query over the tagged splits, and the metrics from one pass
+  * per metric family ([[Evaluation.computeMetrics]]).
   */
 object Trainer {
 
@@ -90,19 +96,32 @@ object Trainer {
 
     // Pipeline stages: label stage + either a text pipeline
     // (Tokenizer→HashingTF→IDF over one text feature) or categorical
-    // indexers → assembler → optional scaler
+    // indexing → assembler → optional scaler. A string label and the
+    // string features share ONE multi-column StringIndexer, whose fit
+    // collects every column's sorted label set in a single job (same
+    // labels, same indices as one indexer per column).
+    val isString = (c: String) => df0.schema(c).dataType == StringType
+    val vectorFeature = isVectorFeature(df0, featureNames)
+    val indexed = Seq.newBuilder[(String, String)] // input → output column
     val stages = Vector.newBuilder[PipelineStage]
     if (alg.task != Clustering) {
-      if (df0.schema(spec.target).dataType == StringType)
-        stages += new StringIndexer().setInputCol(spec.target)
-          .setOutputCol("label").setHandleInvalid("keep")
-          .setStringOrderType("alphabetAsc")
+      if (isString(spec.target)) indexed += spec.target -> "label"
       else if (spec.target != "label") // numeric target already named
         stages += new SQLTransformer().setStatement( // label needs no stage
           s"SELECT *, CAST(`${spec.target}` AS DOUBLE) AS label FROM __THIS__")
     }
+    val categorical =
+      if (vectorFeature || alg.textPipeline) Set.empty[String]
+      else featureNames.filter(isString).toSet
+    categorical.toSeq.sorted.foreach(fn => indexed += fn -> s"${fn}_idx")
+    val indexedCols = indexed.result()
+    if (indexedCols.nonEmpty)
+      stages += new StringIndexer()
+        .setInputCols(indexedCols.map(_._1).toArray)
+        .setOutputCols(indexedCols.map(_._2).toArray)
+        .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
     val featureCols: Seq[String] =
-      if (isVectorFeature(df0, featureNames)) {
+      if (vectorFeature) {
         // single Array[Float]/Array[Double] feature (e.g. an embedding
         // column): converted to an ML vector in the training frame; passes
         // straight through as the features column
@@ -121,14 +140,7 @@ object Trainer {
           .setInputCol("_tf").setOutputCol("features")
         Seq(textCol)
       } else {
-        val cols = featureNames.map { fn =>
-          if (df0.schema(fn).dataType == StringType) {
-            stages += new StringIndexer().setInputCol(fn)
-              .setOutputCol(s"${fn}_idx")
-              .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
-            s"${fn}_idx"
-          } else fn
-        }
+        val cols = featureNames.map(fn => if (categorical(fn)) s"${fn}_idx" else fn)
         val assembled = if (needScale) "features_raw" else "features"
         stages += new VectorAssembler().setInputCols(cols.toArray)
           .setOutputCol(assembled).setHandleInvalid("keep")
@@ -233,7 +245,7 @@ object Trainer {
         // column count for vector-feature (embedding dim) or text-pipeline
         // (HashingTF width) inputs
         val inputDim =
-          if (isVectorFeature(df0, featureNames))
+          if (vectorFeature)
             df0.select(featureNames.head).head()
               .getAs[org.apache.spark.ml.linalg.Vector](0).size
           else if (alg.textPipeline) 1 << 14
@@ -327,7 +339,7 @@ object Trainer {
       (if (epochs > 0) Map("epochs" -> epochs.toDouble) else Map.empty)
 
     TrainReport(spec, model, metrics, epochs, checkpoints,
-      namedSplits.map { case (k, d) => k -> d.count() },
+      splitCounts(namedSplits),
       // a param that BOUND this run (list-form holidays) is not inert
       ignoredParams = spec.params.map(_._1)
         .filter(n => alg.noopParams(n) && !consumedParams(n)))
@@ -390,6 +402,17 @@ object Trainer {
         (named, trainDf, evalDf)
     }
 
+  /** Row count of every named split from ONE grouped query over the
+    * splits tagged with their names — each split's sample is the same as
+    * on its own, so the counts equal per-split `count()`s. */
+  private def splitCounts(named: Map[String, DataFrame]): Map[String, Long] = {
+    val tagged = named.toSeq.map { case (k, d) => d.select(lit(k).as("split")) }
+      .reduce(_ unionAll _)
+    val counts = tagged.groupBy("split").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    named.keys.map(k => k -> counts.getOrElse(k, 0L)).toMap
+  }
+
   private def configure(
       est: Params, task: Task, weightCol: Option[String], seed: Long): Unit = {
     def trySet(p: String, v: Any): Unit =
@@ -401,35 +424,48 @@ object Trainer {
     weightCol.foreach(w => trySet("weightCol", w))
   }
 
-  /** Test hook: the oversampling op on its own. */
+  /** Test hooks: the balancing ops on their own. */
   private[runtime] def oversampleForTest(
       df: DataFrame, target: String, seed: Long): DataFrame =
     Balance.oversample(df, target, seed)
 
+  private[runtime] def undersampleForTest(
+      df: DataFrame, target: String, seed: Long): DataFrame =
+    Balance.undersample(df, target, seed)
+
   /** O6 balancing, all seeded and shuffle-free (per-class Bernoulli
-    * sampling; only the class-count map is collected). */
+    * sampling; only the class-count map is collected). Class i's sample
+    * is seeded `seed + i` in SORTED class order (by the class value's
+    * string form, NULL first) — never in the collected count rows' order,
+    * which follows the shuffle layout (partition count, AQE) — so the
+    * balanced rows do not depend on the layout. */
   private object Balance {
     private def counts(df: DataFrame, target: String): Map[Any, Long] =
       df.groupBy(target).count().collect()
         .map(r => r.get(0) -> r.getLong(1)).toMap
 
+    /** (class, count, per-class seed), in sorted class order. */
+    private def seeded(cs: Map[Any, Long], seed: Long): Seq[(Any, Long, Long)] =
+      cs.toSeq.sortBy { case (cls, _) => Option(cls).map(_.toString) }
+        .zipWithIndex.map { case ((cls, n), i) => (cls, n, seed + i) }
+
     def oversample(df: DataFrame, target: String, seed: Long): DataFrame = {
       val cs = counts(df, target)
       val max = cs.values.max.toDouble
-      cs.zipWithIndex.map { case ((cls, n), i) =>
+      seeded(cs, seed).map { case (cls, n, s) =>
         val part = df.filter(col(target) <=> lit(cls))
         val frac = max / n
-        if (frac <= 1.0) part else part.sample(withReplacement = true, frac, seed + i)
+        if (frac <= 1.0) part else part.sample(withReplacement = true, frac, s)
       }.reduce(_ unionAll _)
     }
 
     def undersample(df: DataFrame, target: String, seed: Long): DataFrame = {
       val cs = counts(df, target)
       val min = cs.values.min.toDouble
-      cs.zipWithIndex.map { case ((cls, n), i) =>
+      seeded(cs, seed).map { case (cls, n, s) =>
         val part = df.filter(col(target) <=> lit(cls))
         if (n <= min) part
-        else part.sample(withReplacement = false, min / n, seed + i)
+        else part.sample(withReplacement = false, min / n, s)
       }.reduce(_ unionAll _)
     }
 

@@ -331,6 +331,27 @@ class EventsSpec extends AnyFunSuite {
       "backup is reclaimed after a verified swap")
   }
 
+  test("publishAll appends a batch of N events as one file of N rows") {
+    val s = spark
+    val dir = Files.createTempDirectory("graft-publish-all").toString
+    val bus = new EventBus(s, dir)
+    def partFiles() = new java.io.File(dir).listFiles()
+      .count(f => f.getName.startsWith("part-"))
+    val batch = (1 to 5).map(i => s"alert.$i" -> Map("n" -> i.toString))
+    bus.publishAll(batch)
+    assert(partFiles() == 1)
+    val rows = bus.subscribe("%").orderBy("event_id")
+      .select("event_type", "props", "value", "user_id").collect().toSeq
+    assert(rows.map(_.getString(0)) == batch.map(_._1))
+    assert(rows.map(_.getString(1)) == (1 to 5).map(i => s"""{"n": "$i"}"""))
+    assert(rows.forall(r => r.getDouble(2) == 0.0 && r.getLong(3) == -1L))
+    // an empty batch writes nothing; publish still appends one file
+    bus.publishAll(Nil)
+    bus.publish("single", Map.empty)
+    assert(partFiles() == 2)
+    assert(bus.subscribe("%").count() == 6)
+  }
+
   test("glob subscription patterns match dotted event types") {
     val s = spark
     val dir = Files.createTempDirectory("graft-glob").toString

@@ -103,6 +103,28 @@ class TrainerSpec extends AnyFunSuite {
       s"class count $n far from majority $maxBefore"))
   }
 
+  test("balancing draws the same rows at shuffle partitions 1 and 7") {
+    val s = spark
+    // three classes: the class-count query's row order follows the
+    // shuffle layout, so seeds assigned in that order would re-draw the
+    // sample
+    val df = DmlFixture.table(s, 29, 600, 0L).select("id", "x1", "tier")
+    def balanced(partitions: Int)(
+        op: (org.apache.spark.sql.DataFrame, String, Long) => org.apache.spark.sql.DataFrame) = {
+      val key = "spark.sql.shuffle.partitions"
+      val prev = s.conf.get(key)
+      s.conf.set(key, partitions.toString)
+      try op(df, "tier", 42L).orderBy("id", "x1").collect().toSeq
+      finally s.conf.set(key, prev)
+    }
+    val over = balanced(1)(Trainer.oversampleForTest)
+    assert(over.size > 600)
+    assert(over == balanced(7)(Trainer.oversampleForTest))
+    val under = balanced(1)(Trainer.undersampleForTest)
+    assert(under.size < 600)
+    assert(under == balanced(7)(Trainer.undersampleForTest))
+  }
+
   test("class weights column is attached for weights balancing") {
     val spec = parseTrain(
       "TRAIN MODEL w_model USING logistic_regression(max_iter=5) FROM orders " +
