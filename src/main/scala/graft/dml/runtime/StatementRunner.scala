@@ -60,7 +60,7 @@ final class StatementRunner(
     * `dml:<kind> <name>` (e.g. `dml:train churn_model`); the caller's
     * description is restored afterwards. */
   def run(stmt: Statement): RunResult =
-    withJobDescription(s"dml:${label(stmt)}")(execute(stmt))
+    graft.scale.JobLabel(spark, s"dml:${label(stmt)}")(execute(stmt))
 
   private def label(stmt: Statement): String = stmt match {
     case t: TrainSpec         => s"train ${t.name}"
@@ -274,7 +274,7 @@ final class StatementRunner(
     * batch's `rule_fired` events are published together, as one append,
     * in rule order. Jobs carry the description `dml:dispatch`. */
   def dispatch(events: DataFrame): Map[String, Long] =
-    withJobDescription("dml:dispatch") {
+    graft.scale.JobLabel(spark, "dml:dispatch") {
       val eventRules = whenRules.toSeq.filter(_.trigger.startsWith("event:"))
       val fired = mutable.ArrayBuffer.empty[(String, Map[String, String])]
       val rules = eventRules.zipWithIndex.map { case (w, i) =>
@@ -333,7 +333,7 @@ final class StatementRunner(
     * published for features crossing the ALERT threshold (default 0.5).
     * Jobs carry the description `dml:monitor <model>`. */
   def runMonitor(model: String, reference: DataFrame, current: DataFrame)
-      : Map[String, Double] = withJobDescription(s"dml:monitor $model") {
+      : Map[String, Double] = graft.scale.JobLabel(spark, s"dml:monitor $model") {
     val m = monitors.find(_.model == model).getOrElse(
       throw new IllegalArgumentException(s"no monitor registered for '$model'"))
     // the drift agent alerts when a feature's drift score EXCEEDS the
@@ -444,11 +444,4 @@ final class StatementRunner(
     handlers.get(action.split("\\s+").head)
 
   private def ruleFired(action: String) = "rule_fired" -> Map("action" -> action)
-
-  private def withJobDescription[T](description: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val previous = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(description)
-    try body finally sc.setJobDescription(previous)
-  }
 }

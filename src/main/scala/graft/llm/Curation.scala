@@ -2125,17 +2125,16 @@ object Curation {
     // (the incrementalCandidates discipline — index side pruned by the
     // batch's band keys); identical texts never re-band (their
     // representative is historical and already indexed)
-    val nbBands = PipelineCaches.track(
+    val nbBands = Dedup.probeBatch(
       Dedup.signatureIndex(newReps, index.k, index.numHashes,
-        index.nBands, index.oracleHashes)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    nbBands.count()
+        index.nBands, index.oracleHashes))
     // persisted + materialized: the candidate set is consumed THREE
     // times (the rep-id prune below + both pair sides of the
     // pair-count machinery), and each lazy reference would re-run the
     // banded join — pair-bounded by construction, so the cache is small
     val cands = PipelineCaches.track(
-      Dedup.candidatesFromBuckets(index.bands, nbBands, minEstJaccard)
+      Dedup.candidatesFromBuckets(index.bands, nbBands, index.numHashes,
+        index.nBands, minEstJaccard)
         .persist(StorageLevel.MEMORY_AND_DISK))
     cands.count()
     // exact-Jaccard rescore: candidate-bounded — only candidate reps'
@@ -2188,7 +2187,7 @@ object Curation {
       .reduceOption(_ max _)
     val delta = ParagraphIndexModel(
       bGroups.filter(col("_hist_rep").isNull).select("_h", "rep_key"),
-      nbBands, nbShingles,
+      nbBands.rows, nbShingles,
       chunks.select(col("doc_id").cast("long").as("doc_id"),
         col("chunk_key"), col("_h")),
       index.chunkSize, index.k, index.numHashes,

@@ -129,8 +129,8 @@ object Dedup {
       if (oracleHashes) minhashSignatures(docs, k, numHashes)
       else fastSignatures(docs, k, numHashes)
     val bandCols = (0 until bands).map { b =>
-      val parts = (b * rows until (b + 1) * rows).map(j => col(s"sig_$j"))
-      xxhash64(concat_ws("|", parts: _*)).as(s"band_$b")
+      bandHash((b * rows until (b + 1) * rows).map(j => col(s"sig_$j")))
+        .as(s"band_$b")
     }
     sigs.select((col("doc_id") +:
         (0 until numHashes).map(j => col(s"sig_$j"))) ++ bandCols: _*)
@@ -140,6 +140,10 @@ object Dedup {
         posexplode(array((0 until bands).map(b => col(s"band_$b")): _*))
           .as(Seq("band_idx", "band_hash")))
   }
+
+  /** A band's bucket key from its signature members, in band order. */
+  private def bandHash(members: Seq[Column]): Column =
+    xxhash64(concat_ws("|", members: _*))
 
   /** The persistable signature index: one row per (doc, band) with the
     * full signature array and the band hash — exactly the table a 100 TB
@@ -185,65 +189,115 @@ object Dedup {
   /** Incremental near-dup detection: candidate pairs between a NEW batch
     * and an existing corpus, plus pairs inside the batch — without
     * re-hashing the corpus. `index` is the persisted [[signatureIndex]] of
-    * the historical docs; only `newDocs` pays shingle/signature cost.
-    *
-    * The index side is pruned FIRST by a broadcast semi-join on the
-    * batch's band keys (≤ bands × |batch| keys — tiny relative to any
-    * corpus): historical rows in buckets the batch never touches are
-    * dropped at the scan, so the candidate join shuffles O(matching
-    * buckets), not O(index). Output matches [[minhashCandidates]] over
-    * (corpus ∪ batch) restricted to pairs touching the batch — pinned by
-    * an equivalence test.
+    * the historical docs (built with the same k, numHashes and bands);
+    * only `newDocs` pays shingle/signature cost. Output matches
+    * [[minhashCandidates]] over (corpus ∪ batch) restricted to pairs
+    * touching the batch — pinned by an equivalence test. The probe is
+    * [[candidatesFromBuckets]].
     *
     * Ids must be disjoint between index and batch (same contract as any
     * union-based dedup). */
   def incrementalCandidates(
       index: DataFrame, newDocs: DataFrame, k: Int = 3, numHashes: Int = 8,
       bands: Int = 4, minEstJaccard: Double = 0.5,
-      oracleHashes: Boolean = false): DataFrame = {
-    // materialized up front: referenced by the key set, the join's left
-    // side, AND the union'd right side (same rationale as minhashCandidates)
-    val newBuckets = PipelineCaches.track(
-      bandedBuckets(newDocs, k, numHashes, bands, oracleHashes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    newBuckets.count()
-    candidatesFromBuckets(index, newBuckets, minEstJaccard)
+      oracleHashes: Boolean = false): DataFrame =
+    candidatesFromBuckets(index,
+      probeBatch(bandedBuckets(newDocs, k, numHashes, bands, oracleHashes)),
+      numHashes, bands, minEstJaccard)
+
+  /** A probe's batch side, materialized once by [[probeBatch]]: `rows`
+    * is checkpointed (so it can also join long-lived index state), and
+    * its row count and distinct doc ids were observed on the
+    * checkpoint's own job. */
+  private[graft] final case class ProbeBatch(
+      rows: DataFrame, nRows: Long, ids: Seq[Any])
+
+  /** Materialize a batch's [[signatureIndex]] or [[shingleIndex]] rows
+    * for the probes below in ONE job: the row count (the broadcast
+    * decision) and the doc ids (the disjointness guard) are
+    * `Dataset.observe` metrics of the checkpoint, not queries of their
+    * own. One id per batch doc is held on the driver. */
+  private[graft] def probeBatch(rows: DataFrame): ProbeBatch = {
+    val seen = org.apache.spark.sql.Observation()
+    val ckpt = rows.observe(seen, count(lit(1)).as("n"),
+      collect_set(col("doc_id")).as("ids")).localCheckpoint(true)
+    val m = seen.get
+    ProbeBatch(ckpt, m("n").asInstanceOf[Long],
+      m("ids").asInstanceOf[Seq[Any]])
   }
 
-  /** [[incrementalCandidates]] core for callers that already hold the
-    * batch's materialized [[signatureIndex]] rows (the streaming path
-    * computes them once and both probes and appends them). `newBuckets`
-    * MUST be materialized (persisted or checkpointed) — it is referenced
-    * several times below.
-    *
-    * Shape: TWO band-key joins — batch × pruned-index and batch × batch —
-    * rather than one join against (index ∪ batch). A union erases the
-    * right side's partitioning, so the single-join form re-shuffles the
-    * index; keeping the index side pure lets a (band_idx, band_hash)-
-    * bucketed index table (graft.scale.Bucketing) join with ZERO exchange
-    * on the index — only the batch shuffles, at any index size. */
-  private[graft] def candidatesFromBuckets(
-      index: DataFrame, newBuckets: DataFrame, minEstJaccard: Double)
-      : DataFrame = {
-    val batchKeys = newBuckets.select("band_idx", "band_hash").distinct()
-    val prunedIndex = index
-      .join(broadcast(batchKeys), Seq("band_idx", "band_hash"), "left_semi")
+  /** The two sides of a probe join on `keys`. The index is pruned
+    * first by a broadcast semi-join on the batch's keys, so only index
+    * rows sharing a key with the batch reach the join (the key column
+    * broadcasts as is: duplicates are harmless to a semi-join, and a
+    * distinct would cost a shuffle). The batch side is broadcast when
+    * it fits the session's autoBroadcastJoinThreshold, so the join has
+    * no exchange at all; otherwise the join is sort-merge, and only the
+    * pruned index rows shuffle (none with an index bucketed on `keys`).
+    * The batch is sized by Spark's rule for local relations, rows ×
+    * (schema default width + 8): a checkpoint carries no size the
+    * planner can read (its estimate is the source's default,
+    * exabytes), so unhinted it always plans as a sort-merge join, and
+    * AQE shuffles the index before switching to a broadcast. A
+    * threshold of -1 never broadcasts the batch. */
+  private def probeSides(index: DataFrame, batch: ProbeBatch,
+      batchSide: DataFrame, keys: Seq[String]): (DataFrame, DataFrame) = {
+    val pruned = index.join(broadcast(batch.rows.select(keys.map(col): _*)),
+      keys, "left_semi")
+    val limit =
+      batch.rows.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val fits = limit >= 0 &&
+      batch.nRows.toDouble * (batch.rows.schema.defaultSize + 8) <= limit
+    (pruned, if (fits) broadcast(batchSide) else batchSide)
+  }
 
+  /** [[incrementalCandidates]] core, shared with the streaming
+    * [[graft.streaming.StreamingPipeline.NearDupIndex]] and the
+    * paragraph probe: the batch's [[signatureIndex]] rows, built with
+    * `numHashes` and `bands` like the index, probe the index and each
+    * other.
+    *
+    * Scale shape per batch: TWO band-key joins — index × batch and
+    * batch × batch — rather than one join against (index ∪ batch), run
+    * as one query by the consumer's action. A union erases the index
+    * side's partitioning, so the single-join form re-shuffles the index;
+    * keeping it pure lets a (band_idx, band_hash)-bucketed index table
+    * (graft.scale.Bucketing) join with ZERO exchange on the index — only
+    * the batch shuffles, at any index size. Both joins build the same
+    * batch side, so its broadcast runs once. There is no distinct:
+    * a pair that shares several bands is emitted only at the lowest,
+    * tested on the two signatures the joined row already carries, so a
+    * broadcast probe has no exchange at all — three Spark jobs: the
+    * key broadcast of the index prune, the batch broadcast and the
+    * result (the first batch, with an empty index, has no prune). */
+  private[graft] def candidatesFromBuckets(
+      index: DataFrame, batch: ProbeBatch, numHashes: Int, bands: Int,
+      minEstJaccard: Double): DataFrame = {
+    val keys = Seq("band_idx", "band_hash")
     def sided(df: DataFrame, side: String): DataFrame = df.select(
       col("band_idx"), col("band_hash"),
       col("doc_id").as(s"id_$side"), col("sig").as(s"sig_$side"))
+    val (indexSide, l) =
+      probeSides(index, batch, sided(batch.rows, "l"), keys)
+    // band b < band_idx is shared iff its key, recomputed from the two
+    // signatures, agrees: the test the join applied at band_idx
+    val rows = numHashes / bands
+    def keyOf(sig: String, b: Int): Column = bandHash(
+      (b * rows until (b + 1) * rows).map(j => element_at(col(sig), j + 1)))
+    val sharesLowerBand = (0 until bands - 1)
+      .map(b => lit(b) < col("band_idx") &&
+        keyOf("sig_l", b) === keyOf("sig_r", b))
+      .foldLeft(lit(false))(_ || _)
+    def pairs(r: DataFrame): DataFrame =
+      sided(r, "r").join(l, keys).filter(!sharesLowerBand)
     val matches =
       graft.functions.MatchExpressions.arrayEqCount(col("sig_l"), col("sig_r"))
-    def pairs(r: DataFrame): DataFrame =
-      sided(newBuckets, "l").join(r, Seq("band_idx", "band_hash"))
-        .filter(col("id_l") =!= col("id_r"))
-        .select(
-          least(col("id_l"), col("id_r")).as("doc_a"),
-          greatest(col("id_l"), col("id_r")).as("doc_b"),
-          (matches.cast("double") / size(col("sig_l"))).as("est_jaccard"))
-    pairs(sided(prunedIndex, "r"))
-      .unionAll(pairs(sided(newBuckets, "r")))
-      .distinct()
+    pairs(indexSide).filter(col("id_l") =!= col("id_r"))
+      .unionAll(pairs(batch.rows).filter(col("id_l") < col("id_r")))
+      .select(
+        least(col("id_l"), col("id_r")).as("doc_a"),
+        greatest(col("id_l"), col("id_r")).as("doc_b"),
+        (matches.cast("double") / size(col("sig_l"))).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
   }
 
@@ -813,68 +867,71 @@ object Dedup {
     * pairs — without re-shingling a single historical document. EXACT,
     * not banded: a qualifying pair shares ≥ 1 shingle and one probe
     * side is always the (small) batch, so one shingle-keyed join
-    * against the batch-key-pruned index computes every batch-touching
-    * intersection completely (the broadcast semi-join prune is the
-    * [[incrementalCandidates]] discipline — a sh-bucketed index store
-    * joins with zero exchange). Output matches
-    * [[containmentJoinExact]] over (corpus ∪ batch) restricted to
-    * pairs touching the batch — the oracle proves it every round. Ids
-    * must be disjoint between index and batch — ENFORCED by a bounded
-    * limit-1 probe inside the shared primitive (round-15 advice), so
-    * an overlapping id fails loudly instead of double-counting. */
+    * against the index computes every batch-touching intersection
+    * completely (the index pruned by a broadcast semi-join on the
+    * batch's keys — the [[incrementalCandidates]] discipline; a
+    * sh-bucketed index store joins with zero exchange).
+    * Output matches [[containmentJoinExact]] over (corpus ∪ batch)
+    * restricted to pairs touching the batch — the oracle proves it
+    * every round. Ids must be disjoint between index and batch —
+    * ENFORCED by a one-job id filter inside the shared primitive
+    * (round-15 advice), so an overlapping id fails loudly instead of
+    * double-counting. */
   def incrementalContainmentPairs(index: DataFrame, newDocs: DataFrame,
       threshold: Double = 0.8, k: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val nb = PipelineCaches.track(shingleIndex(newDocs, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    nb.count()
-    containmentPairsFromShingles(index, nb, threshold)
+    containmentPairsFromShingles(index,
+      probeBatch(shingleIndex(newDocs, k)), threshold)
   }
 
   /** [[incrementalContainmentPairs]] core for callers already holding
-    * the batch's MATERIALIZED [[shingleIndex]] rows (the streaming
-    * path computes them once and both probes and appends them). */
+    * the batch's materialized [[shingleIndex]] rows (the streaming path
+    * computes them once and both probes and appends them). The
+    * disjointness guard runs here, eagerly; the pairs are a lazy frame
+    * over the two materialized inputs.
+    *
+    * Scale shape per batch: the guard is one id-filtered scan of the
+    * index; the consumer's action then runs the probe as one query, in
+    * which the index is pruned by a broadcast semi-join on the batch's
+    * keys, the two shingle-keyed joins (index × batch, batch × batch)
+    * build the same batch side (one broadcast when it fits), feed ONE
+    * pair aggregate (the query's only shuffle), and each scored pair
+    * row yields both orientations — four Spark jobs when the batch
+    * broadcasts, three on an empty index. */
   private[graft] def containmentPairsFromShingles(index: DataFrame,
-      nb: DataFrame, threshold: Double): DataFrame = {
+      batch: ProbeBatch, threshold: Double): DataFrame = {
     // loud disjointness guard (round-15 advice): an id on both sides
     // would silently emit duplicate/spurious pairs (the id_x =!= id_y
-    // filter treats its two copies as distinct docs). One bounded job:
-    // the batch's id set broadcasts, the index scan prunes to it,
-    // limit 1 stops at the first offender — the fail-loudly contract
-    // the rest of this file's require()s follow.
-    val overlap = index
-      .join(broadcast(nb.select("doc_id").distinct()),
-        Seq("doc_id"), "left_semi")
-      .select("doc_id").limit(1).collect()
+    // filter treats its two copies as distinct docs). One job: the
+    // batch's observed ids filter the index scan, and the collect is
+    // empty unless the guard fires (a limit-1 take would scan the
+    // partitions in rounds, one job per round).
+    val overlap = graft.scale.JobLabel(index.sparkSession, "contain:guard") {
+      index.filter(col("doc_id").isInCollection(batch.ids))
+        .select("doc_id").collect()
+    }
     require(overlap.isEmpty,
       s"batch doc ids must be disjoint from the index; found " +
         s"overlapping doc_id ${overlap.head.get(0)}")
-    val batchKeys = nb.select("sh").distinct()
-    val pruned = index.join(broadcast(batchKeys), Seq("sh"), "left_semi")
     def sided(df: DataFrame, side: String) = df.select(col("sh"),
       col("doc_id").as(s"id_$side"), col("n_sh").as(s"n_$side"))
-    def inters(x: DataFrame) = sided(x, "x")
-      .join(sided(nb, "y"), Seq("sh"))
-      .filter(col("id_x") =!= col("id_y"))
-      .groupBy("id_x", "id_y", "n_x", "n_y")
-      .agg(count(lit(1)).as("_i"))
+    val (indexSide, y) =
+      probeSides(index, batch, sided(batch.rows, "y"), Seq("sh"))
+    def inters(x: DataFrame) = sided(x, "x").join(y, Seq("sh"))
     // index×batch pairs appear once; in-batch pairs restricted to
     // id_x < id_y so each unordered pair is scored once — BOTH
-    // orientations are then emitted from the one scored row.
-    // Persisted + materialized (r17 optimization round): the two
-    // orientation projections below each referenced the lazy pair
-    // relation, re-running both intersection joins per reference.
-    // One row per batch-touching co-shingle pair — batch-bounded.
-    val pairs = PipelineCaches.track(inters(pruned)
-      .unionAll(inters(nb).filter(col("id_x") < col("id_y")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    pairs.count()
-    pairs.select(col("id_x").as("doc_a"), col("id_y").as("doc_b"),
-        (col("_i").cast("double") / col("n_x")).as("containment_a"))
-      .unionAll(pairs.select(col("id_y").as("doc_a"),
-        col("id_x").as("doc_b"),
-        (col("_i").cast("double") / col("n_y")).as("containment_a")))
+    // orientations are then emitted from the one scored row. One row
+    // per batch-touching co-shingle pair — batch-bounded.
+    def orient(a: String, b: String, n: String): Column = struct(
+      col(a).as("doc_a"), col(b).as("doc_b"),
+      (col("_i").cast("double") / col(n)).as("containment_a"))
+    inters(indexSide).filter(col("id_x") =!= col("id_y"))
+      .unionAll(inters(batch.rows).filter(col("id_x") < col("id_y")))
+      .groupBy("id_x", "id_y", "n_x", "n_y")
+      .agg(count(lit(1)).as("_i"))
+      .select(inline(array(orient("id_x", "id_y", "n_x"),
+        orient("id_y", "id_x", "n_y"))))
       .filter(col("containment_a") >= threshold)
   }
 

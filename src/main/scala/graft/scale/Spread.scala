@@ -31,11 +31,18 @@ object Spread {
     * and for frames WITHOUT the key column (several operators accept
     * schema-minimal inputs, e.g. the per-lang fertility card's
     * (lang, text) corpus — spreading is an optimization, never a new
-    * schema requirement). */
+    * schema requirement).
+    *
+    * Reading the partition count plans `df`, and is free only when that
+    * plan has no exchange: with one, adaptive execution runs the
+    * exchange's query stages to size the partitions — one Spark job for
+    * an aggregate input and one for a broadcast semi-join input
+    * (measured at `local[4]`). */
   def byKey(df: DataFrame, key: String): DataFrame = {
     if (df.isStreaming || !df.columns.contains(key)) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
-    // physical-plan partition count: planning only, no job
+    // the physical plan's partition count (a job when df's plan has an
+    // exchange, see above)
     if (df.rdd.getNumPartitions < target) df.repartition(target, col(key))
     else df
   }

@@ -16,8 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      survives until an operator reclaims it;
   *   3. the live store moves aside, the replacement renames in, and the
   *      backup is deleted only after the swapped-in store is verified
-  *      readable at the live path. Every rename result is checked; a
-  *      failed swap-in restores the original.
+  *      at the live path: readable, with the row count verified at the
+  *      side path. Every rename result is checked; a failed swap-in or
+  *      a count mismatch restores the original.
   *
   * A crash between the two renames (the unavoidable non-atomic window of
   * directory renames on HDFS-style filesystems) leaves the store intact
@@ -30,8 +31,14 @@ object StoreMaint {
 
   /** Replace the store at `path` with `replacement`, written with
     * `targetFiles` output files (0 = keep the frame's partitioning).
-    * Returns the replacement's row count (counted during the pre-swap
-    * verification read — no extra pass). */
+    * Returns the replacement's row count, read back from the written
+    * files before the swap. The same read-back runs on the live path
+    * after the swap; if it finds a different count, the original store
+    * is renamed back in, the swapped-in files are parked at the
+    * `_compacting` side path, and the swap fails. Its jobs are labelled:
+    * the write (`store:write`, one job for a replacement with no
+    * exchange in its plan) and the two one-job read-backs
+    * (`store:verify`). */
   def replaceStore(
       spark: SparkSession, path: String, replacement: DataFrame,
       targetFiles: Int = 0): Long = {
@@ -39,10 +46,10 @@ object StoreMaint {
     val tmp = path + "_compacting"
     val out = if (targetFiles > 0) replacement.coalesce(targetFiles)
               else replacement
-    out.write.mode("overwrite").parquet(tmp)
+    JobLabel(spark, "store:write")(out.write.mode("overwrite").parquet(tmp))
     // verify the replacement reads back BEFORE touching the live store —
     // a corrupt write must fail here, while the original is still live
-    val kept = spark.read.parquet(tmp).count()
+    val kept = readBack(spark, tmp, out.schema)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tmp), conf)
     val dst = new Path(path)
@@ -65,16 +72,42 @@ object StoreMaint {
       fs.rename(old, dst) // restore the original store
       throw new java.io.IOException(s"cannot swap $tmp into $dst")
     }
-    // keep the backup until the live path is verified readable; reclaim
-    // via rename-then-delete so a crash mid-delete can never leave a
-    // half-deleted directory under a *_old* name that recover() would
-    // consider (the _reclaim name is invisible to recovery)
-    spark.read.parquet(path).count()
+    // keep the backup until the live path is verified: it must read the
+    // rows just verified at the side path, or the original goes back in
+    val live = readBack(spark, path, out.schema)
+    if (live != kept) {
+      if (!fs.rename(dst, new Path(tmp)) || !fs.rename(old, dst))
+        throw new java.io.IOException(
+          s"swapped-in store at $dst read $live rows, expected $kept, " +
+            s"and the original could not be restored from $old")
+      throw new java.io.IOException(
+        s"swapped-in store at $dst read $live rows, expected $kept; " +
+          s"original restored, replacement parked at $tmp")
+    }
+    // reclaim via rename-then-delete so a crash mid-delete can never
+    // leave a half-deleted directory under a *_old* name that recover()
+    // would consider (the _reclaim name is invisible to recovery)
     val reclaim = new Path(path + "_reclaim")
     if (fs.rename(old, reclaim)) fs.delete(reclaim, true)
     else fs.delete(old, true)
     kept
   }
+
+  /** Rows of the parquet store at `path`, read with the schema it was
+    * written with (no inference job): the count is a `Dataset.observe`
+    * metric of a scan feeding the noop sink, one job instead of an
+    * aggregate's two. Projecting no column keeps it a row-count read,
+    * as `count()` is. */
+  private def readBack(spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType): Long =
+    JobLabel(spark, "store:verify") {
+      import org.apache.spark.sql.functions.{count, lit}
+      val rows = org.apache.spark.sql.Observation()
+      spark.read.schema(schema).parquet(path).select()
+        .observe(rows, count(lit(1)).as("n"))
+        .write.format("noop").mode("overwrite").save()
+      rows.get("n").asInstanceOf[Long]
+    }
 
   /** The one-rename recovery the swap discipline promises: if a crash in
     * [[replaceStore]]'s non-atomic window left no live store, rename the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
 
 import graft.dml.events.Event
 import graft.llm.Dedup
+import graft.scale.JobLabel
 
 /** Streaming forms of the pipeline operators whose batch versions live in
   * the catalog (exact dedup, sessionization): `readStream → transform →
@@ -69,14 +70,24 @@ object StreamingPipeline {
 
   /** Accumulating MinHash signature index for continuous near-dup
     * detection: each arriving batch is hashed ONCE, probed against
-    * everything seen so far ([[Dedup.candidatesFromBuckets]] — the index
-    * side pruned by the batch's band keys), then appended. State is the
+    * everything seen so far ([[Dedup.candidatesFromBuckets]] — the
+    * index pruned by the batch's band keys, the batch's band rows
+    * broadcast when they fit), then appended. State is the
     * signature table (bytes per doc-band, never the text); lineage is
     * truncated by eager localCheckpoint on every batch and the union chain
     * is re-checkpointed every `compactEvery` batches so the plan stays
     * constant-size over an unbounded stream. On a real cluster the index
     * would live in a storage table (append + bucketed by band_hash); this
-    * in-memory form is the same algorithm with executor-resident blocks. */
+    * in-memory form is the same algorithm with executor-resident blocks.
+    *
+    * Scale shape per batch, four Spark jobs when the batch broadcasts
+    * (three for the first): the signature pass, checkpointed with its
+    * row count observed on the same job; then the consumer's action
+    * runs the probe as one query — the batch's band keys broadcast to
+    * prune the index scan, the batch's band rows broadcast once for both
+    * band-key joins (index×batch, in-batch), and each candidate pair
+    * emitted at the lowest band it shares, so there is no distinct and
+    * no shuffle. The index side is scanned once and never exchanged. */
   final class NearDupIndex(
       k: Int = 3, numHashes: Int = 8, bands: Int = 4,
       minEstJaccard: Double = 0.5, compactEvery: Int = 16) {
@@ -135,16 +146,21 @@ object StreamingPipeline {
 
     /** Retire documents from the LIVE state — a takedown arriving
       * mid-stream ([[graft.llm.Dedup.retireFromIndex]] pointed at the
-      * executor-resident band rows; per-doc rows, so a plain anti-join
-      * with no re-election). Eagerly checkpointed; fails loudly on an
-      * empty index (the ids are not remembered — a silent drop would
-      * let later-seen twins of retired docs go unflagged forever). */
+      * executor-resident band rows; per-doc rows, so a plain id filter
+      * with no re-election). No Spark job: the filter joins the state's
+      * plan, so every later probe and snapshot skips the retired rows
+      * as it scans, and the next compaction (every `compactEvery`
+      * batches) drops them from the checkpointed blocks. An eager
+      * checkpoint here would copy the whole index per takedown and
+      * leave the old copy cached until garbage collection. Fails loudly
+      * on an empty index (the ids are not remembered — a silent drop
+      * would let later-seen twins of retired docs go unflagged
+      * forever). */
     def retire(retiredIds: Seq[Long]): Unit = synchronized {
       require(index.isDefined,
         "retire() needs state: append a batch first — retiring before " +
           "any state exists would silently drop the takedown")
-      index = index.map(i =>
-        Dedup.retireFromIndex(i, retiredIds).localCheckpoint(true))
+      index = index.map(Dedup.retireFromIndex(_, retiredIds))
     }
 
     /** Hash the batch once, return candidate pairs vs (index ∪ batch),
@@ -155,17 +171,18 @@ object StreamingPipeline {
       * appending twice — see [[ReplayGuard]]. */
     def probeAndAppend(batchDocs: DataFrame, batchId: Long = -1L)
         : DataFrame = synchronized {
-      val nb = Dedup.signatureIndex(batchDocs, k, numHashes, bands)
-        .localCheckpoint(true)
+      val nb = JobLabel(batchDocs.sparkSession, "near:signatures")(
+        Dedup.probeBatch(
+          Dedup.signatureIndex(batchDocs, k, numHashes, bands)))
+      def probe(idx: Option[DataFrame]) = Dedup.candidatesFromBuckets(
+        idx.getOrElse(nb.rows.limit(0)), nb, numHashes, bands,
+        minEstJaccard)
       guard.replayView(batchId) match {
-        case Some(pre) =>
-          Dedup.candidatesFromBuckets(
-            pre.getOrElse(nb.limit(0)), nb, minEstJaccard)
+        case Some(pre) => probe(pre)
         case None =>
-          val cands = Dedup.candidatesFromBuckets(
-            index.getOrElse(nb.limit(0)), nb, minEstJaccard)
+          val cands = probe(index)
           guard.committed(batchId, index)
-          index = Some(index.map(_.unionAll(nb)).getOrElse(nb))
+          index = Some(index.map(_.unionAll(nb.rows)).getOrElse(nb.rows))
           batches += 1
           if (batches % compactEvery == 0)
             index = index.map(_.localCheckpoint(true))
@@ -231,9 +248,8 @@ object StreamingPipeline {
       index.get
     }
 
-    /** Retire vectors from the LIVE state ([[NearDupIndex.retire]]'s
-      * contract keyed by vec_id —
-      * [[graft.llm.Similarity.retireFromRpIndex]]'s anti-join shape):
+    /** Retire vectors from the LIVE state — a takedown keyed by vec_id
+      * ([[graft.llm.Similarity.retireFromRpIndex]]'s anti-join shape):
       * eager checkpoint, loud on empty state. */
     def retire(retiredIds: Seq[Long]): Unit = synchronized {
       require(index.isDefined,
@@ -295,21 +311,27 @@ object StreamingPipeline {
     *
     * EXACT, not banded: a containment-≥t pair shares at least one
     * shingle, and one side of every probe join is the (small) batch,
-    * so one shingle-keyed join against the batch-key-pruned index
-    * computes every batch-touching intersection COMPLETELY — the
-    * drained stream over a fully-replayed corpus therefore equals the
-    * batch [[graft.llm.Dedup.containmentJoinExact]] recompute, which is
-    * what the oracle entry hashes. (The batch join's one-sided prefix
+    * so one shingle-keyed join against the index computes every
+    * batch-touching intersection COMPLETELY — the drained stream over
+    * a fully-replayed corpus therefore equals the batch
+    * [[graft.llm.Dedup.containmentJoinExact]] recompute, which is what
+    * the oracle entry hashes. (The batch join's one-sided prefix
     * filter is a candidate-pruning strategy for the self-join; here the
     * probe join IS the intersection counter, so both sides need their
-    * full shingle sets and the pruning lever is the broadcast semi-join
-    * on the batch's keys instead — the [[NearDupIndex]] shape, zero
-    * index exchange with a sh-bucketed store.)
+    * full shingle sets and the pruning lever is the batch's keys
+    * instead — the [[NearDupIndex]] shape, zero index exchange with a
+    * sh-bucketed store.)
     *
-    * Scale shape per batch: one batch shingle pass, a broadcast
-    * semi-join pruning the index scan to buckets the batch touches,
-    * one shingle-keyed equi-join (index×batch) + one in-batch
-    * self-join, then pair-bounded aggregation. Skew guard: a shingle
+    * Scale shape per batch, six Spark jobs when the batch broadcasts
+    * (four for the first, with no index to guard or prune): the
+    * shingle pass, checkpointed with its row count and doc ids
+    * observed on the same job; the disjointness guard, one id-filtered
+    * index scan; then the consumer's action runs the probe as one
+    * query — the index pruned by a broadcast semi-join on the batch's
+    * keys, the batch side broadcast once (past the broadcast threshold,
+    * sort-merge joined instead), the index×batch and in-batch shingle
+    * joins feeding ONE pair-bounded aggregate (one shuffle), and both
+    * orientations read from each scored row. Skew guard: a shingle
     * shared by every template page makes the probe join hot exactly
     * like a hot band bucket — cap it upstream with the exact-dedup
     * tier, as [[graft.llm.Dedup.minhashCandidates]] documents. */
@@ -320,18 +342,15 @@ object StreamingPipeline {
     private var index: Option[DataFrame] = None
     private var batches = 0
     private val guard = new ReplayGuard[DataFrame]
-    private var prevScope: Option[graft.llm.PipelineCaches.Scope] = None
 
     /** Number of (doc, shingle) rows currently indexed. */
     def size: Long = synchronized { index.map(_.count()).getOrElse(0L) }
 
-    /** Reclaim the LAST batch's probe caches — call when the stream
-      * terminates (each batch's caches are otherwise reclaimed by the
-      * NEXT probeAndAppend, the deferred-scope discipline the
-      * [[graft.llm.PipelineCaches.scoped]] doc describes). Idempotent. */
-    def close(): Unit = synchronized {
-      prevScope.foreach(_.clear()); prevScope = None
-    }
+    /** End-of-stream release, a no-op here: a probe holds no caches
+      * (its output reads only the checkpointed state and batch). Kept
+      * so a stream's owner releases every index the same way
+      * ([[ParagraphDedupIndex.close]] does reclaim). Idempotent. */
+    def close(): Unit = ()
 
     /** Seed the accumulating state with a persisted
       * [[graft.llm.Dedup.shingleIndex]] store (doc_id, sh, n_sh) —
@@ -361,14 +380,13 @@ object StreamingPipeline {
     }
 
     /** Retire documents from the LIVE state ([[NearDupIndex.retire]]'s
-      * contract over the shingle rows): anti-join, eager checkpoint,
-      * loud on empty state. */
+      * contract over the shingle rows): an id filter on the state with
+      * no job of its own, loud on empty state. */
     def retire(retiredIds: Seq[Long]): Unit = synchronized {
       require(index.isDefined,
         "retire() needs state: append a batch first — retiring before " +
           "any state exists would silently drop the takedown")
-      index = index.map(i =>
-        Dedup.retireFromIndex(i, retiredIds).localCheckpoint(true))
+      index = index.map(Dedup.retireFromIndex(_, retiredIds))
     }
 
     /** Shingle the batch once ([[Dedup.shingleIndex]] — the shared
@@ -377,54 +395,27 @@ object StreamingPipeline {
       * batch via the shared probe primitive
       * ([[Dedup.containmentPairsFromShingles]] — the streaming path IS
       * the batch incremental path pointed at executor-resident state),
-      * then append the batch. Thread-safe; the probe runs EAGERLY
-      * inside this call (the primitive materializes its pair relation
-      * and runs the disjointness guard), and the returned frame reads
-      * the materialized pair cache until the NEXT probeAndAppend
-      * reclaims it — consume each batch's pairs before the next batch
-      * (foreachBatch does by construction). Consuming it later is
-      * still CORRECT, just slower: every lineage input (the index
-      * state, the batch checkpoint) is checkpoint-backed, so the frame
-      * recomputes instead of reading the reclaimed cache. A
-      * long-running stream holds at most ONE batch's cache entries
-      * (the deferred-scope discipline [[graft.llm.PipelineCaches]]
-      * documents; call [[close]] at stream end to reclaim the last) —
-      * previously each batch paid an extra localCheckpoint job to make
-      * the output cache-independent, a per-micro-batch copy of an
-      * already-materialized pair relation (r18 optimization round,
-      * guide §1.2). A replayed batchId re-emits the original pairs
-      * without appending twice ([[ReplayGuard]] — a double-append
-      * would double every later intersection count against this
-      * batch's docs). */
+      * then append the batch. Thread-safe. The disjointness guard runs
+      * EAGERLY inside this call, before the append; the returned frame
+      * is lazy and reads only checkpoint-backed inputs (the index state
+      * and the batch checkpoint), so its consumer's action runs the
+      * probe, and it stays valid after the index advances past this
+      * batch. A replayed batchId re-emits the original pairs without
+      * appending twice ([[ReplayGuard]] — a double-append would double
+      * every later intersection count against this batch's docs). */
     def probeAndAppend(batchDocs: DataFrame, batchId: Long = -1L)
         : DataFrame = synchronized {
-      // reclaim the PREVIOUS batch's probe caches first: its output has
-      // been consumed (the foreachBatch contract), so the scope is dead
-      // weight — and clearing here instead of before returning is what
-      // lets the returned frame read the pair cache it was built over
-      prevScope.foreach(_.clear()); prevScope = None
-      val nb = Dedup.shingleIndex(batchDocs.select("doc_id", "text"), k)
-        .localCheckpoint(true)
-      // one probe inside a cache scope: the primitive persists its
-      // pair relation per call, and without a scope each micro-batch
-      // leaked one MEMORY_AND_DISK entry into the global scope until a
-      // blanket PipelineCaches.clear() (r17 advice). The scope is held
-      // until the next batch (or close()) so the output stays
-      // cache-served for its consumer.
-      def probe(idx: DataFrame): DataFrame = {
-        val (out, scope) = graft.llm.PipelineCaches.scoped {
-          Dedup.containmentPairsFromShingles(idx, nb, threshold)
-        }
-        prevScope = Some(scope)
-        out
-      }
+      val nb = JobLabel(batchDocs.sparkSession, "contain:shingles")(
+        Dedup.probeBatch(
+          Dedup.shingleIndex(batchDocs.select("doc_id", "text"), k)))
+      def probe(idx: Option[DataFrame]) = Dedup.containmentPairsFromShingles(
+        idx.getOrElse(nb.rows.limit(0)), nb, threshold)
       guard.replayView(batchId) match {
-        case Some(pre) =>
-          probe(pre.getOrElse(nb.limit(0)))
+        case Some(pre) => probe(pre)
         case None =>
-          val out = probe(index.getOrElse(nb.limit(0)))
+          val out = probe(index)
           guard.committed(batchId, index)
-          index = Some(index.map(_.unionAll(nb)).getOrElse(nb))
+          index = Some(index.map(_.unionAll(nb.rows)).getOrElse(nb.rows))
           batches += 1
           if (batches % compactEvery == 0)
             index = index.map(_.localCheckpoint(true))
@@ -437,7 +428,8 @@ object StreamingPipeline {
     * text): foreachBatch probes-and-appends the [[ContainmentIndex]]
     * and hands each batch's ordered ≥-threshold pairs to `onPairs` —
     * the streaming twin of `q_containment_join_exact`, same contract
-    * as [[nearDupStream]]. */
+    * as [[nearDupStream]]. Job labels: `contain:shingles`,
+    * `contain:guard` and `contain:probe` (the sink's). */
   def containmentStream(
       docs: DataFrame, index: ContainmentIndex,
       onPairs: (Long, DataFrame) => Unit,
@@ -449,8 +441,10 @@ object StreamingPipeline {
       .queryName("containment_stream")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onPairs(batchId,
-          index.probeAndAppend(batch.select("doc_id", "text"), batchId))
+        val pairs =
+          index.probeAndAppend(batch.select("doc_id", "text"), batchId)
+        // the sink's action is what runs the lazy probe
+        JobLabel(batch.sparkSession, "contain:probe")(onPairs(batchId, pairs))
         ()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
@@ -705,7 +699,9 @@ object StreamingPipeline {
   /** Continuous near-dup detection over a document stream (doc_id, text):
     * foreachBatch probes-and-appends the [[NearDupIndex]] and hands the
     * batch's candidate pairs (doc_a, doc_b, est_jaccard — at least one
-    * side in the batch) to `onCandidates`. The only state Spark itself
+    * side in the batch) to `onCandidates`, whose jobs run labelled
+    * `near:probe` (the index's own step is `near:signatures`). The only
+    * state Spark itself
     * holds is the streaming offset log (durable under `checkpointDir`);
     * the index is the operator's own bounded signature table. Pass
     * `Trigger.AvailableNow()` for drain-and-stop runs (tests, backfills);
@@ -721,8 +717,11 @@ object StreamingPipeline {
       .queryName("near_dup_stream")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onCandidates(batchId,
-          index.probeAndAppend(batch.select("doc_id", "text"), batchId))
+        val cands =
+          index.probeAndAppend(batch.select("doc_id", "text"), batchId)
+        // the sink's action is what runs the lazy probe
+        JobLabel(batch.sparkSession, "near:probe")(
+          onCandidates(batchId, cands))
         ()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()

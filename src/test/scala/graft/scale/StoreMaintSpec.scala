@@ -37,6 +37,32 @@ class StoreMaintSpec extends AnyFunSuite {
       "backup must be reclaimed after the live path verifies")
   }
 
+  test("a swapped-in store that reads back a different row count is " +
+    "swapped out again: the original is live and the swap fails") {
+    val s = spark
+    import s.implicits._
+    val conf = s.sparkContext.hadoopConfiguration
+    conf.set("fs.lossy.impl", classOf[LossyRenameFs].getName)
+    conf.setBoolean("fs.lossy.impl.disable.cache", true)
+    val dir = Files.createTempDirectory("graft-storemaint-lossy").toString
+    val path = s"lossy://$dir/store"
+    (1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+      .write.parquet(path)
+    val e = intercept[java.io.IOException] {
+      StoreMaint.replaceStore(s, path,
+        s.read.parquet(path).filter(col("id") <= 6))
+    }
+    assert(e.getMessage.contains("expected 6") &&
+      e.getMessage.contains("original restored"), e.getMessage)
+    assert(s.read.parquet(path).as[(Long, String)].collect().map(_._1)
+      .sorted.toSeq == (1L to 10L),
+      "the original store must be live again, whole")
+    assert(!new java.io.File(s"$dir/store_old").exists,
+      "the backup must have been renamed back in")
+    assert(new java.io.File(s"$dir/store_compacting").exists,
+      "the short replacement is parked at the side path, not deleted")
+  }
+
   test("a pre-existing crash backup is never deleted by the next swap") {
     val s = spark
     import s.implicits._
@@ -326,5 +352,24 @@ class StoreMaintSpec extends AnyFunSuite {
     for (rel <- Seq("exact", "bands", "shingles", "members"))
       assert(!new java.io.File(s"$dir/${rel}_old").exists,
         s"$rel backup must be reclaimed")
+  }
+}
+
+/** A local filesystem under the `lossy` scheme whose rename of a
+  * `*_compacting` directory (a replacement swapping in) loses its
+  * largest parquet file on the way, so the live store reads back fewer
+  * rows than were verified at the side path. */
+class LossyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+
+  override def getUri: java.net.URI = java.net.URI.create("lossy:///")
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    val renamed = super.rename(src, dst)
+    if (renamed && src.getName.endsWith("_compacting"))
+      // the largest part file: empty partitions write row-less files
+      listStatus(dst).filter(_.getPath.getName.endsWith(".parquet"))
+        .sortBy(-_.getLen).headOption.foreach(f => delete(f.getPath, false))
+    renamed
   }
 }
