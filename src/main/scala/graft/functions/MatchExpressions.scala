@@ -155,6 +155,75 @@ case class ArrayEqCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Number of distinct non-null values two arrays have in common —
+  * `size(array_intersect(a, b))` for arrays without NULLs, the
+  * shingle-set intersection |A∩B| of the exact rescorers, over the
+  * k-word strings or their binary md5 keys. One hash set over the
+  * shorter array, so O(|a| + |b|) for both: `array_intersect` falls
+  * back to pairwise comparison on binary elements, O(|a|·|b|). Binary
+  * elements compare by content. Parity with `array_intersect` is pinned
+  * in `CurationIdentitySpec`. */
+case class SetIntersectSize(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def prettyName: String = "set_intersect_size"
+  override def dataType: DataType = IntegerType
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(l, _), ArrayType(r, _))
+          if l == r && (l == StringType || l == BinaryType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires two arrays of the same string or binary " +
+          s"element type, got ${l.sql} and ${r.sql}")
+    }
+
+  @transient private lazy val binary =
+    left.dataType.asInstanceOf[ArrayType].elementType == BinaryType
+
+  /** A hashable, content-compared key for element `i`. */
+  private def key(x: ArrayData, i: Int): AnyRef =
+    if (binary) java.nio.ByteBuffer.wrap(x.getBinary(i))
+    else x.getUTF8String(i)
+
+  /** public: called from generated code. */
+  def intersectSize(x: ArrayData, y: ArrayData): Int = {
+    val (small, large) =
+      if (x.numElements() <= y.numElements()) (x, y) else (y, x)
+    val set = new java.util.HashSet[AnyRef](small.numElements() * 2)
+    var i = 0
+    while (i < small.numElements()) {
+      if (!small.isNullAt(i)) set.add(key(small, i))
+      i += 1
+    }
+    var c = 0
+    i = 0
+    while (i < large.numElements()) {
+      // remove: a value repeated in `large` counts once
+      if (!large.isNullAt(i) && set.remove(key(large, i))) c += 1
+      i += 1
+    }
+    c
+  }
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    intersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("setIntersectSize", this,
+      classOf[SetIntersectSize].getName)
+    nullSafeCodeGen(ctx, ev,
+      (a, b) => s"${ev.value} = $ref.intersectSize($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SetIntersectSize =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Character Hamming distance over the common prefix length of two
   * strings — the simhash-bitstring rescore
   * `size(filter(zip_with(split(a, ''), split(b, ''), (x, y) -> x != y),
@@ -391,6 +460,10 @@ object MatchExpressions {
 
   def arrayEqCount(a: Column, b: Column): Column =
     ColumnBridge.column(ArrayEqCount(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  def setIntersectSize(a: Column, b: Column): Column =
+    ColumnBridge.column(SetIntersectSize(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   def stringHamming(a: Column, b: Column): Column =

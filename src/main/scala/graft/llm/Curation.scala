@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -1711,35 +1711,36 @@ object Curation {
     val chunks = PipelineCaches.track(
       chunkRelation(docs, chunkSize, maxChunksPerDoc)
         .persist(StorageLevel.MEMORY_AND_DISK))
-    chunkKeyGuards(chunks, maxChunksPerDoc, "paragraphDedup")
-    // stage 1: exact cliques -> min-key representative (min over
-    // identical strings IS the string, so the text rides the same agg)
-    val groups = chunkGroups(chunks)
+    // stage 1: exact cliques -> min-key representative, persisted: the
+    // banded candidates, the rescore and the reassembly all read it.
+    // ONE write to the noop sink (no count aggregate on top) materializes
+    // it, fills the chunk cache on the way, and observes the key guards'
+    // bounds on the chunk rows, so both guards throw before anything
+    // else runs.
+    val seen = Observation()
+    val groups = PipelineCaches.track(
+      chunkGroups(chunks.observe(seen, chunkKeyBounds.head,
+        chunkKeyBounds.tail: _*)).persist(StorageLevel.MEMORY_AND_DISK))
+    graft.scale.JobLabel(docs.sparkSession, "para:chunks") {
+      groups.write.format("noop").mode("overwrite").save()
+    }
+    checkChunkKeys(seen.get, maxChunksPerDoc, "paragraphDedup")
     val reps = groups.select(col("rep_key").as("doc_id"), col("text"))
-    // stage 2: banded near-dup + exact rescore over REPRESENTATIVES.
-    // cands is consumed twice by the rescore and repPairs twice by the
-    // threat-minimum union below; each lazy reference re-ran the band
-    // join / the whole rescore (r17 optimization round, plan-verified
-    // duplicate subtrees). Both are pair-bounded caches.
-    val cands = PipelineCaches.track(
-      Dedup.minhashCandidates(reps, k, numHashes, bands,
-        minEstJaccard = minEstJaccard, oracleHashes = oracleHashes,
-        maxBucketSize = maxBucketSize)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    cands.count()
-    val repPairs = PipelineCaches.track(
-      Dedup.jaccardRescore(reps, cands, k)
-        .filter(col("jaccard") >= threshold)
-        .select("doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    repPairs.count()
-    // per group, the smallest qualifying PARTNER representative (both
-    // orientations: a lower partner min threatens either side's members)
-    val thr = repPairs
-      .select(col("doc_b").as("rep_key"), col("doc_a").as("_p"))
-      .unionAll(repPairs
-        .select(col("doc_a").as("rep_key"), col("doc_b").as("_p")))
-      .groupBy("rep_key").agg(min("_p").as("_thr"))
+    // stage 2: banded near-dup + exact rescore over REPRESENTATIVES,
+    // lazy: the rescore reads the candidates once and the threat minimum
+    // below reads the qualifying pairs once, so both run inside the
+    // caller's action (only the band buckets are materialized, inside
+    // minhashCandidates)
+    val repPairs = Dedup.jaccardRescore(reps,
+        Dedup.minhashCandidates(reps, k, numHashes, bands,
+          minEstJaccard = minEstJaccard, oracleHashes = oracleHashes,
+          maxBucketSize = maxBucketSize), k)
+      .filter(col("jaccard") >= threshold)
+    // per group, the smallest qualifying PARTNER representative. Pairs
+    // are value-ordered (doc_a < doc_b), so only doc_b's group has a
+    // lower partner; a higher partner never lowers least(rep_key, _thr)
+    val thr = repPairs.groupBy(col("doc_b").as("rep_key"))
+      .agg(min("doc_a").as("_thr"))
     chunks
       .join(groups.select("_h", "rep_key"), Seq("_h"))
       .join(thr, Seq("rep_key"), "left")
@@ -1755,41 +1756,60 @@ object Curation {
 
   /** The shared chunk base of the paragraph-dedup family: fixed
     * non-overlapping chunks with the Long composite key and the exact
-    * text hash. Callers persist + run [[chunkKeyGuards]]. */
+    * text hash. Callers persist it and check its keys, through
+    * [[chunkKeyGuards]] or [[chunkKeyBounds]] observed on their first
+    * action over it. */
   private[graft] def chunkRelation(docs: DataFrame, chunkSize: Int,
       maxChunksPerDoc: Long): DataFrame =
-    // Spread first (r18, guide §2.5): the chunk explode + md5 is the
-    // paragraph family's per-row CPU cost and otherwise inherits the
-    // scan's 1-2 small-file splits; no-op whenever the input already has
-    // >= cores partitions (always true of a 100 TB scan)
+    // not spread: the chunk explode + md5 runs on the scan's own
+    // partitions. Repartitioning the docs first measured slower (r18,
+    // reverted) — per Spread's rule, spreading pays only before
+    // hash-heavy per-row work, and chunking is light next to the
+    // shingle and signature passes that spread their own inputs.
     TextOps.chunkDocs(docs, chunkSize, stride = chunkSize)
       .withColumn("chunk_key",
         col("doc_id") * maxChunksPerDoc + col("chunk_idx"))
       .withColumn("_h", md5(col("chunk_text")))
 
-  /** Materialize + BOTH key-collision guards in one single action:
-    * chunk_idx must fit under maxChunksPerDoc and doc_id must survive
-    * the multiplication PLUS the chunk_idx addend (hash-derived 63-bit
-    * ids would silently wrap and invert keep-one ordering corpus-wide).
-    * Bounds via max AND min — abs() is a trap here (abs(Long.MinValue)
-    * stays negative and would slip past a max) — and the cast keeps
-    * narrower doc_id types (int corpora) from failing the Long read. */
+  /** BOTH key-collision guards in one single action: chunk_idx must
+    * fit under maxChunksPerDoc and doc_id must survive the
+    * multiplication PLUS the chunk_idx addend (hash-derived 63-bit ids
+    * would silently wrap and invert keep-one ordering corpus-wide). The
+    * action also fills a persisted `chunks`' cache. */
   private[graft] def chunkKeyGuards(chunks: DataFrame,
       maxChunksPerDoc: Long, op: String): Unit = {
-    val mx = chunks.agg(max("chunk_idx"),
-      max(col("doc_id").cast("long")),
-      min(col("doc_id").cast("long"))).collect()(0)
-    require(mx.isNullAt(0) || mx.getLong(0) < maxChunksPerDoc,
+    val mx = graft.scale.JobLabel(chunks.sparkSession, "para:guards") {
+      chunks.agg(chunkKeyBounds.head, chunkKeyBounds.tail: _*).collect()(0)
+    }
+    checkChunkKeys(mx.getValuesMap[Any](mx.schema.fieldNames.toSeq),
+      maxChunksPerDoc, op)
+  }
+
+  /** The guards' bounds over chunk rows, as aggregate columns: max
+    * chunk_idx and the doc_id range. Bounds via max AND min — abs() is
+    * a trap here (abs(Long.MinValue) stays negative and would slip past
+    * a max) — and the cast keeps narrower doc_id types (int corpora)
+    * from failing the Long read. */
+  private val chunkKeyBounds: Seq[Column] = Seq(
+    max("chunk_idx").as("_max_idx"),
+    max(col("doc_id").cast("long")).as("_max_id"),
+    min(col("doc_id").cast("long")).as("_min_id"))
+
+  /** Throws unless the [[chunkKeyBounds]] (NULL on no chunks) keep
+    * chunk_key = doc_id * maxChunksPerDoc + chunk_idx collision-free. */
+  private def checkChunkKeys(b: collection.Map[String, Any],
+      maxChunksPerDoc: Long, op: String): Unit = {
+    def get(k: String): Option[Long] =
+      Option(b(k)).map(_.asInstanceOf[Number].longValue)
+    require(get("_max_idx").forall(_ < maxChunksPerDoc),
       s"$op: a doc has > $maxChunksPerDoc chunks; raise " +
         "maxChunksPerDoc so chunk keys stay collision-free")
     val idBound = (Long.MaxValue - (maxChunksPerDoc - 1)) / maxChunksPerDoc
-    require(mx.isNullAt(1) ||
-      (mx.getLong(1) <= idBound && mx.getLong(2) >= -idBound),
-      s"$op: doc_id range [${if (mx.isNullAt(2)) 0
-        else mx.getLong(2)}, ${if (mx.isNullAt(1)) 0
-        else mx.getLong(1)}] overflows chunk_key = doc_id * " +
-        s"$maxChunksPerDoc + chunk_idx; renumber doc ids or lower " +
-        "maxChunksPerDoc")
+    val (lo, hi) = (get("_min_id"), get("_max_id"))
+    require(hi.forall(_ <= idBound) && lo.forall(_ >= -idBound),
+      s"$op: doc_id range [${lo.getOrElse(0L)}, ${hi.getOrElse(0L)}] " +
+        s"overflows chunk_key = doc_id * $maxChunksPerDoc + chunk_idx; " +
+        "renumber doc ids or lower maxChunksPerDoc")
   }
 
   /** Exact paragraph cliques → min-key representative (min over

@@ -341,13 +341,17 @@ object Dedup {
     // The bucket rows are persisted AND materialized up front because BOTH
     // sides of the self-join scan them: lazily-cached branches race to
     // populate and the whole shingle→signature pipeline (the expensive
-    // part) executes twice. Footprint is doc_id + signatures — bytes per
-    // doc, cacheable even at corpus scale (MEMORY_AND_DISK spills, never
-    // OOMs).
-    val buckets = PipelineCaches.track(
-      bandedBuckets(docs, k, numHashes, bands, oracleHashes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    buckets.count()
+    // part) executes twice. Materialized by a noop-sink write: one job
+    // fewer than count()'s aggregate. Footprint is doc_id + signatures —
+    // bytes per doc, cacheable even at corpus scale (MEMORY_AND_DISK
+    // spills, never OOMs).
+    val buckets = graft.scale.JobLabel(docs.sparkSession, "minhash:buckets") {
+      val b = PipelineCaches.track(
+        bandedBuckets(docs, k, numHashes, bands, oracleHashes)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      b.write.format("noop").mode("overwrite").save()
+      b
+    }
 
     // skew guard: drop whole over-cap buckets before the self-join. The
     // over-cap KEY set is tiny by construction (≤ rows/cap keys), so it
@@ -379,62 +383,52 @@ object Dedup {
 
   /** Shared scaffold of the exact rescorers: candidate pairs annotated
     * with (n_inter, n_a, n_b) — distinct-shingle intersection and the
-    * two set sizes. The exploded shingle set feeds three consumers, but
-    * no cache is needed: they sit behind the same shuffle and
-    * ReuseExchange serves all three from one execution (measured — a
-    * persist+materialize here changed nothing). Candidate columns pass
-    * through, so callers keep extras like est_jaccard. */
+    * two set sizes. Each document's distinct k-shingles are ONE array
+    * row, built by one shingle projection per document with no explode
+    * and no aggregate; see [[pairSetCounts]] for the pair side.
+    * Shingles compare as the k-word strings themselves, which is the
+    * Jaccard's definition; md5 keys ([[pairShingleCountsFrom]]) pay off
+    * only where a relation shuffles by shingle, and nothing here does.
+    * Candidate columns pass through, so callers keep extras like
+    * est_jaccard. */
   private def pairShingleCounts(
       docs: DataFrame, candidates: DataFrame, k: Int): DataFrame =
-    // md5 keys (r18): the rescore joins shuffle the shingle relation by
-    // doc and match on shingle equality — constant-width keys instead of
-    // the raw k-word strings, the same exactness convention as
-    // [[shingleIndex]] (distinct counts and intersections unchanged).
-    // The coalesce-to-sentinel makes the key NON-NULLABLE (r18 second
-    // pass): with a nullable unhex, the downstream shingle-equality
-    // join infers isnotnull(unhex(md5(_g))) and pushdown substitutes
-    // the alias — md5 evaluated TWICE per exploded row in this
-    // UN-persisted pipeline (plan-verified in all five rescore-card
-    // entries). The sentinel is unreachable (md5 of a non-null shingle
-    // is never null) and could never collide (1 byte vs every real
-    // key's 16), so values and join results are bit-identical.
-    pairShingleCountsFrom(
-      withShingleCol(docs, k).select(col("doc_id"),
-        expr("explode(array_distinct(_shingles))").as("_g"))
-        .select(col("doc_id"),
-          coalesce(unhex(md5(col("_g"))),
-            lit(Array[Byte](0))).as("shingle")),
+    pairSetCounts(
+      withShingleCol(docs, k)
+        .select(col("doc_id"), array_distinct(col("_shingles")).as("_set")),
       candidates)
 
   /** [[pairShingleCounts]] over an ALREADY-BUILT distinct
-    * (doc_id, shingle) relation — the exact joins persist exactly this
-    * table for candidate generation, and re-deriving it inside the
-    * rescore was a full second corpus shingle pass (measured round 15:
-    * the whole exact-join family pays it).
-    *
-    * `sizes` lets a caller that already computed the per-doc shingle
-    * counts (the exact joins build them for the prefix bound) feed them
-    * in instead of paying two more aggs over `sh` (r17 optimization
-    * round, guide §2.4 — shared work computed once). Must be exactly
-    * sh.groupBy(doc_id).count — identity, not a tuning knob. */
+    * (doc_id, shingle) relation (the paragraph probe's index and batch
+    * shingle rows, the containment join's persisted explode): one
+    * doc-keyed aggregation folds it back into per-document sets, so it
+    * is scanned once. */
   private[graft] def pairShingleCountsFrom(
-      sh: DataFrame, candidates: DataFrame,
-      sizes: Option[DataFrame] = None): DataFrame = {
-    val counts = sizes.getOrElse(
-      sh.groupBy("doc_id").count().withColumnRenamed("count", "n_sh"))
-    val inter = candidates
-      .join(sh.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"))
-      .join(sh.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("shingle", "shingle_b"), Seq("doc_b"))
-      .filter(col("shingle") === col("shingle_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    candidates
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0, Seq("n_inter"))
-      .join(counts.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_sh", "n_a"), Seq("doc_a"))
-      .join(counts.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_sh", "n_b"), Seq("doc_b"))
+      sh: DataFrame, candidates: DataFrame): DataFrame =
+    pairSetCounts(
+      sh.groupBy("doc_id").agg(collect_list(col("shingle")).as("_set")),
+      candidates)
+
+  /** Candidate pairs joined to the (doc_id, `_set`) rows of both
+    * documents, with n_inter = |A∩B| and the set sizes (bigint) read
+    * off the two arrays. Pairs with a document missing from `sets`
+    * drop; every other candidate row comes out exactly once, since
+    * `candidates` is read once. Both joins read the SAME `sets` plan, so
+    * adaptive execution computes it once and reuses its exchange for the
+    * second join: the broadcast, or the shuffle above the projection.
+    * (A small input that Spread repartitions by doc_id already meets
+    * both sort-merge joins' distribution, so without broadcasts each
+    * join stage projects its side from that shared exchange.) */
+  private def pairSetCounts(sets: DataFrame, candidates: DataFrame)
+      : DataFrame = {
+    def side(s: String): DataFrame = sets.select(
+      col("doc_id").as(s"doc_$s"), col("_set").as(s"_set_$s"))
+    candidates.join(side("a"), Seq("doc_a")).join(side("b"), Seq("doc_b"))
+      .withColumn("n_inter", graft.functions.MatchExpressions
+        .setIntersectSize(col("_set_a"), col("_set_b")).cast("bigint"))
+      .withColumn("n_a", size(col("_set_a")).cast("bigint"))
+      .withColumn("n_b", size(col("_set_b")).cast("bigint"))
+      .drop("_set_a", "_set_b")
   }
 
   /** Exact n-gram Jaccard for a candidate pair set (rescoring step after
@@ -462,14 +456,12 @@ object Dedup {
     containmentProjection(pairShingleCounts(docs, candidates, k))
 
   /** [[containmentRescore]] over a prebuilt distinct (doc_id, shingle)
-    * relation — lets the exact joins feed their PERSISTED shingle table
-    * into the rescore instead of paying a second corpus shingle pass.
-    * Optional `sizes` forwards a caller's precomputed per-doc counts
-    * (see [[pairShingleCountsFrom]]). */
+    * relation — lets the containment join feed its PERSISTED shingle
+    * table into the rescore instead of paying a second corpus shingle
+    * pass. */
   private[graft] def containmentRescoreFrom(
-      sh: DataFrame, candidates: DataFrame,
-      sizes: Option[DataFrame] = None): DataFrame =
-    containmentProjection(pairShingleCountsFrom(sh, candidates, sizes))
+      sh: DataFrame, candidates: DataFrame): DataFrame =
+    containmentProjection(pairShingleCountsFrom(sh, candidates))
 
   private def containmentProjection(pc: DataFrame): DataFrame =
     pc.select(col("doc_a"), col("doc_b"),
@@ -496,18 +488,10 @@ object Dedup {
     * pairs; everything after the rescore is bin-bounded. */
   def pairJaccardHist(docs: DataFrame, k: Int = 3, numHashes: Int = 8,
       bands: Int = 4, oracleHashes: Boolean = false): DataFrame = {
-    // persisted + materialized (r17 optimization round): the rescore
-    // consumes the candidate set twice, and each lazy reference re-ran
-    // the band self-join + distinct (the buckets cache inside
-    // minhashCandidates bounds that recompute but does not remove it).
-    // Pair-bounded, so the cache is small by construction.
-    val cands = PipelineCaches.track(
-      minhashCandidates(docs, k, numHashes, bands,
-        minEstJaccard = 0.0, oracleHashes = oracleHashes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    cands.count()
-    val scored = jaccardRescore(docs, cands, k)
-    scored
+    // the rescore reads the candidate set once, so it stays lazy
+    val cands = minhashCandidates(docs, k, numHashes, bands,
+      minEstJaccard = 0.0, oracleHashes = oracleHashes)
+    jaccardRescore(docs, cands, k)
       .groupBy(floor(col("jaccard") * 20).cast("int").as("bin"))
       .agg(count(lit(1)).as("_n"))
       .select(col("bin"),
@@ -540,76 +524,63 @@ object Dedup {
     * DuckDB computes the UNPRUNED all-pairs join and the hash gate
     * asserts set equality.
     *
-    * Scale shape: the df table is a shingle-keyed partial agg; the
-    * rank is a per-doc window; candidate generation is an equi-join on
-    * prefix shingles whose buckets the rare-first order keeps small
-    * (the AllPairs observation), with the size filter pruning inside a
+    * Scale shape: one shingle explode; the df is a shingle-partitioned
+    * window count; ONE doc-keyed aggregation sorts each doc's shingles
+    * into the global order, and that sorted set feeds both the prefix
+    * (its head, exploded) and the rescore (the whole set, read by
+    * [[pairSetCounts]]); candidate generation is an equi-join on prefix
+    * shingles whose buckets the rare-first order keeps small (the
+    * AllPairs observation), with the size filter pruning inside a
     * bucket; the rescore is candidate-bounded. No stage is
-    * corpus-quadratic unless the output itself is. */
+    * corpus-quadratic unless the output itself is. Nothing is persisted
+    * and no job runs before the caller's action: the shingle pass and
+    * the doc aggregation each run once in that query (the second
+    * reader reuses the exchange). */
   def jaccardJoinExact(docs: DataFrame, threshold: Double, k: Int = 3)
       : DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     // md5 the shingle at the explode (r18 optimization round, guide §2.3
-    // "shuffle keys and metadata instead of payloads"): every downstream
-    // exchange — the df agg, the prefix window, the candidate self-join,
-    // the rescore — keys on the shingle, and the raw k-word string
-    // shuffled 181 MB into the prefix window at sf0.1 where the 32-hex
-    // key shuffles a third of that. Exactness is unchanged: md5 is the
+    // "shuffle keys and metadata instead of payloads"): the df window and
+    // the doc aggregation shuffle every (doc, shingle) row, and the prefix
+    // self-join keys on the shingle; the raw k-word string shuffled
+    // 181 MB into the prefix window at sf0.1 where the 32-hex key
+    // shuffles a third of that. Exactness is unchanged: md5 is the
     // exact-equality convention of the whole containment tier
     // ([[shingleIndex]] — "constant-width keys, prose never enters the
     // index"), distinct counts and intersections are preserved, and the
     // prefix-filter completeness argument needs only SOME global total
-    // order, which (df asc, md5 asc) is.
-    val sh = PipelineCaches.track(withShingleCol(docs, k)
-      .select(col("doc_id"),
-        expr("explode(array_distinct(_shingles))").as("_g"))
+    // order, which (df asc, md5 asc) is. explode_outer over the distinct
+    // array attribute keeps the shingle projection to one evaluation per
+    // doc (the [[shingleIndex]] note; kgrams never returns an empty array).
+    val sh = withShingleCol(docs, k)
+      .withColumn("_ds", array_distinct(col("_shingles")))
+      .select(col("doc_id"), explode_outer(col("_ds")).as("_g"))
       .select(col("doc_id"), unhex(md5(col("_g"))).as("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("_sz"))
-    val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("_df"))
+    // each doc's distinct shingles sorted by (df asc, shingle asc)
+    val ordered = sh
+      .withColumn("_df", count(lit(1)).over(Window.partitionBy("shingle")))
+      .groupBy("doc_id")
+      .agg(array_sort(collect_list(struct(col("_df"), col("shingle"))))
+        .as("_ord"))
     def alphaCeil(sz: Column): Column =
       ceil(sz.cast("double") * lit(threshold) - lit(1e-9))
-    // persisted + materialized (r17 optimization round): BOTH sides of
-    // the candidate self-join scan the prefix relation, and each lazy
-    // reference re-ran the df agg + two joins + the per-doc window
-    // (plan-verified: the Window subtree appeared 4x in the entry's
-    // physical plan — twice per cands evaluation, and cands itself was
-    // consumed twice by the rescore). Prefix rows are the ~(1−t) head
-    // of each doc's shingle list — strictly smaller than the already-
-    // persisted sh relation, so the cache is the cheap side of the
-    // trade at any scale (guide §2.4: remove recomputed subtrees).
-    val prefix = PipelineCaches.track(sh.join(dfreq, Seq("shingle"))
-      .join(sizes, Seq("doc_id"))
-      .withColumn("_r", row_number().over(Window.partitionBy("doc_id")
-        .orderBy(col("_df").asc, col("shingle").asc)))
-      .filter(col("_r") <= col("_sz") - alphaCeil(col("_sz")) + 1)
-      .select("shingle", "doc_id", "_sz")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    prefix.count()
-    // persisted + materialized: the rescore consumes the candidate set
-    // twice (the intersection join and the final pair left-join), and
-    // each lazy reference re-ran the whole self-join + distinct.
-    // Pair-bounded by construction — small by the same argument as
-    // paragraphProbeCore's cands cache (the round-15/16 lesson).
-    val cands = PipelineCaches.track(prefix
-      .select(col("shingle"), col("doc_id").as("doc_a"),
-        col("_sz").as("_sza"))
+    val sz = size(col("_ord"))
+    val prefix = ordered
+      .select(col("doc_id"), sz.as("_sz"), explode(slice(col("_ord"), lit(1),
+        (sz - alphaCeil(sz) + 1).cast("int"))).as("_e"))
+      .select(col("_e.shingle").as("shingle"), col("doc_id"), col("_sz"))
+    val cands = prefix
+      .select(col("shingle"), col("doc_id").as("doc_a"), col("_sz").as("_sza"))
       .join(prefix.select(col("shingle"), col("doc_id").as("doc_b"),
         col("_sz").as("_szb")), Seq("shingle"))
       .filter(col("doc_a") < col("doc_b"))
       .filter(col("_szb") >= alphaCeil(col("_sza")) &&
         col("_sza") >= alphaCeil(col("_szb")))
       .select("doc_a", "doc_b").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    cands.count()
-    // prefix's only consumer is the cands self-join above; drop it now
-    // instead of at scope teardown — the rescore needs sh and cands
-    // resident, not the strictly-larger-than-needed prefix rows (r17
-    // advice: avoidable cache pressure)
-    prefix.unpersist(blocking = false)
-    containmentRescoreFrom(sh, cands,
-        sizes = Some(sizes.select(col("doc_id"), col("_sz").as("n_sh"))))
+    val sets = ordered.select(col("doc_id"),
+      transform(col("_ord"), e => e.getField("shingle")).as("_set"))
+    containmentProjection(pairSetCounts(sets, cands))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
   }
@@ -665,12 +636,9 @@ object Dedup {
       .filter(col("_r") <= col("_sz") - alphaCeil(col("_sz")) + 1)
       .select(col("shingle"), col("doc_id").as("doc_a"),
         col("_sz").as("_sza"))
-    // persisted + materialized (r17 optimization round): the rescore
-    // consumes the candidate set twice and each lazy reference re-ran
-    // the prefix pipeline + the index join + distinct (plan-verified
-    // duplicate subtrees, same fix as jaccardJoinExact). prefix itself
-    // is consumed once here, so it stays lazy.
-    val cands = PipelineCaches.track(prefix
+    // the rescore reads the candidate set once, so it stays lazy, and
+    // so does prefix (consumed once here)
+    val cands = prefix
       .join(sh.select(col("shingle"), col("doc_id").as("doc_b")),
         Seq("shingle"))
       .filter(col("doc_a") =!= col("doc_b"))
@@ -678,10 +646,7 @@ object Dedup {
         col("_sz").as("_szb")), Seq("doc_b"))
       .filter(col("_szb") >= alphaCeil(col("_sza")))
       .select("doc_a", "doc_b").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    cands.count()
-    containmentRescoreFrom(sh, cands,
-        sizes = Some(sizes.select(col("doc_id"), col("_sz").as("n_sh"))))
+    containmentRescoreFrom(sh, cands)
       .filter(col("containment_a") >= threshold)
       .select("doc_a", "doc_b", "containment_a")
   }
@@ -707,18 +672,11 @@ object Dedup {
     * candidate-bounded pair relation. */
   def minhashEstQuality(docs: DataFrame, k: Int = 3, numHashes: Int = 8,
       bands: Int = 4, oracleHashes: Boolean = false): DataFrame = {
-    // persisted + materialized (r17 optimization round): this entry
-    // references the candidate set THREE times (both rescore sides +
-    // the est_jaccard join-back), and each lazy reference re-ran the
-    // band self-join + distinct. Pair-bounded cache.
-    val cands = PipelineCaches.track(
-      minhashCandidates(docs, k, numHashes, bands,
-        minEstJaccard = 0.0, oracleHashes = oracleHashes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    cands.count()
-    val err = containmentRescore(docs,
-        cands.select("doc_a", "doc_b"), k)
-      .join(cands, Seq("doc_a", "doc_b"))
+    // the rescore carries est_jaccard through, so the candidate set is
+    // read once and stays lazy
+    val cands = minhashCandidates(docs, k, numHashes, bands,
+      minEstJaccard = 0.0, oracleHashes = oracleHashes)
+    val err = jaccardRescore(docs, cands, k)
       .select(round(abs(col("est_jaccard") - col("jaccard")), 12)
         .as("_e"))
     val notch = 1.0 / numHashes
@@ -751,17 +709,14 @@ object Dedup {
   def lshRecallAudit(docs: DataFrame, threshold: Double = 0.8,
       k: Int = 3, numHashes: Int = 8, bands: Int = 4,
       oracleHashes: Boolean = false): DataFrame = {
-    // the two input pipelines are INDEPENDENT and each materializes
-    // eagerly while it builds (the exact join's prefix/cands caches,
-    // the banded generator's buckets) — overlap them from two driver
-    // threads (r18 optimization round, guide §2.6) so the banded
-    // pipeline's jobs backfill the exact join's stage tails
-    val Seq(truth, cand) = graft.scale.Par.runAll(
-      () => jaccardJoinExact(docs, threshold, k)
-        .select("doc_a", "doc_b").withColumn("_t", lit(1L)),
-      () => minhashCandidates(docs, k, numHashes, bands,
-          minEstJaccard = 0.0, oracleHashes = oracleHashes)
-        .select("doc_a", "doc_b").withColumn("_c", lit(1L)))
+    // the exact join is lazy (no job before the action below), so the
+    // banded generator's eager bucket materialization is the only work
+    // done here; the audit query runs both pipelines' stages side by side
+    val truth = jaccardJoinExact(docs, threshold, k)
+      .select("doc_a", "doc_b").withColumn("_t", lit(1L))
+    val cand = minhashCandidates(docs, k, numHashes, bands,
+        minEstJaccard = 0.0, oracleHashes = oracleHashes)
+      .select("doc_a", "doc_b").withColumn("_c", lit(1L))
     truth.join(cand, Seq("doc_a", "doc_b"), "full")
       .agg(
         coalesce(sum("_t"), lit(0L)).cast("bigint").as("n_truth"),
@@ -956,17 +911,15 @@ object Dedup {
   def containmentRecallAudit(docs: DataFrame, threshold: Double = 0.8,
       k: Int = 3, numHashes: Int = 8, bands: Int = 4,
       oracleHashes: Boolean = false): DataFrame = {
-    // independent input pipelines overlapped from two driver threads —
-    // the lshRecallAudit rationale verbatim (guide §2.6). Candidates
-    // are unordered (doc_a < doc_b); each truth pair orients onto that
-    // key below.
-    val Seq(truth, cand) = graft.scale.Par.runAll(
-      () => containmentJoinExact(docs, threshold, k)
-        .select("doc_a", "doc_b").withColumn("_t", lit(1L)),
-      () => minhashCandidates(docs, k, numHashes, bands,
-          minEstJaccard = 0.0, oracleHashes = oracleHashes)
-        .select(col("doc_a").as("_lo"), col("doc_b").as("_hi"))
-        .withColumn("_c", lit(1L)))
+    // the exact join is lazy, as in lshRecallAudit. Candidates are
+    // unordered (doc_a < doc_b); each truth pair orients onto that key
+    // below.
+    val truth = containmentJoinExact(docs, threshold, k)
+      .select("doc_a", "doc_b").withColumn("_t", lit(1L))
+    val cand = minhashCandidates(docs, k, numHashes, bands,
+        minEstJaccard = 0.0, oracleHashes = oracleHashes)
+      .select(col("doc_a").as("_lo"), col("doc_b").as("_hi"))
+      .withColumn("_c", lit(1L))
     truth
       .withColumn("_lo", least(col("doc_a"), col("doc_b")))
       .withColumn("_hi", greatest(col("doc_a"), col("doc_b")))

@@ -247,6 +247,43 @@ class CurationSpec extends AnyFunSuite {
     assert(e.getMessage.contains("integral doc_id"))
   }
 
+  test("paragraphDedup refuses a doc with more than maxChunksPerDoc " +
+    "chunks before it returns a frame (chunk keys would collide)") {
+    val s = spark
+    import s.implicits._
+    // 5 one-word chunks in doc 2 against a budget of 3
+    val d = Seq((1L, "a b"), (2L, "c d e f g")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      Curation.paragraphDedup(d, chunkSize = 1, maxChunksPerDoc = 3L)
+    }
+    graft.llm.PipelineCaches.clear()
+    assert(e.getMessage.contains("paragraphDedup: a doc has > 3 chunks"),
+      e.getMessage)
+  }
+
+  test("paragraphDedup refuses a doc_id range that overflows chunk_key " +
+    "before it returns a frame, on either sign") {
+    val s = spark
+    import s.implicits._
+    val m = 100000L
+    val bound = (Long.MaxValue - (m - 1)) / m
+    // the largest ids in range pass; one past the bound on either side
+    // throws, naming the observed id range
+    Curation.paragraphDedup(Seq((bound, "a b"), (-bound, "c d"))
+      .toDF("doc_id", "text"), chunkSize = 1, maxChunksPerDoc = m)
+    Seq(Seq((1L, "a b"), (bound + 1, "c d")),
+        Seq((-bound - 1, "a b"), (1L, "c d"))).foreach { rows =>
+      val e = intercept[IllegalArgumentException] {
+        Curation.paragraphDedup(rows.toDF("doc_id", "text"),
+          chunkSize = 1, maxChunksPerDoc = m)
+      }
+      val (lo, hi) = (rows.map(_._1).min, rows.map(_._1).max)
+      assert(e.getMessage.contains(s"paragraphDedup: doc_id range " +
+        s"[$lo, $hi] overflows chunk_key"), e.getMessage)
+    }
+    graft.llm.PipelineCaches.clear()
+  }
+
   test("decontaminate flags exactly the docs sharing a 5-gram") {
     val s = spark
     import s.implicits._
