@@ -79,13 +79,13 @@ object ComputeRegistry {
 
   /** The shared near-dup group pipeline of the dedup kernels: banded
     * MinHash candidates over the keyed (doc_id, text) frame, then
-    * alternating-star connected components — O(log n) rounds on ANY
-    * candidate graph (the min-label form needs one round per diameter
-    * hop), so a long near-dup chain in an arbitrary user corpus cannot
-    * degrade it. One definition so `minhash_dedup` and
-    * `keep_best_dedup` can never diverge on candidate parameters. */
+    * [[graft.llm.Curation.dupGroups]]' connected components — O(log n)
+    * rounds on ANY candidate graph, so a long near-dup chain in an
+    * arbitrary user corpus cannot degrade it. One definition so
+    * `minhash_dedup` and `keep_best_dedup` can never diverge on candidate
+    * parameters. */
   private def textDupGroups(df: DataFrame, keyedDf: DataFrame): DataFrame =
-    graft.llm.Curation.dupGroupsAlternating(df.select("doc_id"),
+    graft.llm.Curation.dupGroups(df.select("doc_id"),
       graft.llm.Dedup.minhashCandidates(keyedDf))
 
   private val tableBuiltins: Map[String, TableKernel] = Map(

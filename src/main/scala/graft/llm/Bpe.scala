@@ -160,7 +160,9 @@ object Bpe {
 
   /** [[trainLocal]]'s driver-local merge loop over an already-collected
     * (word, freq) table — split out so the loop's cost can be measured
-    * independently of the corpus aggregation ([[graft.tools.BpeProbe]]). */
+    * independently of the corpus aggregation (BASELINE.md, "The real-budget
+    * BPE claim, measured" and "trainLocal at a real budget, re-measured
+    * r12"). */
   private[graft] def trainLocalVocab(
       spark: SparkSession, collected: Array[(String, Long)],
       nMerges: Int): BpeModel = {

@@ -11,8 +11,8 @@ import org.apache.spark.storage.StorageLevel
   * assignment over the MinHash candidate graph.
   *
   * Everything is Column algebra (codegen'd, partial-aggregation-friendly);
-  * the only iteration is label propagation in [[dupGroups]], which
-  * materializes per-round state like any Pregel-style computation.
+  * the only iteration is the star rounds of [[dupGroups]], which
+  * checkpoint each round's edge set.
   */
 /** A trained [[Curation.logisticQuality]] classifier as a persistable
   * artifact: the (bucket, weight) table (≤ buckets+1 rows, bucket -1 =
@@ -393,8 +393,8 @@ object Curation {
           .as("prob"),
         (col("_s") > 0).as("predicted"))
 
-  /** Large-`buckets` evidence (r14 verdict task 7, measured by
-    * [[graft.tools.LrBucketsProbe]] at sf0.1 with a diversified token
+  /** Large-`buckets` evidence (BASELINE.md, "Round-15: classifier
+    * large-buckets evidence"; measured at sf0.1 with a diversified token
     * space): 256 buckets / 257 occupied weights fits in min-of-3
     * 4.07 s; 2560 buckets / 2047 occupied weights in 3.19 s — flat
     * within host noise. The per-iteration driver collect is ≤
@@ -1303,138 +1303,47 @@ object Curation {
       regexp_count(emailScrubbed, lit(PhoneRe)).as("n_phones"))
   }
 
-  /** Duplicate-group assignment: every node takes the minimum doc_id
-    * reachable within `iters` hops of the candidate-pair graph (min-label
-    * propagation, the standard Pregel connected-components kernel). Near-dup
-    * clusters are stars/short chains around an original (diameter ≤ 2-3 in
-    * practice), so a small fixed round count reaches the fixpoint; full CC
-    * at adversarial diameters would raise `iters` to O(log n) with the
-    * large-star/small-star variant.
-    *
-    * Each round is one join + one partial-aggregated min per edge endpoint;
-    * per-round state (and the edge list, used every round) is materialized
-    * with MEMORY_AND_DISK persistence — the iterative exception to the
-    * "never cache" rule, same as GraphX/MLlib iteration. The candidate
-    * pairs and the penultimate round stay cached when this returns (the
-    * lazy result still reads them); [[PipelineCaches.clear]] reclaims every
-    * tracked intermediate once the result is consumed.
-    *
-    * @param nodes      one row per doc_id needing a group (singletons keep
-    *                   their own id)
-    * @param candidates (doc_a, doc_b) near-dup pairs, e.g. from
-    *                   [[Dedup.minhashCandidates]] */
-  def dupGroups(nodes: DataFrame, candidates: DataFrame, iters: Int = 3)
-      : DataFrame = dupGroupsChecked(nodes, candidates, iters)._1
-
-  /** [[dupGroups]] plus whether convergence was VERIFIED: true iff a
-    * round's changed-label count was observed to be zero within `iters`.
-    * False means the labels may be un-converged (a chain longer than
-    * `iters` hops keeps the far end un-relabeled) — the default `iters=3`
-    * fits the star/short-chain graphs near-dup candidates form, but a
-    * caller on a longer-chain graph must find out rather than silently
-    * getting partial groups. [[dupGroups]] logs a warning in that case;
-    * [[dupGroupsAlternating]] is the diameter-independent alternative. */
-  private[graft] def dupGroupsChecked(
-      nodes: DataFrame, candidates: DataFrame, iters: Int = 3)
-      : (DataFrame, Boolean) = {
-    // persist the PAIRS, not the edge union: edges reference candidates
-    // twice (both directions), so caching one pair row per candidate halves
-    // the expensive band-join executions and the cache footprint
-    val cached = PipelineCaches.track(candidates.select("doc_a", "doc_b")
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val edges = cached.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(cached.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
-    var prev: DataFrame = null
-    var round = 1
-    var converged = false
-    var lastChanged: Option[Long] = None
-    while (round <= iters && !converged) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("doc_id", "_sid"), col("src") === col("_sid"))
-        .groupBy(col("dst").as("doc_id")).agg(min("label").as("_nbr"))
-      val next = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("label").as("_old"),
-          least(col("label"), coalesce(col("_nbr"), col("label"))).as("label"))
-      if (round < iters) {
-        // force materialization so the next round reads the cache instead
-        // of stacking (and doubling) lineage — persist alone is lazy. The
-        // same job doubles as the convergence check: zero changed labels
-        // means the fixpoint is reached and remaining rounds are no-ops.
-        // The FINAL round skips all this: its two inputs are already
-        // cached, so the caller's own action materializes it directly.
-        val p = PipelineCaches.track(next.persist(StorageLevel.MEMORY_AND_DISK))
-        // one full-scan aggregate: materializes every cached partition
-        // (isEmpty could short-circuit and leave the cache partial) and
-        // returns the changed-label count in the same job
-        val changed = p.agg(coalesce(
-          sum(when(col("label") =!= col("_old"), 1L).otherwise(0L)), lit(0L)))
-          .head.getLong(0)
-        lastChanged = Some(changed)
-        converged = changed == 0L
-        if (prev != null) prev.unpersist(blocking = false)
-        prev = p
-        labels = p.drop("_old")
-      } else {
-        labels = next.drop("_old")
-      }
-      round += 1
-    }
-    // Surface the signal the convergence check already paid for instead
-    // of discarding it: un-verified means either the last observed round
-    // still changed labels, or iters left no room for a check at all
-    // (iters=1 runs only the unchecked final round).
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        "dupGroups: convergence NOT verified within {} round(s) (last " +
-          "observed changed-label count: {}) — labels may be partial on " +
-          "long-chain graphs; raise iters or use dupGroupsAlternating",
-        iters, lastChanged.map(_.toString).getOrElse("unchecked"))
-    (labels.select(col("doc_id"), col("label").as("dup_group")), converged)
-  }
-
-  /** Duplicate-group assignment for ADVERSARIAL diameters: alternating
-    * large-star/small-star connected components (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    * algorithm). [[dupGroups]]'s min-label propagation needs one shuffle
-    * round per graph-diameter hop, which is fine for the star/short-chain
-    * clusters near-dup candidates actually form but degenerates on long
-    * chains (A~B~C~… boilerplate drift across a crawl): a 10⁶-hop chain
-    * is 10⁶ shuffles. The star operations contract every component to a
-    * star rooted at its minimum id in O(log² n) rounds worst-case
-    * (2·log n observed) regardless of diameter — ~40 shuffles for any
-    * 100 TB candidate graph.
+  /** Duplicate-group assignment: the connected components of the
+    * candidate-pair graph, every node labeled with its component's
+    * minimum doc_id (singletons keep their own id). Alternating
+    * large-star/small-star rounds (Kiveris et al., "Connected Components
+    * in MapReduce and Beyond", SoCC'14 — public algorithm) contract every
+    * component to a star rooted at its minimum in O(log² n) rounds
+    * worst-case (~log₂ n observed on a chain) whatever its diameter, so a
+    * long near-dup chain (A~B~C~… boilerplate drift across a crawl) is
+    * labeled in full, not cut off after a fixed number of hops.
     *
     *  - large-star: every node's strictly-larger neighbors re-attach to
     *    the minimum of its closed neighborhood (never loses connectivity,
     *    strictly shrinks large-id chains);
-    *  - small-star: every node and its ≤-neighbors re-attach to their
-    *    minimum, consolidating local stars.
+    *  - small-star: every node and its smaller neighbors re-attach to
+    *    their minimum, consolidating local stars.
     *
-    * Each round is two grouped-min joins over the edge set. Per-round
-    * edges are materialized with eager `localCheckpoint`, NOT persist:
-    * both star ops reference their input twice, so the nested logical
-    * plan grows ~4× per round — by round 15 the analyzer and the
-    * plan-description string (built per action for the SQL listener) are
-    * gigabytes. Checkpointing truncates lineage to a constant-size scan;
-    * the blocks live in the executors and are reclaimed by the
-    * ContextCleaner once the round's reference is dropped. The
-    * convergence check fingerprints the edge set with (count, decimal
-    * sum of xxhash64(u,v)) and stops when stable — at the joint fixpoint
-    * the edge set IS the star set {(node, component-min)}.
+    * Each star op takes a node's minimum neighbor with a window over the
+    * edges partitioned by node, not a grouped min joined back. A round is
+    * a small-star then a large-star, materialized with ONE eager
+    * `localCheckpoint` (job label `cc:star`; the first large-star over the
+    * canonical edges is `cc:edges`): the checkpoint cuts the lineage a
+    * round would otherwise stack on the last, and its blocks are reclaimed
+    * by the ContextCleaner once the round's reference is dropped; nothing
+    * is cached. The rounds stop when the edge set the large-star reads is
+    * a star set — a node with a smaller neighbor has no other neighbor, so
+    * every component is a root (its minimum) and leaves. That is the
+    * joint fixpoint, so no extra round has to prove it, and the test is a
+    * `Dataset.observe` metric of the checkpoint's own job, not a query of
+    * its own.
     *
-    * Output contract matches [[dupGroups]]: (doc_id, dup_group), every
-    * node labeled, singletons keep their own id. */
-  def dupGroupsAlternating(
-      nodes: DataFrame, candidates: DataFrame, maxRounds: Int = 100)
-      : DataFrame =
-    dupGroupsAlternatingCounted(nodes, candidates, maxRounds)._1
+    * @param nodes      one row per doc_id needing a group
+    * @param candidates (doc_a, doc_b) near-dup pairs, e.g. from
+    *                   [[Dedup.minhashCandidates]] */
+  def dupGroups(nodes: DataFrame, candidates: DataFrame): DataFrame =
+    dupGroupsCounted(nodes, candidates)._1
 
-  /** [[dupGroupsAlternating]] plus the number of star rounds executed —
-    * the measurable form of the O(log n) claim (ScaleProbe grows a chain
-    * and watches rounds grow logarithmically). The count includes the
-    * final no-change round that proves the fixpoint. */
-  private[graft] def dupGroupsAlternatingCounted(
+  /** [[dupGroups]] plus the number of star rounds executed — the
+    * measurable form of the O(log n) claim (ScaleProbe grows a chain and
+    * watches rounds grow logarithmically). A candidate graph that is
+    * already a star set takes 0 rounds. Hitting `maxRounds` throws. */
+  private[graft] def dupGroupsCounted(
       nodes: DataFrame, candidates: DataFrame, maxRounds: Int = 100)
       : (DataFrame, Int) = {
     // localCheckpoint blocks live on executors: fast, but an executor
@@ -1447,60 +1356,46 @@ object Curation {
     val reliable = spark.conf
       .getOption("spark.graft.cc.reliableCheckpoint").contains("true") &&
       spark.sparkContext.getCheckpointDir.isDefined
-    def mat(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+    val byU = Window.partitionBy("u")
 
-    // canonical edge set: u > v strictly (self-pairs contribute nothing)
-    var edges = mat(candidates
-      .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-        least(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct())
+    // a symmetric edge set (both orientations of every edge), deduplicated
+    // inside ONE exchange by u, which the large-star's window then reuses
+    def byNode(e: DataFrame): DataFrame =
+      e.filter(col("u") =!= col("v")).repartition(col("u")).distinct()
 
-    def fingerprint(e: DataFrame): (Long, BigDecimal) = {
-      // sum the 64-bit hashes in decimal(38,0): ANSI-safe (a bigint sum
-      // overflows), order-independent, and collision-free in practice
-      val r = e.agg(
-        count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)"))).head
-      (r.getLong(0), BigDecimal(r.getDecimal(1)))
-    }
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy("u")
-        .agg(least(min(col("v")), col("u")).as("m"))
-      sym.join(m, Seq("u"))
+    // large-star over a symmetric edge set, checkpointed; returns its
+    // directed (u > v) output and whether the input was a star set,
+    // observed on the checkpoint's job: a node with a smaller neighbor
+    // (m < u) and any second neighbor is off-star. On a star set the
+    // output is that set, each leaf → root edge once.
+    def largeStar(sym: DataFrame, label: String): (DataFrame, Boolean) = {
+      val seen = Observation()
+      val w = sym.select(col("u"), col("v"),
+        least(min(col("v")).over(byU), col("u")).as("m"),
+        count(lit(1)).over(byU).as("deg"))
+        .observe(seen, count(when(col("m") < col("u") && col("deg") > 1, true))
+          .as("off_star"))
         .filter(col("v") > col("u")) // strictly-larger neighbors re-attach
         .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
+      val out = graft.scale.JobLabel(spark, label) {
+        if (reliable) w.checkpoint(true) else w.localCheckpoint(true)
+      }
+      (out, seen.get("off_star") == 0L)
     }
 
-    def smallStar(e: DataFrame): DataFrame = {
-      // e is already directed large→small (u > v)
-      val m = e.groupBy("u").agg(min("v").as("m"))
-      val withMin = e.join(m, Seq("u"))
-      withMin.select(col("v").as("u"), col("m").as("v")) // ≤-neighbors
-        .unionAll(m.select(col("u"), col("m").as("v")))  // u itself
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
+    // e is directed large→small (u > v) and may repeat an edge: every node
+    // and its smaller neighbors re-attach to their minimum m
+    def smallStar(e: DataFrame): DataFrame = byNode(e
+      .select(col("u"), col("v"), min(col("v")).over(byU).as("m"))
+      .selectExpr("stack(4, v, m, m, v, u, m, m, u) AS (u, v)"))
 
-    var fp = fingerprint(edges)
+    var (edges, star) = largeStar(byNode(candidates
+      .selectExpr("stack(2, doc_a, doc_b, doc_b, doc_a) AS (u, v)")), "cc:edges")
     var round = 0
-    var converged = fp._1 == 0L
-    while (!converged && round < maxRounds) {
-      // checkpoint BOTH star outputs: each is referenced twice downstream
-      // (join + grouped min), so without materialization every op would
-      // execute twice and lineage would still nest
-      val ls = mat(largeStar(edges))
-      val next = mat(smallStar(ls))
-      val nfp = fingerprint(next) // cheap scan of checkpointed blocks
+    while (!star && round < maxRounds) {
+      val (next, s) = largeStar(smallStar(edges), "cc:star")
       edges = next
-      converged = nfp == fp
-      fp = nfp
+      star = s
       round += 1
     }
 
@@ -1508,14 +1403,14 @@ object Curation {
     // the FIXPOINT is a star set. Labeling from a non-converged state
     // would emit conflicting multi-labels per doc (and a downstream
     // doc_id join would multiply corpus rows), so a cap hit is an error,
-    // not a result. 2·log₂(n) rounds are observed in practice, so the
+    // not a result. ~log₂(n) rounds are observed in practice, so the
     // default cap of 100 sits far above any real corpus (n ≈ 2⁵⁰).
-    if (!converged)
+    if (!star)
       throw new IllegalStateException(
         s"connected components did not converge within $maxRounds star " +
           s"rounds; raise maxRounds")
-    // fixpoint edge set = stars (node → component min); label the roots
-    // and the untouched singletons with themselves
+    // star set = leaf → root edges; label the roots and the untouched
+    // singletons with themselves
     val labeled = nodes.select(col("doc_id"))
       .join(edges.select(col("u").as("doc_id"), col("v").as("_root")),
         Seq("doc_id"), "left")
@@ -1567,11 +1462,11 @@ object Curation {
     * trainPct−1 → train, to trainPct+valPct−1 → val, rest → test.
     *
     * Scale shape: a pure projection over the `groups` relation (from
-    * [[dupGroups]]/[[dupGroupsAlternating]]) — zero additional shuffle
+    * [[dupGroups]]) — zero additional shuffle
     * at any corpus size; the group machinery is the whole cost.
     *
-    * @param groups (doc_id, dup_group) as produced by the dup-group
-    *               operators (singletons carry their own id) */
+    * @param groups (doc_id, dup_group) as produced by [[dupGroups]]
+    *               (singletons carry their own id) */
   def leakageSafeSplit(
       groups: DataFrame, trainPct: Int, valPct: Int): DataFrame = {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct < 100,

@@ -320,29 +320,30 @@ object CurationQueries {
       Curation.piiScrub(injected)
     },
 
-    // banded MinHash candidates (md5 family) -> 3 rounds of min-label
-    // propagation; every doc in the doubled corpus gets a dup_group
+    // banded MinHash candidates (md5 family) -> connected components;
+    // every doc in the doubled corpus gets a dup_group. The oracle is 3
+    // unrolled min-label rounds, which q_dedup_groups_cc's closure oracle
+    // shows reach the fixpoint on this graph
     "q_dedup_groups" -> { (s, dir) =>
       val d = docs(s, dir)
       val corpus = d.select("doc_id", "text").unionAll(trimmed(d))
       val cands = Dedup.minhashCandidates(
         corpus, k = 3, numHashes = 8, bands = 4, minEstJaccard = 0.5,
         oracleHashes = true)
-      Curation.dupGroups(corpus.select("doc_id"), cands, iters = 3)
+      Curation.dupGroups(corpus.select("doc_id"), cands)
     },
 
-    // same candidate graph, adversarial-diameter algorithm: alternating
-    // large-star/small-star CC (O(log n) rounds regardless of chain
-    // length). The oracle is algorithm-independent: a recursive closure
-    // computing TRUE connected components — so this entry also proves the
-    // 3-round propagation result above is the real fixpoint on this graph
+    // same candidate graph and operator, checked against an
+    // algorithm-independent oracle: a recursive closure computing TRUE
+    // connected components — so this entry also proves that the 3-round
+    // min-label oracle of q_dedup_groups equals the closure on this graph
     "q_dedup_groups_cc" -> { (s, dir) =>
       val d = docs(s, dir)
       val corpus = d.select("doc_id", "text").unionAll(trimmed(d))
       val cands = Dedup.minhashCandidates(
         corpus, k = 3, numHashes = 8, bands = 4, minEstJaccard = 0.5,
         oracleHashes = true)
-      Curation.dupGroupsAlternating(corpus.select("doc_id"), cands)
+      Curation.dupGroups(corpus.select("doc_id"), cands)
     },
 
     // representative selection after dup-grouping — the PRODUCTION keep
@@ -356,8 +357,7 @@ object CurationQueries {
       val cands = Dedup.minhashCandidates(
         corpus, k = 3, numHashes = 8, bands = 4, minEstJaccard = 0.5,
         oracleHashes = true)
-      val groups = Curation.dupGroupsAlternating(
-        corpus.select("doc_id"), cands)
+      val groups = Curation.dupGroups(corpus.select("doc_id"), cands)
       Curation.keepBestPerGroup(groups, Curation.byteLenScore(corpus))
     },
 
@@ -372,7 +372,7 @@ object CurationQueries {
         corpus, k = 3, numHashes = 8, bands = 4, minEstJaccard = 0.5,
         oracleHashes = true)
       Curation.leakageSafeSplit(
-        Curation.dupGroupsAlternating(corpus.select("doc_id"), cands),
+        Curation.dupGroups(corpus.select("doc_id"), cands),
         trainPct = 80, valPct = 10)
     },
 
@@ -1874,8 +1874,9 @@ object CurationQueries {
     },
 
     // the shared banded-MinHash CTE block, then 3 unrolled min-label
-    // rounds: label' = least(own, min over in-neighbors) — the exact
-    // iteration Curation.dupGroups runs
+    // rounds: label' = least(own, min over in-neighbors). On this graph
+    // the 3 rounds equal the connected-components closure that
+    // q_dedup_groups_cc's oracle computes
     "q_dedup_groups" -> {
       def round(n: Int): String = {
         val p = s"l${n - 1}"

@@ -325,7 +325,7 @@ object ScaleProbe {
         val chain = (0L until len.toLong).map(i => (i, i + 1))
           .toDF("doc_a", "doc_b")
         val ((labels, rounds), t) = time {
-          val r = graft.llm.Curation.dupGroupsAlternatingCounted(nodes, chain)
+          val r = graft.llm.Curation.dupGroupsCounted(nodes, chain)
           (r._1.filter(col("dup_group") === 0L).count(), r._2)
         }
         println(f"[cc chain len=$len%4d] rounds=$rounds%2d " +

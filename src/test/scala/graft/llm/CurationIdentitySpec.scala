@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** The corpus-curation tail returns the same rows whatever the physical
-  * layout: `Curation.paragraphDedup`, `Dedup.jaccardJoinExact` and
-  * `Dedup.jaccardRescore` at 1 and 7 shuffle partitions, with broadcast
+  * layout: `Curation.paragraphDedup`, `Dedup.jaccardJoinExact`,
+  * `Dedup.jaccardRescore` and `Curation.dupGroups` (over the candidates
+  * plus a long chain) at 1 and 7 shuffle partitions, with broadcast
   * joins disabled (every join sort-merge) and with adaptive partition
   * coalescing off all equal their output under the session defaults; the
   * exact join also equals a driver-side all-pairs Jaccard. */
@@ -41,13 +42,16 @@ class CurationIdentitySpec extends AnyFunSuite {
     out
   }
 
-  /** The three operators' outputs over the materialized corpus. */
-  private def outputs(docs: DataFrame, cands: DataFrame): Seq[(String, Seq[String])] =
+  /** The operators' outputs over the materialized corpus; `graph` is the
+    * candidate graph the connected components run over. */
+  private def outputs(docs: DataFrame, cands: DataFrame, graph: DataFrame)
+      : Seq[(String, Seq[String])] =
     Seq(
       "paragraphDedup" -> rows(Curation.paragraphDedup(docs, chunkSize = 8,
         threshold = 0.8)),
       "jaccardJoinExact" -> rows(Dedup.jaccardJoinExact(docs, 0.8)),
-      "jaccardRescore" -> rows(Dedup.jaccardRescore(docs, cands)))
+      "jaccardRescore" -> rows(Dedup.jaccardRescore(docs, cands)),
+      "dupGroups" -> rows(Curation.dupGroups(docs.select("doc_id"), graph)))
 
   test("paragraphDedup, jaccardJoinExact and jaccardRescore are " +
     "row-identical across shuffle partitions, join strategies and " +
@@ -57,14 +61,25 @@ class CurationIdentitySpec extends AnyFunSuite {
     val cands = Dedup.minhashCandidates(docs, minEstJaccard = 0.0)
       .localCheckpoint(true)
     PipelineCaches.clear()
-    val base = outputs(docs, cands)
+    // the candidates plus an 8-hop chain through the nine smallest doc
+    // ids: a propagation bounded to a few hops would label it partially
+    import s.implicits._
+    val chain = docs.select("doc_id").orderBy("doc_id").limit(9).collect()
+      .map(_.getLong(0)).toSeq
+    val graph = cands.select("doc_a", "doc_b")
+      .unionAll(chain.zip(chain.tail).toDF("doc_a", "doc_b"))
+      .localCheckpoint(true)
+    val base = outputs(docs, cands, graph)
     base.foreach { case (op, r) => assert(r.nonEmpty, s"$op returned no rows") }
     // the fixture exercises what each operator decides: paragraphs drop,
-    // near-copies pair up
+    // near-copies pair up, the whole chain joins its minimum's group
     assert(base.head._2.exists(r => r.split('|')(2).toLong > 0),
       "no paragraph dropped on the fixture")
+    val groups = base.last._2.map(_.split('|')).map(r => r(0).toLong -> r(1).toLong).toMap
+    assert(chain.forall(groups(_) == chain.head),
+      s"chain not labeled in full: ${chain.map(groups)}")
     for ((layout, conf) <- Layouts) withConf(s, conf) {
-      outputs(docs, cands).zip(base).foreach { case ((op, got), (_, want)) =>
+      outputs(docs, cands, graph).zip(base).foreach { case ((op, got), (_, want)) =>
         assert(got == want, s"$op differs under $layout")
       }
     }

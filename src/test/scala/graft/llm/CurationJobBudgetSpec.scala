@@ -12,22 +12,26 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** Spark jobs per call of the corpus-curation tail are a tracked budget:
-  * `Curation.paragraphDedup`, `Dedup.jaccardJoinExact` and
-  * `Dedup.jaccardRescore`, each counted from the call through the
-  * caller's write of its output (the noop sink), run under a job listener
-  * at `local[4]` on [[CurationIdentitySpec.corpus]], and
-  * must stay at or below their budgets.
+  * `Curation.paragraphDedup`, `Dedup.jaccardJoinExact`,
+  * `Dedup.jaccardRescore` and `Curation.dupGroups`, each counted from the
+  * call through the caller's write of its output (the noop sink), run
+  * under a job listener at `local[4]` on [[CurationIdentitySpec.corpus]],
+  * and must stay at or below their budgets.
   *
   * The parent of this budget, measured with this spec, ran
   * paragraphDedup in 37 jobs, jaccardJoinExact in 22 and jaccardRescore
-  * in 8, and its rescore plan held the shingle projection three times. */
+  * in 8, and its rescore plan held the shingle projection three times.
+  * The parent of the `dupGroups` budget, measured the same way, ran it in
+  * 19 jobs as three rounds of min-label propagation, which can stop short
+  * of the components. */
 class CurationJobBudgetSpec extends AnyFunSuite {
   import CurationIdentitySpec.corpus
 
   private val StepKey = "graft.spec.step"
 
   private val Budgets = Seq(
-    "paragraph_dedup" -> 16, "jaccard_join_exact" -> 6, "jaccard_rescore" -> 3)
+    "paragraph_dedup" -> 16, "jaccard_join_exact" -> 6, "jaccard_rescore" -> 3,
+    "dup_groups" -> 12)
 
   /** Records (step, job description) for every job started. */
   private final class JobLog extends SparkListener {
@@ -63,6 +67,7 @@ class CurationJobBudgetSpec extends AnyFunSuite {
         threshold = 0.8))
       step("jaccard_join_exact")(Dedup.jaccardJoinExact(docs, 0.8))
       step("jaccard_rescore")(Dedup.jaccardRescore(docs, cands))
+      step("dup_groups")(Curation.dupGroups(docs.select("doc_id"), cands))
       ListenerBusDrain(sc)
       assert(sc.getLocalProperty("spark.job.description") == "caller")
 
@@ -79,6 +84,7 @@ class CurationJobBudgetSpec extends AnyFunSuite {
         Set("para:chunks", "minhash:buckets", "caller"))
       assert(descriptions("jaccard_join_exact") == Set("caller"))
       assert(descriptions("jaccard_rescore") == Set("caller"))
+      assert(descriptions("dup_groups") == Set("cc:edges", "cc:star", "caller"))
     } finally {
       sc.removeSparkListener(log)
       sc.setJobDescription(null)

@@ -11,8 +11,8 @@ import graft.SparkTestSession
   *  - seqPack partitions each shard's token stream exactly — offsets are a
   *    gap-free cumulative sum in doc_id order and chunk spans follow from
   *    the offsets arithmetically;
-  *  - dupGroups with enough rounds equals brute-force connected components
-  *    (the min-label fixpoint IS the component minimum). */
+  *  - dupGroups equals brute-force connected components: union-find, and
+  *    the min-label fixpoint (which IS the component minimum). */
 class CurationPropertySpec extends AnyFunSuite {
 
   private val docsGen: Gen[List[String]] = Gen.listOfN(24,
@@ -82,41 +82,6 @@ class CurationPropertySpec extends AnyFunSuite {
   private val edgesGen: Gen[List[(Long, Long)]] = Gen.listOfN(12,
     Gen.zip(Gen.choose(0L, 7L), Gen.choose(0L, 7L)))
 
-  test("property_dupgroups_fixpoint_equals_connected_components") {
-    val s = SparkTestSession.spark
-    import s.implicits._
-    val prop = Prop.forAll(edgesGen) { rawEdges =>
-      val nodes = (0L to 7L).toList
-      val edges = rawEdges.filter(p => p._1 != p._2)
-        .map { case (a, b) => (a.min(b), a.max(b)) }.distinct
-      // brute force: iterate min-label to fixpoint driver-side
-      val adj = (edges ++ edges.map(_.swap)).groupBy(_._1)
-        .map { case (k, v) => k -> v.map(_._2) }
-      var labels = nodes.map(n => n -> n).toMap
-      var changed = true
-      while (changed) {
-        val next = labels.map { case (n, l) =>
-          n -> (l +: adj.getOrElse(n, Nil).map(labels)).min
-        }
-        changed = next != labels
-        labels = next
-      }
-      // 8 nodes: diameter < 8, so 8 rounds certainly reach the fixpoint
-      val got = Curation.dupGroups(
-        nodes.toDF("doc_id"),
-        edges.toDF("doc_a", "doc_b"), iters = 8)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      graft.llm.PipelineCaches.clear()
-      if (got != labels) {
-        println(s"COUNTEREXAMPLE edges=$edges got=$got expected=$labels")
-      }
-      got == labels
-    }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(4), prop)
-    assert(result.passed, result.status.toString)
-  }
-
   test("property_alternating_stars_equal_connected_components") {
     val s = SparkTestSession.spark
     import s.implicits._
@@ -133,14 +98,27 @@ class CurationPropertySpec extends AnyFunSuite {
         if (ra != rb) parent(ra.max(rb)) = ra.min(rb)
       }
       val expected = nodes.map(n => n -> find(n)).toMap
-      val got = Curation.dupGroupsAlternating(
+      // ...and the min-label fixpoint, iterated driver-side
+      val adj = (edges ++ edges.map(_.swap)).groupBy(_._1)
+        .map { case (k, v) => k -> v.map(_._2) }
+      var labels = nodes.map(n => n -> n).toMap
+      var changed = true
+      while (changed) {
+        val next = labels.map { case (n, l) =>
+          n -> (l +: adj.getOrElse(n, Nil).map(labels)).min
+        }
+        changed = next != labels
+        labels = next
+      }
+      val got = Curation.dupGroups(
         nodes.toDF("doc_id"), edges.toDF("doc_a", "doc_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       graft.llm.PipelineCaches.clear()
-      if (got != expected) {
-        println(s"COUNTEREXAMPLE edges=$edges got=$got expected=$expected")
+      if (got != expected || got != labels) {
+        println(s"COUNTEREXAMPLE edges=$edges got=$got expected=$expected " +
+          s"min-label=$labels")
       }
-      got == expected
+      got == expected && got == labels
     }
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(4), prop)
@@ -157,16 +135,15 @@ class CurationPropertySpec extends AnyFunSuite {
     val chain = (0L until 64L).map(i => (i, i + 1))
     val other = Seq((100L, 101L), (101L, 102L))
     val nodes = ((0L to 64L) ++ Seq(100L, 101L, 102L, 999L)).toList
-    val (labels, rounds) = Curation.dupGroupsAlternatingCounted(
+    val (labels, rounds) = Curation.dupGroupsCounted(
       nodes.toDF("doc_id"), (chain ++ other).toDF("doc_a", "doc_b"))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     graft.llm.PipelineCaches.clear()
     assert((0L to 64L).forall(got(_) == 0L), s"chain not collapsed: $got")
     assert(Seq(100L, 101L, 102L).forall(got(_) == 100L))
     assert(got(999L) == 999L)
-    // the logarithmic-rounds claim, pinned: log2(64)+1 star rounds plus
-    // the fixpoint-proof round (ScaleProbe measures 7 at len=64, growing
-    // +2 per 4x chain length)
+    // the logarithmic-rounds claim, pinned: ScaleProbe's chain takes 6
+    // star rounds at len=64, growing +2 per 4x chain length
     assert(rounds <= 10, s"expected O(log n) rounds for a 64-chain, got $rounds")
   }
 
@@ -177,9 +154,9 @@ class CurationPropertySpec extends AnyFunSuite {
     // would label docs with several conflicting groups
     val chain = (0L until 16L).map(i => (i, i + 1))
     val e = intercept[IllegalStateException] {
-      Curation.dupGroupsAlternating(
+      Curation.dupGroupsCounted(
         (0L to 16L).toList.toDF("doc_id"),
-        chain.toDF("doc_a", "doc_b"), maxRounds = 1)
+        chain.toDF("doc_a", "doc_b"), maxRounds = 1)._1
         .collect()
     }
     graft.llm.PipelineCaches.clear()
@@ -303,7 +280,7 @@ class CurationPropertySpec extends AnyFunSuite {
     try {
       val nodes = (0L to 10L).toList.toDF("doc_id")
       val edges = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("doc_a", "doc_b")
-      val got = Curation.dupGroupsAlternating(nodes, edges)
+      val got = Curation.dupGroups(nodes, edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 4L,
         5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 8L, 9L -> 9L, 10L -> 10L))

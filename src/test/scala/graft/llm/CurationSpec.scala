@@ -463,12 +463,13 @@ class CurationSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val nodes = (0L to 5L).toDF("doc_id")
-    // stars of diameter 2: fixpoint after round 1, detected in round 2
+    // stars already rooted at their minimum: a star set from the start,
+    // so no round runs
     val cands = Seq((0L, 1L), (0L, 2L), (3L, 4L)).toDF("doc_a", "doc_b")
-    // a generous round budget must not change the converged answer
-    val g = Curation.dupGroups(nodes, cands, iters = 50)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (groups, rounds) = Curation.dupGroupsCounted(nodes, cands)
+    val g = groups.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(g == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L, 5L -> 5L))
+    assert(rounds == 0)
   }
 
   test("dup groups: chain and star components converge to min label") {
@@ -479,32 +480,11 @@ class CurationSpec extends AnyFunSuite {
     val cands = Seq(
       (0L, 1L), (1L, 2L), (2L, 3L),
       (4L, 5L), (4L, 6L)).toDF("doc_a", "doc_b")
-    val g = Curation.dupGroups(nodes, cands, iters = 3)
+    val g = Curation.dupGroups(nodes, cands)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 3L).forall(g(_) == 0L))
     assert((4L to 6L).forall(g(_) == 4L))
     assert(g(7L) == 7L)
-  }
-
-  test("dup groups surface non-convergence on an under-budgeted chain") {
-    val s = spark
-    import s.implicits._
-    val nodes = (0L to 4L).toDF("doc_id")
-    // 5-chain 0-1-2-3-4: needs 4 propagation hops; iters=1 runs only the
-    // unchecked final round, so convergence cannot be verified
-    val cands = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L))
-      .toDF("doc_a", "doc_b")
-    val (g1, ok1) = Curation.dupGroupsChecked(nodes, cands, iters = 1)
-    assert(!ok1, "iters=1 leaves no room for a convergence check")
-    // ...and the partial labels really are partial: the far end of the
-    // chain has not received the min label yet
-    val m1 = g1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(m1(4L) != 0L)
-    // a sufficient budget verifies the fixpoint and labels the whole chain
-    val (g2, ok2) = Curation.dupGroupsChecked(nodes, cands, iters = 10)
-    assert(ok2, "a checked zero-changed round must report verified")
-    val m2 = g2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((0L to 4L).forall(m2(_) == 0L))
   }
 
   test("seq packing: contiguous shard-local offsets, docs span chunk cuts") {
@@ -678,7 +658,7 @@ class CurationSpec extends AnyFunSuite {
     val corpus = d.unionAll(copies)
     val cands = Dedup.minhashCandidates(corpus, k = 3, numHashes = 8, bands = 4,
       minEstJaccard = 0.5)
-    val g = Curation.dupGroups(corpus.select("doc_id"), cands, iters = 3)
+    val g = Curation.dupGroups(corpus.select("doc_id"), cands)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // every identical copy lands in its original's group
     (0L until 10L).foreach { id => assert(g(id + 100000L) == g(id)) }
