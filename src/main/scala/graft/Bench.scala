@@ -132,7 +132,6 @@ object Bench {
     // policy is recorded in BASELINE.md next to each floor.
     val heavyContended = Set("q_paragraph_dedup", "q_paragraph_incremental",
       "q_stream_paragraph", "q_paragraph_retire",
-      "q_salted_join_rewrite_full",
       "q_containment_incremental", "q_containment_join_exact",
       "q_containment_recall_audit", "q_lsh_recall_audit",
       "q_stream_corpus_report", "q_stream_containment",

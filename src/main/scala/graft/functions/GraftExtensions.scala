@@ -22,9 +22,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach(ext.injectFunction)
     // opt-in AQP rewrite: inert until spark.graft.cosineJoin.rewrite=true
     ext.injectOptimizerRule(graft.plans.CosineJoinRewrite(_))
-    // opt-in stats-driven skew treatment: inert until
-    // spark.graft.skewJoin.rewrite=true
-    ext.injectOptimizerRule(graft.plans.SkewJoinRewrite(_))
     // opt-in bucketed range-join rewrite: inert until
     // spark.graft.rangeJoin.rewrite=true
     ext.injectOptimizerRule(graft.plans.RangeJoinRewrite(_))
@@ -123,7 +120,6 @@ object GraftExtensions {
         .registerFunction(ident, info, builder)
     }
     Seq(graft.plans.CosineJoinRewrite(spark),
-        graft.plans.SkewJoinRewrite(spark),
         graft.plans.RangeJoinRewrite(spark)).foreach { rule =>
       if (!spark.experimental.extraOptimizations.contains(rule))
         spark.experimental.extraOptimizations =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -20,38 +20,104 @@ object EventQueries {
     Tables.register(s, dir); s.table("events")
   }
 
-  /** Shared conf scaffold of the skew-rewrite entries (inner / outer /
-    * anti / multi / full / sampled — ONE copy so a
-    * `spark.graft.skewJoin.*` knob is threaded once, not six times):
-    * enable the rule at the fixture thresholds (targetRows 200 salts
-    * the planted hot key at every fixture scale), disable
-    * auto-broadcast (the fixture sides are tiny and the rule CORRECTLY
-    * declines joins the planner would broadcast — the 100 TB case this
-    * simulates has both sides far above the threshold), optionally set
-    * the sampled-diagnosis rate, and restore every conf on every
-    * exit. */
-  private def withSkewRewriteConfs[T](s: SparkSession,
-      sampleRate: Option[String] = None,
-      targetRows: String = "200")(body: => T): T = {
-    graft.functions.GraftExtensions.register(s)
-    val prevOn = s.conf.get("spark.graft.skewJoin.rewrite", "false")
-    val prevTarget = s.conf.get("spark.graft.skewJoin.targetRows", "5000000")
-    val prevTop = s.conf.get("spark.graft.skewJoin.topN", "20")
-    val prevRate = s.conf.get("spark.graft.skewJoin.sampleRate", "1.0")
-    val prevBcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.graft.skewJoin.rewrite", "true")
-    s.conf.set("spark.graft.skewJoin.targetRows", targetRows)
-    s.conf.set("spark.graft.skewJoin.topN", "5")
-    sampleRate.foreach(r => s.conf.set("spark.graft.skewJoin.sampleRate", r))
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+  /** Fixture-scale size for adaptive execution's skew-join split: the
+    * planted hot key's partition is a few KB at sf0.001, so Spark's
+    * 256 MB default threshold would never call it skewed. */
+  private val SkewSplitBytes = "1KB"
+
+  /** Shuffle partitions of the planted-skew joins, whatever the
+    * session's own: AQE calls a partition skewed only above 5× the
+    * median partition, and the hot key's rows compress well in the
+    * shuffle, so the hot partition is about 3× the median in bytes at
+    * 4 partitions and does not split at 16 (JoinSkewSpec's fixture);
+    * at 20 it splits on every fixture. More partitions cost a task
+    * each. */
+  private val SkewJoinPartitions = "20"
+
+  /** Map outputs of the spread fact side. AQE splits a skewed partition
+    * at map-output granularity, so the single-file events scan (one map
+    * task) cannot be split, and 4 map outputs cut the hot task to about
+    * a quarter; a fixed count, not the session's parallelism, so the
+    * split fires at any core count. Kept small because each map task
+    * writes one file per shuffle partition. */
+  private val FactMapOutputs = 4
+
+  /** Shared conf scaffold of the planted-skew join entries (the
+    * `q_salted_join*` family): Spark's own skewed-partition threshold,
+    * the advisory size AQE splits a skewed partition toward, and the
+    * minimum partition size coalescing may leave, all set to
+    * [[SkewSplitBytes]]; [[SkewJoinPartitions]] shuffle partitions;
+    * auto-broadcast off, because the fixture dimension is tiny and a
+    * broadcast join has no shuffle to split — the 100 TB case this
+    * simulates has both sides far above the threshold. Every conf is
+    * restored on exit. */
+  private[graft] def withSkewSplitConfs[T](s: SparkSession)(body: => T): T = {
+    val confs = Seq(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+      .map(_ -> SkewSplitBytes) ++ Seq(
+      "spark.sql.shuffle.partitions" -> SkewJoinPartitions,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally {
-      s.conf.set("spark.graft.skewJoin.rewrite", prevOn)
-      s.conf.set("spark.graft.skewJoin.targetRows", prevTarget)
-      s.conf.set("spark.graft.skewJoin.topN", prevTop)
-      s.conf.set("spark.graft.skewJoin.sampleRate", prevRate)
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
+  }
+
+  /** The planted-hot-key events relation of the skew-join entries:
+    * every 3rd event lands on k = 0, the rest spread over ≤ 500 user
+    * buckets; `extra` columns ride along after k. */
+  private def plantedHotKey(s: SparkSession, dir: String,
+      extra: Column*): DataFrame =
+    events(s, dir).select(Seq(col("event_id"),
+      when(col("event_id") % 3 === 0, 0L)
+        .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k")) ++
+      extra :+ col("value"): _*)
+
+  /** The fact side hash-spread by `event_id` over [[FactMapOutputs]]
+    * partitions, so the join's map stage has that many map outputs. */
+  private def spreadFact(e: DataFrame): DataFrame =
+    e.repartition(FactMapOutputs, col("event_id"))
+
+  /** Runs a planted-skew join under [[withSkewSplitConfs]] and returns
+    * it materialized (the confs must be in force while it executes).
+    * Unless `requireSplit` is false, fails when the final adaptive
+    * plan has no shuffle read with a skew-split partition, so an entry
+    * whose split silently stopped firing cannot pass vacuously. AQE
+    * splits only at map-output granularity and only between two plain
+    * shuffle reads, so callers spread the fact side ([[spreadFact]])
+    * and materialize the dimension side. The result is stored
+    * serialized: deserialized storage estimates each partition's size
+    * by sampling its rows, a per-task cost that doubled the join
+    * stage's CPU time at sf0.1. */
+  private def aqeSkewJoin(s: SparkSession, requireSplit: Boolean = true)(
+      join: => DataFrame): DataFrame = withSkewSplitConfs(s) {
+    val out = join
+    val materialized = out.localCheckpoint(true,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val plan = out.queryExecution.executedPlan
+    require(!requireSplit || skewSplitReads(plan) > 0,
+      s"AQE did not split the planted hot key's partition:\n$plan")
+    require(!plan.toString.contains("CartesianProduct") &&
+      !plan.toString.contains("BroadcastNestedLoopJoin"),
+      s"a planted-skew equi-join must not plan as a cartesian:\n$plan")
+    materialized
+  }
+
+  /** Shuffle reads in an executed (final adaptive) plan that carry a
+    * skew-split partition. */
+  private[graft] def skewSplitReads(
+      plan: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanHelper}
+    object Walk extends AdaptiveSparkPlanHelper
+    Walk.collect(plan) {
+      case r: AQEShuffleReadExec if r.hasSkewedPartition => r
+    }.size
   }
 
   /** Deterministic micro-batch replay through a real Structured Streaming
@@ -197,6 +263,20 @@ object EventQueries {
     }
   }
 
+  /** The planted-hot-key inner join shared by q_salted_join,
+    * q_salted_join_rewrite and q_salted_join_rewrite_sampled: the
+    * spread fact side joined to its materialized per-key count table
+    * under [[aqeSkewJoin]]. */
+  private def plantedInnerJoin(s: SparkSession, dir: String): DataFrame = {
+    val e = plantedHotKey(s, dir)
+    val r = e.groupBy("k").agg(count(lit(1)).cast("bigint").as("n_r"))
+      .localCheckpoint(true)
+    aqeSkewJoin(s) {
+      spreadFact(e).join(r, Seq("k"))
+        .select("event_id", "k", "value", "n_r")
+    }
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // join-skew planning card for the events × events self-join on
     // user_id: top-20 hot keys by output rows (n_l × n_r, the salting
@@ -239,216 +319,84 @@ object EventQueries {
         targetRows = 50000L, topN = 20)
     },
 
-    // the salting TREATMENT (r13 verdict task 3, the diagnosis→
-    // treatment pairing): a planted hot key (every 3rd event lands on
-    // k=0, the rest spread over ≤500 user buckets) joined to its
-    // per-key count table through the salted path — hot keys' left
-    // rows split across salt sub-keys, right rows replicated, cold
-    // keys through the plain join, the two paths unioned. The oracle
-    // is the PLAIN join, so the hash gate is the result-identity proof
-    "q_salted_join" -> { (s, dir) =>
-      val e = events(s, dir).select(col("event_id"),
-        when(col("event_id") % 3 === 0, 0L)
-          .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k"),
-        col("value"))
-      val r = e.groupBy("k").agg(count(lit(1)).cast("bigint").as("n_r"))
-      // targetRows 200: the hot key salts at every fixture scale
-      // (sf0.001 ~333 rows -> salt 2; sf0.1 ~33k -> salt 167)
-      graft.plans.JoinSkew.saltedJoin(e, r, "k",
-        targetRows = 200L, topN = 5)
+    // the planted-skew join family: a planted hot key (every 3rd event
+    // on k = 0) joined to a per-key dimension as the PLAIN join, with
+    // AQE's skew split (OptimizeSkewedJoin) breaking up the hot
+    // partition at fixture thresholds ([[aqeSkewJoin]] fails if the
+    // split did not fire; measurements in BASELINE.md "AQE skew split
+    // vs the salted rewrite"). The oracles are the plain joins, so the
+    // hash gate proves the split result-identical every round
+    "q_salted_join" -> { (s, dir) => plantedInnerJoin(s, dir) },
+    "q_salted_join_rewrite" -> { (s, dir) => plantedInnerJoin(s, dir) },
+    "q_salted_join_rewrite_sampled" -> { (s, dir) =>
+      plantedInnerJoin(s, dir)
     },
 
-    // the salting treatment as ENGINE BEHAVIOR (r14 verdict task 2): the
-    // SAME planted-hot-key join written as a PLAIN inner join, salted
-    // automatically by the conf-gated SkewJoinRewrite optimizer rule
-    // (plans/SkewJoinRewrite.scala) — the rule runs the count-table
-    // diagnosis at plan time, finds the hot key tripping targetRows=200,
-    // and swaps in the salted decomposition. The oracle is the plain
-    // join, so the hash gate re-proves the rewrite's result identity
-    // every round. auto-broadcast is disabled while the conf is on
-    // because the fixture sides are tiny and the rule (correctly)
-    // declines to salt a join the planner would broadcast — the 100 TB
-    // case this simulates has both sides far above the threshold. The
-    // entry hard-fails if the rewrite did not fire and eagerly
-    // materializes before the confs restore.
-    "q_salted_join_rewrite" -> { (s, dir) =>
-      val e = events(s, dir).select(col("event_id"),
-        when(col("event_id") % 3 === 0, 0L)
-          .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k"),
-        col("value"))
-      val r = e.groupBy("k").agg(count(lit(1)).cast("bigint").as("n_r"))
-      withSkewRewriteConfs(s) {
-        val out = e.join(r, Seq("k"))
-          .select("event_id", "k", "value", "n_r")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_skew"),
-          "skew-join rewrite did not fire; the entry would not exercise it")
-        require(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-          "skew-join rewrite must not introduce a cartesian")
-        out.localCheckpoint(true)
-      }
-    },
-
-    // the salted rewrite on the production ENRICHMENT shape (r15
-    // verdict task 4): the same planted-hot-key stream LEFT-joining a
-    // registry that is MISSING every key ≡ 2 (mod 5), written as a
-    // plain left join and salted automatically. The decomposition's
-    // left-outer soundness (preserved side = salted side; unmatched
-    // rows null-fill exactly once through whichever path their key
-    // took) is re-proven by the plain LEFT JOIN oracle, null-filled
-    // n_r rows included
+    // the ENRICHMENT shape: the planted-hot-key stream LEFT-joining a
+    // registry MISSING every key ≡ 2 (mod 5); the plain LEFT JOIN
+    // oracle covers the null-filled n_r rows
     "q_salted_join_rewrite_outer" -> { (s, dir) =>
-      val e = events(s, dir).select(col("event_id"),
-        when(col("event_id") % 3 === 0, 0L)
-          .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k"),
-        col("value"))
+      val e = plantedHotKey(s, dir)
       val r = e.filter(col("k") % 5 =!= 2)
         .groupBy("k").agg(count(lit(1)).cast("bigint").as("n_r"))
-      withSkewRewriteConfs(s) {
-        val out = e.join(r, Seq("k"), "left")
+        .localCheckpoint(true)
+      aqeSkewJoin(s) {
+        spreadFact(e).join(r, Seq("k"), "left")
           .select("event_id", "k", "value", "n_r")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_skew"),
-          "left-outer skew rewrite did not fire; the entry would not " +
-            "exercise it")
-        require(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-          "skew-join rewrite must not introduce a cartesian")
-        out.localCheckpoint(true)
       }
     },
 
-    // the salted rewrite on the production FILTER shape (r16 — semi/
-    // anti complete the soundly-decomposable join set): the planted-
-    // hot-key stream anti-joined against a blocklist that CONTAINS the
-    // hot key (the pathological key is usually exactly why a key gets
-    // blocked) plus every key ≡ 0 (mod 7) — written as a plain
-    // left_anti join and salted automatically. The existence test per
-    // left row equals the plain join's because the replication puts a
-    // blocked key's row in every salt bucket; the oracle is the plain
-    // NOT-EXISTS, so the hash gate re-proves the identity every round
+    // the FILTER shape: the planted-hot-key stream anti-joined against a
+    // blocklist that CONTAINS the hot key plus every key ≡ 0 (mod 7);
+    // the oracle is the plain NOT EXISTS
     "q_salted_join_rewrite_anti" -> { (s, dir) =>
-      val e = events(s, dir).select(col("event_id"),
-        when(col("event_id") % 3 === 0, 0L)
-          .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k"),
-        col("value"))
+      val e = plantedHotKey(s, dir)
       val block = e.filter(col("k") % 7 === 0).select("k").distinct()
-      withSkewRewriteConfs(s) {
-        val out = e.join(block, Seq("k"), "left_anti")
+        .localCheckpoint(true)
+      // the spread is checkpointed here: the optimizer pushes a left
+      // anti join below a repartition, which would leave the join
+      // reading the one-task scan. A lazy checkpoint runs the spread's
+      // shuffle now and stores its rows as the join's map stage reads
+      // them, a job fewer than an eager one
+      val spread = spreadFact(e).localCheckpoint(false)
+      aqeSkewJoin(s) {
+        spread.join(block, Seq("k"), "left_anti")
           .select("event_id", "k", "value")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_skew"),
-          "anti skew rewrite did not fire; the entry would not " +
-            "exercise it")
-        require(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-          "skew-join rewrite must not introduce a cartesian")
-        out.localCheckpoint(true)
       }
     },
 
-    // the salted rewrite on a COMPOSITE key (r16 verdict task 3): the
-    // production (tenant_id, day)-keyed join shape — a planted hot
-    // TUPLE (k=0, day=7) on every 3rd event, the rest spread over
-    // (≤500 keys × 5 days) — written as a plain two-equality join and
-    // salted automatically. The tuple-wise decomposition (tag joins
-    // and the hot path's USING list carry every key column) is
-    // re-proven by the plain two-key join oracle every round
+    // a COMPOSITE key, the (tenant_id, day) production shape: a planted
+    // hot TUPLE (k = 0, day = 7) on every 3rd event, the rest spread
+    // over (≤ 500 keys × 5 days); the oracle is the plain two-key join
     "q_salted_join_rewrite_multi" -> { (s, dir) =>
-      val e = events(s, dir).select(col("event_id"),
-        when(col("event_id") % 3 === 0, 0L)
-          .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k"),
+      val e = plantedHotKey(s, dir,
         when(col("event_id") % 3 === 0, 7L)
-          .otherwise(pmod(col("event_id"), lit(5L))).as("day"),
-        col("value"))
+          .otherwise(pmod(col("event_id"), lit(5L))).as("day"))
       val r = e.groupBy("k", "day")
-        .agg(count(lit(1)).cast("bigint").as("n_r"))
-      withSkewRewriteConfs(s) {
-        val out = e.join(r, Seq("k", "day"))
+        .agg(count(lit(1)).cast("bigint").as("n_r")).localCheckpoint(true)
+      aqeSkewJoin(s) {
+        spreadFact(e).join(r, Seq("k", "day"))
           .select("event_id", "k", "day", "value", "n_r")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_skew"),
-          "composite-key skew rewrite did not fire; the entry would " +
-            "not exercise it")
-        require(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-          "skew-join rewrite must not introduce a cartesian")
-        out.localCheckpoint(true)
       }
     },
 
-    // the salted rewrite composing FULL OUTER (r16 verdict task 2):
-    // the planted-hot-key stream FULL-joined to a registry missing
-    // every key ≡ 2 (mod 5) and carrying a planted RIGHT-ONLY pile
-    // (k=1000, one row per event_id ≡ 0 (mod 7)) — so BOTH legs of
-    // the composition trip: the left-outer leg salts the left pile,
-    // the flipped-anti leg salts the right-only pile and null-fills
-    // it on the left. The oracle is the plain FULL JOIN with the
-    // coalesced key, so the hash gate re-proves the composition's
-    // identity (matched + left-unmatched + right-unmatched) every round
+    // FULL OUTER: the planted-hot-key stream FULL-joined to a registry
+    // missing every key ≡ 2 (mod 5) and carrying a planted RIGHT-ONLY
+    // pile (k = 1000, one row per event_id ≡ 0 (mod 7)). AQE does not
+    // split full outer joins, so this entry pins only result identity
+    // (matched + left-unmatched + right-unmatched rows) against the
+    // plain FULL JOIN oracle; both sides are materialized, the
+    // production reconciliation shape of two stored tables
     "q_salted_join_rewrite_full" -> { (s, dir) =>
-      // both sides CHECKPOINTED before the join: the composition's two
-      // legs (plus their two diagnoses) read each side several times,
-      // and the production full-outer reconciliation shape joins two
-      // STORED tables — without this the entry times the fixture's
-      // groupBy lineage ~7x instead of the treatment (the r16
-      // persist-what-the-machinery-rereads discipline)
-      val e = events(s, dir).select(col("event_id"),
-        when(col("event_id") % 3 === 0, 0L)
-          .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k"),
-        col("value")).localCheckpoint(true)
+      val e = plantedHotKey(s, dir).localCheckpoint(true)
       val r = e.filter(col("k") % 5 =!= 2)
         .groupBy("k").agg(count(lit(1)).cast("bigint").as("n_r"))
         .unionAll(events(s, dir).filter(col("event_id") % 7 === 0)
           .select(lit(1000L).as("k"),
             col("event_id").cast("long").as("n_r")))
         .localCheckpoint(true)
-      withSkewRewriteConfs(s) {
-        val out = e.join(r, Seq("k"), "full")
-          .select("event_id", "k", "value", "n_r")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_skew"),
-          "full-outer skew composition did not fire; the entry would " +
-            "not exercise it")
-        require(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-          "skew-join rewrite must not introduce a cartesian")
-        out.localCheckpoint(true)
-      }
-    },
-
-    // the salted rewrite under the SAMPLED diagnosis (r16 verdict task
-    // 1, the rewrite's first-run adoption cost at 100 TB): the same
-    // planted-hot-key inner join as q_salted_join_rewrite, but the
-    // plan-time key counts come from the deterministic full-row-hash
-    // sample (priced by 3-sigma LOWER bounds, pile-aware pricing)
-    // instead of two full scans. Rate 0.25 / targetRows 100 so the
-    // sample statistically PROVES the pile at every fixture scale —
-    // the sf0.001 audit fixture's ~334-row hot pile needs
-    // (c - 3*sqrt(c))/rate > targetRows, which a production-grade
-    // 1% rate can only clear on piles >= ~100k rows (SkewProbe's diag
-    // mode carries that evidence). The oracle is the SAME plain join —
-    // a green hash proves the diagnosis mode cannot touch result
-    // identity, exactly the claim that makes sampling safe
-    "q_salted_join_rewrite_sampled" -> { (s, dir) =>
-      val e = events(s, dir).select(col("event_id"),
-        when(col("event_id") % 3 === 0, 0L)
-          .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k"),
-        col("value"))
-      val r = e.groupBy("k").agg(count(lit(1)).cast("bigint").as("n_r"))
-      withSkewRewriteConfs(s, sampleRate = Some("0.25"),
-          targetRows = "100") {
-        val out = e.join(r, Seq("k"))
-          .select("event_id", "k", "value", "n_r")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_skew"),
-          "sampled skew diagnosis did not fire; the entry would not " +
-            "exercise it")
-        require(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-          "skew-join rewrite must not introduce a cartesian")
-        out.localCheckpoint(true)
+      aqeSkewJoin(s, requireSplit = false) {
+        e.join(r, Seq("k"), "full").select("event_id", "k", "value", "n_r")
       }
     },
 
@@ -1102,8 +1050,8 @@ object EventQueries {
         |    AS prob
         |FROM c""".stripMargin,
 
-    // algorithm-independent oracle: the PLAIN inner join — the salted
-    // union (hot sub-key path + cold path) must emit exactly this set
+    // algorithm-independent oracle: the PLAIN inner join — the
+    // skew-split plan must emit exactly this set
     "q_salted_join" ->
       """WITH l AS (
         |  SELECT event_id,
@@ -1115,8 +1063,7 @@ object EventQueries {
         |SELECT l.event_id, l.k, l.value, r.n_r
         |FROM l JOIN r USING (k)""".stripMargin,
 
-    // identical plain-join oracle: the optimizer-rule path must emit
-    // exactly the same set as the library-call path above
+    // identical plain-join oracle
     "q_salted_join_rewrite" ->
       """WITH l AS (
         |  SELECT event_id,
@@ -1128,8 +1075,7 @@ object EventQueries {
         |SELECT l.event_id, l.k, l.value, r.n_r
         |FROM l JOIN r USING (k)""".stripMargin,
 
-    // identical plain LEFT JOIN oracle: the optimizer-rule path must
-    // emit exactly the plain left join's set, null-filled rows included
+    // identical plain LEFT JOIN oracle, null-filled rows included
     "q_salted_join_rewrite_outer" ->
       """WITH l AS (
         |  SELECT event_id,
@@ -1155,8 +1101,7 @@ object EventQueries {
         |FROM l WHERE NOT EXISTS (SELECT 1 FROM b WHERE b.k = l.k)"""
         .stripMargin,
 
-    // identical plain two-key join oracle: the composite (tuple-keyed)
-    // rewrite path must emit exactly the plain AND-equality join's set
+    // identical plain two-key join oracle
     "q_salted_join_rewrite_multi" ->
       """WITH l AS (
         |  SELECT event_id,
@@ -1173,8 +1118,7 @@ object EventQueries {
 
     // identical plain FULL JOIN oracle with the coalesced key: matched
     // rows, left-unmatched null-fills (keys ≡ 2 mod 5), and the planted
-    // right-only pile (k = 1000) null-filled on the left must all hash
-    // through the composed (left-outer ∪ flipped-anti) path unchanged
+    // right-only pile (k = 1000) null-filled on the left
     "q_salted_join_rewrite_full" ->
       """WITH l AS (
         |  SELECT event_id,
@@ -1190,9 +1134,7 @@ object EventQueries {
         |SELECT l.event_id, COALESCE(l.k, r.k) AS k, l.value, r.n_r
         |FROM l FULL JOIN r ON l.k = r.k""".stripMargin,
 
-    // identical plain-join oracle AGAIN for the sampled-diagnosis
-    // entry: the diagnosis mode (full scan vs deterministic 5% hash
-    // sample) must be invisible in the result set
+    // identical plain-join oracle again
     "q_salted_join_rewrite_sampled" ->
       """WITH l AS (
         |  SELECT event_id,

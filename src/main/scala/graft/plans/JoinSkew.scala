@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Join-skew diagnostic card — the planning read a 100 TB engineer wants
   * BEFORE running a many-to-many join: per hot key, how many rows each
@@ -31,10 +30,10 @@ object JoinSkew {
     * six-digit salt whose only effect is replicating the right side
     * that many times (measured: a 1×333k key at targetRows 200 priced
     * salt 1667 and exploded the replicated side to 555M rows). Keys
-    * with salt 1 need nothing; the ones above are exactly the keys a
-    * salted-join rewrite (or AQE's skew split, whose thresholds this
-    * card lets you SET) must replicate. Same count-table-only cost
-    * envelope as the skew card.
+    * with salt 1 need nothing; the ones above are the piles AQE's skew
+    * split (whose thresholds this card lets you SET) or a hand-salted
+    * join must break up. Same count-table-only cost envelope as the
+    * skew card.
     */
   def saltingPlan(left: DataFrame, right: DataFrame, keyCol: String,
       targetRows: Long, topN: Int = 20): DataFrame = {
@@ -46,41 +45,6 @@ object JoinSkew {
           col("n_left")).cast("bigint").as("salt"))
   }
 
-  /** [[saltingPlan]] for PRESERVED-side joins (left outer / semi /
-    * anti): prices each key at `greatest(out_rows, n_left)` and ranks
-    * hot keys by that price. `out_rows = n_left × n_right` is the
-    * right price only for INNER joins — a hot PROBE key that is
-    * MISSING from the other side (the dominant production anti shape:
-    * a pathological key that is NOT in the blocklist) has out_rows 0,
-    * yet its n_left rows still pile on one shuffle partition (and a
-    * left-outer join even EMITS all of them null-filled). Pricing by
-    * the max of join output and the preserved pile makes exactly those
-    * keys salt; ranking by the same price keeps them inside topN,
-    * where out_rows-ranked selection would sort them last. Same
-    * count-table-only cost envelope as [[saltingPlan]]. */
-  def saltingPlanPreserved(left: DataFrame, right: DataFrame,
-      keyCol: String, targetRows: Long, topN: Int = 20): DataFrame = {
-    require(targetRows >= 1, s"targetRows must be >= 1, got $targetRows")
-    require(topN >= 1, s"topN must be >= 1, got $topN")
-    val priced = keyCounts(left, right, keyCol)
-      .withColumn("_price", greatest(col("out_rows"), col("n_left")))
-    priced.orderBy(col("_price").desc, col("key").asc_nulls_last)
-      .limit(topN)
-      .select(col("key"), col("n_left"), col("n_right"), col("out_rows"),
-        least(expr(s"(_price + ${targetRows}L - 1) div ${targetRows}L"),
-          col("n_left")).cast("bigint").as("salt"))
-  }
-
-  /** NULL-key semantics (round-14 advice fix): a genuine NULL join key
-    * is a first-class skew row — both sides' NULL groups pair
-    * null-safely (an equi-join would split them into two phantom rows
-    * with out_rows 0, double-counting the totals). Its `out_rows` is
-    * reported as n_left × n_right even though an EQUI-join emits zero
-    * rows for NULLs, because the skew question this card answers — how
-    * many rows land on one shuffle partition — is exactly that product
-    * for a null-safe (`<=>`) join and still n_left + n_right of scan
-    * skew for an equi-join. The summary row is marked by a dedicated
-    * `is_total` column, never by `key IS NULL`. */
   /** Join two per-side count tables into the shared per-key relation
     * (keyCols…, n_left, n_right, out_rows) with one full NULL-SAFE
     * count-table join — keys living on one side only still belong in
@@ -122,192 +86,46 @@ object JoinSkew {
         .agg(count(lit(1)).as("_cr")),
       keyCols)
 
-  /** Rank-and-price tail shared by the multi-key planners: price =
-    * out_rows (inner) or greatest(out_rows, n_left) (preserved-side
-    * joins — [[saltingPlanPreserved]]'s probe-pile argument), rank by
-    * (price DESC, keys ASC NULLS LAST), keep topN, salt =
-    * ceil(price / targetRows) in integer arithmetic CAPPED at n_left
-    * (a factor beyond the left row count splits nothing and only
-    * multiplies the replicated side — [[saltingPlanSampled]] applies
-    * the same cap at its lower-bound estimate). Ranking is
-    * TREATABLE-FIRST — (salt DESC, price DESC, keys): ranking by raw
-    * price would let untreatable keys (a sentinel-style 1-row left key
-    * against a huge right side prices astronomically but caps to salt
-    * 1) consume the topN slots and evict genuinely splittable piles;
-    * the single-key CARDS keep their committed raw-price order (a
-    * diagnostic read, oracled), this planner feeds the TREATMENT. */
-  private def pricePlan(counts: DataFrame, keyCols: Seq[String],
-      targetRows: Long, topN: Int, preserved: Boolean): DataFrame = {
-    val priced = counts.withColumn("_price",
-      if (preserved) greatest(col("out_rows"), col("n_left"))
-      else col("out_rows"))
-      .withColumn("salt",
-        least(expr(s"(_price + ${targetRows}L - 1) div ${targetRows}L"),
-          col("n_left")).cast("bigint"))
-    priced.orderBy(Seq(col("salt").desc, col("_price").desc) ++
-        keyCols.map(col(_).asc_nulls_last): _*)
-      .limit(topN)
-      .select(keyCols.map(col) ++ Seq(col("n_left"), col("n_right"),
-        col("out_rows"), col("salt")): _*)
-  }
-
-  /** COMPOSITE-key salting plan (r16 verdict task 3): production
-    * 100 TB joins are routinely keyed (tenant_id, day) — the diagnosis
-    * generalizes directly because the count tables group by the tuple
-    * and everything downstream is tuple-keyed. Output: (keyCols…,
-    * n_left, n_right, out_rows, salt), the plan relation
-    * [[saltedJoinMulti]] consumes. `preserved = true` prices and ranks
-    * by `greatest(out_rows, n_left)` for preserved-side joins
-    * (left outer / semi / anti — [[saltingPlanPreserved]]'s
-    * argument). */
-  def saltingPlanMulti(left: DataFrame, right: DataFrame,
-      keyCols: Seq[String], targetRows: Long, topN: Int = 20,
-      preserved: Boolean = false): DataFrame = {
-    require(targetRows >= 1, s"targetRows must be >= 1, got $targetRows")
-    require(topN >= 1, s"topN must be >= 1, got $topN")
-    require(keyCols.nonEmpty && keyCols.distinct == keyCols,
-      s"keyCols must be non-empty and distinct, got $keyCols")
-    pricePlan(
-      keyCountsMulti(left.select(keyCols.map(col): _*),
-        right.select(keyCols.map(col): _*), keyCols),
-      keyCols, targetRows, topN, preserved)
-  }
-
-  /** [[saltingPlanMulti]] over a DETERMINISTIC full-row-hash row sample
-    * of each side (r16 verdict task 1): the exact diagnosis reads both
-    * join sides in full, which is the skew rewrite's main adoption cost
-    * on FIRST-RUN 100 TB jobs. Sampling rows by
-    * `pmod(xxhash64(every hashable column), 2^20) < rate·2^20` keeps
-    * the diagnosis deterministic across stage retries and re-runs (the
-    * salt-assignment discipline: decisions depend on row payloads,
-    * never arrival order). Per-key sampled counts are ~Binomial(n,
-    * rate), so for the hot keys this diagnosis exists to find
-    * (n ≳ targetRows rows) the relative error is ~1/sqrt(n·rate) —
-    * under 2% at rate 0.01 against the 5M-row default threshold.
-    * Estimator discipline — price on EVIDENCE, never on noise: both
-    * sides' per-key prices use the 3-sigma Poisson LOWER bound
-    * `floor(max(c − 3·sqrt(c), 0) / rate)` (the reported
-    * n_left/n_right columns are the plain point estimates
-    * `ceil(c / rate)`). An upper-bound pricing sounds safer ("never
-    * miss a hot key") but is poison in practice: a singleton sample
-    * fluke (c = 1, true n = 1) upper-bounds to ~13/rate, and with two
-    * such flukes multiplied a random cold key outranks the genuinely
-    * hot key whose sparse other side missed the sample — measured on
-    * a 10k-row fixture, noise keys priced 108k while the true 3.3k-row
-    * pile priced 3.8k and fell out of topN. With lower-bound pricing a
-    * key salts only when the sample PROVES a pile; the keys this
-    * diagnosis exists for (piles ≥ targetRows ≫ 1/rate) have
-    * c ≈ n·rate with a lower bound within a few percent of n, while
-    * flukes price 0. The salt factor also caps at the left side's
-    * lower bound (the n_left cap, evidence-grade). A key with no
-    * sampled rows on a side counts 0 there — keys below ~1/rate rows
-    * are invisible, exactly the population a targetRows-sized
-    * threshold ignores. A side with NO hashable non-key payload
-    * column is counted EXACTLY instead: a key-only hash samples each
-    * key all-or-nothing and would hide a hot key with probability
-    * 1−rate — the same degeneracy the salt assignment's round-robin
-    * fallback guards.
-    *
-    * Sampled pricing is ALWAYS pile-aware — `greatest(out_rows,
-    * n_left)` over the lower bounds, the preserved-side formula, for
-    * inner joins too: a sparse other side (a dimension with ~1 row per
-    * key) is mostly INVISIBLE at rate 0.01, zeroing the
-    * `n_left × n_right` product exactly when the left pile is most
-    * real, and the treatment's split side is the left — so the pile
-    * term keeps those keys treatable. A pile living only on the RIGHT
-    * stays untreated by design: the treatment replicates the right
-    * side, which would multiply that pile — AQE's replication-free
-    * split is the tool there. Hence no `preserved` flag: the sampled
-    * planner prices every join type the preserved way. */
-  def saltingPlanSampled(left: DataFrame, right: DataFrame,
-      keyCols: Seq[String], targetRows: Long, topN: Int,
-      sampleRate: Double): DataFrame = {
-    require(sampleRate > 0.0 && sampleRate <= 1.0,
-      s"sampleRate must be in (0, 1], got $sampleRate")
-    if (sampleRate == 1.0)
-      return saltingPlanMulti(left, right, keyCols, targetRows, topN,
-        preserved = true)
-    require(targetRows >= 1, s"targetRows must be >= 1, got $targetRows")
-    require(topN >= 1, s"topN must be >= 1, got $topN")
-    require(keyCols.nonEmpty && keyCols.distinct == keyCols,
-      s"keyCols must be non-empty and distinct, got $keyCols")
-    val counts = sampledCounts(left, right, keyCols, sampleRate)
-      .withColumn("_price",
-        greatest((col("_ll") * col("_lr")).cast("bigint"), col("_ll")))
-      .withColumn("salt",
-        least(expr(s"(_price + ${targetRows}L - 1) div ${targetRows}L"),
-          col("_ll")).cast("bigint"))
-    // treatable-first ranking, as in pricePlan
-    counts.orderBy(Seq(col("salt").desc, col("_price").desc) ++
-        keyCols.map(col(_).asc_nulls_last): _*)
-      .limit(topN)
-      .select(keyCols.map(col) ++ Seq(col("n_left"), col("n_right"),
-        col("out_rows"), col("salt")): _*)
-  }
-
   /** Shared SAMPLED count relation: one row per distinct key tuple
-    * with (keyCols…, n_left, _ll, n_right, _lr, out_rows) — n_* are
-    * point estimates (`ceil(c / rate)`), _ll/_lr the 3-sigma Poisson
-    * lower bounds (`floor(max(c − 3√c, 0) / rate)`); a side with NO
-    * hashable non-key payload column is counted EXACTLY (both columns
-    * carry the exact count — a key-only hash samples each key
-    * all-or-nothing and would hide a hot key with probability
+    * with (keyCols…, n_left, n_right, out_rows), n_* the point
+    * estimates `ceil(c / rate)`; a side with NO hashable non-key
+    * payload column is counted EXACTLY (a key-only hash samples each
+    * key all-or-nothing and would hide a hot key with probability
     * 1−rate). The sample predicate is [[hashSampleCond]] — the one
-    * definition of the sampling discipline. Consumed by
-    * [[saltingPlanSampled]] (prices/ranks on the lower bounds) and
-    * [[pilesAtOrAbove]] (filters on the point estimates). */
+    * definition of the sampling discipline. */
   private def sampledCounts(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], sampleRate: Double): DataFrame = {
     val eff = effectiveRate(sampleRate)
     def sideCounts(df: DataFrame, keyAlias: String => String,
-        cntName: String, lowName: String): DataFrame = {
+        cntName: String): DataFrame = {
       val nonKey = df.columns.toSeq
         .filterNot(c => containsMap(df.schema(c).dataType))
         .filterNot(keyCols.contains)
       val keys = keyCols.map(c => col(c).as(keyAlias(c)))
       if (nonKey.isEmpty)
-        df.groupBy(keys: _*)
-          .agg(count(lit(1)).cast("bigint").as(cntName))
-          .withColumn(lowName, col(cntName))
+        df.groupBy(keys: _*).agg(count(lit(1)).as(cntName))
       else
         df.filter(hashSampleCond(df, sampleRate))
           .groupBy(keys: _*).agg(count(lit(1)).as("_c"))
-          .select(keyCols.map(c => col(keyAlias(c))) ++ Seq(
-            ceil(col("_c") / lit(eff)).cast("bigint").as(cntName),
-            floor(greatest(col("_c") - lit(3.0) * sqrt(col("_c")),
-              lit(0.0)) / lit(eff)).cast("bigint").as(lowName)): _*)
+          .select(keyCols.map(c => col(keyAlias(c))) :+
+            ceil(col("_c") / lit(eff)).as(cntName): _*)
     }
-    val cl = sideCounts(left, identity, "_cl", "_cll")
-    val cr = sideCounts(right, c => s"_kr_$c", "_cr", "_crl")
-    cl.join(cr,
-        keyCols.map(c => col(c) <=> col(s"_kr_$c")).reduce(_ && _), "full")
-      .select(keyCols.map(c => coalesce(col(c), col(s"_kr_$c")).as(c)) ++
-        Seq(coalesce(col("_cl"), lit(0L)).cast("bigint").as("n_left"),
-          coalesce(col("_cll"), lit(0L)).cast("bigint").as("_ll"),
-          coalesce(col("_cr"), lit(0L)).cast("bigint").as("n_right"),
-          coalesce(col("_crl"), lit(0L)).cast("bigint").as("_lr")): _*)
-      .withColumn("out_rows",
-        (col("n_left") * col("n_right")).cast("bigint"))
+    joinCounts(sideCounts(left, identity, "_cl"),
+      sideCounts(right, c => s"_kr_$c", "_cr"), keyCols)
   }
 
   /** EXISTS-style pile probe for ROUTING decisions (the keyed range
-    * lift; distinct from the salting planners, which feed a
-    * TREATMENT): the key tuples whose preserved-priced POINT estimate
+    * lift): the key tuples whose POINT estimate
     * `greatest(n_left·n_right, n_left)` reaches `targetRows`, as
-    * (keyCols…, n_left, n_right, out_rows). Deliberately NO topN
-    * ranking and NO salt cap — the planners rank by a salt-capped
-    * lower-bound statistic, and a ranking by one statistic with a
-    * filter on another can evict the only provable key (a hot key
-    * whose sparse side leaves a zero lower bound prices salt 0 and
-    * loses its top-20 slot to moderate keys that all fail the
-    * threshold — a structural false decline, not a sampling fluke);
-    * an existence question needs no ranking at all. Point-estimate
-    * pricing is the ROUTING discipline: the salt factors' 3-sigma
-    * conservatism guards against over-SPLITTING on noise, which has
-    * no analogue here — a fluke-lifted borderline key costs bucket
-    * replication, a missed pile keeps its cartesian on one
-    * partition. NULL key components are the caller's business (prune
-    * them first if the consuming join drops them). */
+    * (keyCols…, n_left, n_right, out_rows), exact at `sampleRate` 1
+    * and from the deterministic hash sample below it. Deliberately NO
+    * topN ranking and NO salt cap — a ranking by one statistic with a
+    * filter on another can evict the only provable key, and an
+    * existence question needs no ranking at all. Point-estimate
+    * pricing is the ROUTING discipline: a fluke-lifted borderline key
+    * costs bucket replication, a missed pile keeps its cartesian on
+    * one partition. NULL key components are the caller's business
+    * (prune them first if the consuming join drops them). */
   def pilesAtOrAbove(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], targetRows: Long,
       sampleRate: Double = 1.0): DataFrame = {
@@ -326,6 +144,17 @@ object JoinSkew {
         col("out_rows")): _*)
   }
 
+  /** The skew card itself. NULL-key semantics (round-14 advice fix): a
+    * genuine NULL join key is a first-class skew row — both sides' NULL
+    * groups pair
+    * null-safely (an equi-join would split them into two phantom rows
+    * with out_rows 0, double-counting the totals). Its `out_rows` is
+    * reported as n_left × n_right even though an EQUI-join emits zero
+    * rows for NULLs, because the skew question this card answers — how
+    * many rows land on one shuffle partition — is exactly that product
+    * for a null-safe (`<=>`) join and still n_left + n_right of scan
+    * skew for an equi-join. The summary row is marked by a dedicated
+    * `is_total` column, never by `key IS NULL`. */
   def joinSkewCard(left: DataFrame, right: DataFrame, keyCol: String,
       topN: Int = 20): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
@@ -359,55 +188,6 @@ object JoinSkew {
     topRows.unionByName(summary)
   }
 
-  /** The salting TREATMENT for [[saltingPlan]]'s diagnosis — a salted
-    * equi-join that is RESULT-IDENTICAL to
-    * `left.join(right, Seq(keyCol), joinType)` for `joinType` inner,
-    * left-outer, left-semi, or left-anti (see [[normalizeJoinType]]
-    * for why exactly those four; the same diagnosis→treatment
-    * pairing as `embTopPc`→`abttTransform`): hot keys' LEFT rows are
-    * split across `salt` sub-keys and the RIGHT rows replicated once
-    * per sub-key, so no single shuffle partition ever receives more
-    * than ~targetRows of one key's join output; every other key flows
-    * through the plain join path untouched, and the two paths union.
-    *
-    * `plan` = (key, salt) rows, normally [[saltingPlan]]'s output
-    * (computed ONCE per recurring join at 100 TB and reused — hence the
-    * explicit-plan primary form). Only rows with salt ≥ 2 get the
-    * treatment; the plan relation must stay hot-key-bounded (topN rows)
-    * because it broadcasts to both sides and multiplies the right side
-    * by its salt factor.
-    *
-    * Row-to-sub-key assignment is `pmod(xxhash64(every left column),
-    * salt)` — DETERMINISTIC in the row's full payload, never in its
-    * arrival order. This matters under failure: a nondeterministic
-    * assignment (round-robin over `monotonically_increasing_id()`)
-    * feeding a shuffle partition key can change a row's salt between a
-    * map stage's original run and its post-fetch-failure recompute,
-    * duplicating or dropping hot-key rows — the classic
-    * nondeterministic-repartition hazard, unacceptable for the 100 TB
-    * production joins this operator targets where stage retries are
-    * routine. Hot-key rows are near-identical in the KEY by definition
-    * but almost always differ in some payload column (an id, a
-    * timestamp), so the full-row hash still spreads them; rows that
-    * are byte-identical across EVERY column co-locate — set
-    * `roundRobinSalt = true` to trade that residual pile-up risk for
-    * the stage-retry exposure above (documented fallback, only for
-    * pipelines that disable stage retries or checkpoint the left
-    * side). Columns containing MapType anywhere in their type are
-    * excluded from the hash (Spark forbids hashing maps, recursively),
-    * and a left side with NO non-key hashable payload falls back to
-    * round-robin automatically — a salt hashed from the key alone is
-    * constant per hot key, which would pay right-side replication for
-    * zero spreading. The assignment affects only WHERE a row is
-    * processed, never the joined output.
-    *
-    * NULL join keys take the cold path, where a NULL key matches
-    * nothing exactly as in the plain join: they vanish under
-    * inner/semi, null-fill once under left-outer, and are KEPT under
-    * left-anti. Scale shape: two broadcast
-    * tag joins (plan ≤ topN rows), the cold shuffle join, and the hot
-    * shuffle join on (key, _salt) — no new corpus-sized shuffles beyond
-    * the join being treated. */
   /** Sampling constants of the ONE deterministic row-sample primitive
     * shared by every plan-time diagnosis (this object's sampled
     * counts, [[RangeJoinRewrite]]'s width/keyed diagnoses): a single
@@ -441,11 +221,11 @@ object JoinSkew {
         lit(sampleThreshold(rate))
     }
 
-  /** Bounded synchronized LRU for plan-time decision caches — the
-    * [[SkewJoinRewrite]] discipline (access-ordered, eldest-entry
-    * eviction at 64 plan shapes — a plan-shape cardinality, not a data
-    * one — never a whole-cache clear), factored here so every rewrite
-    * rule builds the SAME cache semantics. */
+  /** Bounded synchronized LRU for plan-time decision caches
+    * (access-ordered, eldest-entry eviction at 64 plan shapes — a
+    * plan-shape cardinality, not a data one — never a whole-cache
+    * clear), factored here so every rewrite rule builds the SAME cache
+    * semantics. */
   private[plans] def boundedLru[K, V](): java.util.Map[K, V] =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
@@ -454,7 +234,7 @@ object JoinSkew {
       })
 
   /** xxhash64 rejects MapType anywhere in a column's type tree (its
-    * own check recurses), so the salt-column filter must too.
+    * own check recurses), so the hashed-column filter must too.
     * Package-visible: [[RangeJoinRewrite]]'s width diagnosis samples
     * rows by the same deterministic full-row hash and needs the same
     * exclusion. */
@@ -466,239 +246,5 @@ object JoinSkew {
     case a: org.apache.spark.sql.types.ArrayType =>
       containsMap(a.elementType)
     case _ => false
-  }
-
-  private def validateSaltedJoin(left: DataFrame, right: DataFrame,
-      keyCols: Seq[String], semiLike: Boolean): Unit = {
-    require(keyCols.nonEmpty && keyCols.distinct == keyCols,
-      s"keyCols must be non-empty and distinct, got $keyCols")
-    val lcols = left.columns.toSeq
-    val rcols = right.columns.toSeq.filterNot(keyCols.contains)
-    keyCols.foreach(k =>
-      require(lcols.contains(k) && right.columns.contains(k),
-        s"both sides need the join key column '$k'"))
-    // semi/anti drop ALL right payload before any select, so a payload
-    // name shared across sides is impossible by construction there —
-    // the guard would spuriously reject joins the plain
-    // left.join(right, keyCols, "left_semi") accepts
-    require(semiLike || lcols.intersect(rcols).isEmpty,
-      s"non-key columns must not collide across sides, got " +
-        s"${lcols.intersect(rcols).mkString(", ")}")
-    require(!lcols.contains("_salt") && !rcols.contains("_salt"),
-      "saltedJoin reserves the _salt column name")
-    // internal tag-table names — a collision would make the tag joins
-    // ambiguous at runtime; fail with the reserved prefix now
-    ((lcols ++ right.columns).find(c => c == "_sf" || c.startsWith("_sk_")))
-      .foreach(c => throw new IllegalArgumentException(
-        s"saltedJoin reserves the _sf/_sk_* column names, got '$c'"))
-  }
-
-  /** Normalized join type for the salted decomposition: "inner",
-    * "left" (LEFT OUTER), "left_semi", or "left_anti". These are
-    * exactly the types for which the decomposition is sound — the LEFT
-    * side is the salted (split) side and the RIGHT side is replicated
-    * per salt, so replicated rows may never emit rows of their own:
-    * an inner join emits only matches; left outer / semi / anti
-    * preserve only the (unreplicated) left side, whose rows each live
-    * in exactly ONE (key, salt) bucket that the right replication
-    * covers — so a left row's match set equals the plain join's
-    * (outer: an unmatched row null-fills exactly once; semi: it emits
-    * iff the right side holds its key, because the replication puts
-    * the key's right rows in EVERY salt bucket; anti: the complement,
-    * same argument). RIGHT/FULL outer would preserve the REPLICATED
-    * side: an unmatched hot-key right row appears once per salt
-    * replica and would null-fill `salt` times. A right-outer caller
-    * flips sides first (the [[graft.plans.SkewJoinRewrite]]
-    * treatment); full outer has no sound salted form under replication
-    * and is refused. */
-  private def normalizeJoinType(joinType: String): String =
-    joinType.toLowerCase.replace("_", "") match {
-      case "inner" => "inner"
-      case "left" | "leftouter" => "left"
-      case "semi" | "leftsemi" => "left_semi"
-      case "anti" | "leftanti" => "left_anti"
-      case other => throw new IllegalArgumentException(
-        s"saltedJoin supports inner, left-outer, left-semi, and " +
-          s"left-anti joins, got '$other' (right outer: flip the " +
-          "sides; full outer: the replicated side would null-fill " +
-          "once per salt replica — unsupported)")
-    }
-
-  def saltedJoin(left: DataFrame, right: DataFrame, keyCol: String,
-      plan: DataFrame, roundRobinSalt: Boolean = false,
-      joinType: String = "inner"): DataFrame =
-    saltedJoinMulti(left, right, Seq(keyCol),
-      singleKeyPlan(plan, keyCol), roundRobinSalt, joinType)
-
-  /** Adapt a single-key plan relation (key, …, salt) to the multi-key
-    * contract: PROJECT to exactly (keyCol, salt) rather than renaming
-    * in place — a bare rename would duplicate a column when `keyCol`
-    * collides with one of the plan's stat columns (n_left, out_rows…)
-    * and throw AMBIGUOUS_REFERENCE downstream. `salt` itself stays the
-    * one reserved plan name. */
-  private def singleKeyPlan(plan: DataFrame, keyCol: String): DataFrame = {
-    require(keyCol != "salt",
-      "the plan relation reserves the 'salt' column name; rename the " +
-        "join key column before salting")
-    plan.select(col("key").as(keyCol), col("salt"))
-  }
-
-  /** [[saltedJoin]] over a COMPOSITE key (r16 verdict task 3): the
-    * decomposition proof is key-shape-agnostic — hot TUPLES' left rows
-    * split across salt sub-keys, the right side replicated per sub-key,
-    * cold tuples through the plain join — so the generalization is the
-    * tag joins and the hot-path USING list growing from one key column
-    * to `keyCols`. `plan` = [[saltingPlanMulti]] (or
-    * [[saltingPlanSampled]]) rows keyed BY THE KEY COLUMN NAMES. Rows
-    * with ANY NULL key component ride the cold path, where the plain
-    * join gives them exact per-type semantics (an AND-of-equalities
-    * key with a NULL part matches nothing: they vanish under
-    * inner/semi, null-fill once under left outer, stay under
-    * left anti). */
-  def saltedJoinMulti(left: DataFrame, right: DataFrame,
-      keyCols: Seq[String], plan: DataFrame,
-      roundRobinSalt: Boolean = false, joinType: String = "inner")
-      : DataFrame = {
-    val jt = normalizeJoinType(joinType)
-    // semi/anti emit ONLY the left side; the right contributes just its
-    // key to the existence test, so its payload never rides the shuffle
-    val semiLike = jt == "left_semi" || jt == "left_anti"
-    validateSaltedJoin(left, right, keyCols, semiLike)
-    val lcols = left.columns.toSeq
-    val rcols =
-      if (semiLike) Seq.empty
-      else right.columns.toSeq.filterNot(keyCols.contains)
-    val outCols = (lcols ++ rcols).map(col)
-    // materialize the ≤topN-row plan ONCE as bounded driver metadata
-    // (the seed/centroid-table convention): it is consumed by two tag
-    // joins, and leaving it lazy would re-run the two side aggregations
-    // per consumer and drag the skew-card lineage (with its deliberate
-    // 1-row cross joins) into every executed salted-join plan
-    val keyTypes = keyCols.map(c => left.schema(c).dataType)
-    val skName = keyCols.indices.map(i => s"_sk_$i")
-    val hotRows = plan
-      .filter(col("salt") >= 2L &&
-        keyCols.map(col(_).isNotNull).reduce(_ && _))
-      .select(keyCols.zip(keyTypes).zipWithIndex.map {
-          case ((c, t), i) => col(c).cast(t).as(skName(i)) } :+
-        col("salt").cast(LongType).as("_sf"): _*)
-      .collect().toSeq
-    if (hotRows.isEmpty) return left.join(right, keyCols, jt)
-    val spark = left.sparkSession
-    val hot = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(hotRows, 1),
-      org.apache.spark.sql.types.StructType(
-        skName.zip(keyTypes).map { case (n, t) =>
-          org.apache.spark.sql.types.StructField(n, t) } :+
-        org.apache.spark.sql.types.StructField("_sf", LongType))))
-    def tagCond = keyCols.zipWithIndex
-      .map { case (c, i) => col(c) === col(skName(i)) }.reduce(_ && _)
-    val lTag = left.join(hot, tagCond, "left")
-    val rTag = right.join(hot, tagCond, "left")
-    val coldJoin = lTag.filter(col("_sf").isNull)
-      .select(lcols.map(col): _*)
-      .join(rTag.filter(col("_sf").isNull)
-        .select((keyCols ++ rcols).map(col): _*), keyCols, jt)
-    // hash only hashable columns — xxhash64 rejects MapType RECURSIVELY
-    // (map inside struct/array too), so the filter must recurse. A salt
-    // hashed from the KEYS alone is constant per hot tuple (zero
-    // spread, right-side replication for nothing), so when no non-key
-    // hashable payload exists the fallback is round-robin — the
-    // documented stage-retry exposure beats a silently degenerate
-    // treatment.
-    val hashable = lcols.filterNot(c => containsMap(left.schema(c).dataType))
-    val saltAssign =
-      if (roundRobinSalt || hashable.forall(keyCols.contains))
-        pmod(monotonically_increasing_id(), col("_sf"))
-      else pmod(xxhash64(hashable.map(col): _*), col("_sf"))
-    val hotJoin = lTag.filter(col("_sf").isNotNull)
-      .withColumn("_salt", saltAssign)
-      .select((lcols.map(col) :+ col("_salt")): _*)
-      .join(rTag.filter(col("_sf").isNotNull)
-          .withColumn("_salt",
-            explode(sequence(lit(0L), col("_sf") - 1L)))
-          .select(((keyCols ++ rcols).map(col) :+ col("_salt")): _*),
-        keyCols :+ "_salt", jt)
-    coldJoin.select(outCols: _*).unionByName(hotJoin.select(outCols: _*))
-  }
-
-  /** The FULL OUTER salted treatment BY COMPOSITION (r16 verdict task
-    * 2): single-pass replication has no sound full-outer form — the
-    * replicated side would null-fill its unmatched hot-key rows once
-    * per salt replica ([[normalizeJoinType]]'s refusal) — but
-    * FULL OUTER = LEFT OUTER ∪ (right rows with no left key match,
-    * null-filled on the left), and BOTH legs are already in the sound
-    * set: the left-outer leg salts LEFT (its preserved side), the
-    * right-only leg is a LEFT ANTI with the sides flipped, salting
-    * RIGHT (its preserved side). The composition pays one extra pass
-    * over the right side plus a keys-only pass over the left — the
-    * honest price of a treatable full-outer skew, vs AQE's
-    * replication-free split as the zero-extra-pass alternative.
-    *
-    * `planLeft` prices the LEFT pile (preserved [[saltingPlanMulti]] /
-    * [[saltingPlanSampled]] of left vs right), `planRight` the RIGHT
-    * pile (same, sides flipped). Either may be empty — that leg runs
-    * as the plain join. Output is USING-style, exactly
-    * `left.join(right, keyCols, "full")`'s column set: key columns
-    * (coalesced across sides), left non-key columns, right non-key
-    * columns. NULL-key rows from BOTH sides survive null-filled, as in
-    * the plain full join: left ones through the left-outer leg, right
-    * ones through the anti leg (a NULL key matches nothing, so anti
-    * KEEPS it). */
-  def saltedJoinFullMulti(left: DataFrame, right: DataFrame,
-      keyCols: Seq[String], planLeft: DataFrame, planRight: DataFrame,
-      roundRobinSalt: Boolean = false): DataFrame = {
-    validateSaltedJoin(left, right, keyCols, semiLike = false)
-    val leftOuter = saltedJoinMulti(left, right, keyCols, planLeft,
-      roundRobinSalt, "left")
-    val rightOnly = saltedJoinMulti(right,
-      left.select(keyCols.map(col): _*), keyCols, planRight,
-      roundRobinSalt, "left_anti")
-    val lPayload = left.columns.toSeq.filterNot(keyCols.contains)
-    val rPayload = right.columns.toSeq.filterNot(keyCols.contains)
-    val rightNullFilled = rightOnly.select(
-      keyCols.map(col) ++
-        lPayload.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-        rPayload.map(col): _*)
-    leftOuter.unionByName(rightNullFilled)
-  }
-
-  /** Single-key diagnose-and-treat convenience for the full-outer
-    * composition: both legs diagnosed with [[saltingPlanPreserved]]'s
-    * probe-pile pricing (each leg's SALTED side is its preserved
-    * side). */
-  def saltedJoinFull(left: DataFrame, right: DataFrame, keyCol: String,
-      targetRows: Long, topN: Int): DataFrame =
-    saltedJoinFullMulti(left, right, Seq(keyCol),
-      singleKeyPlan(
-        saltingPlanPreserved(left, right, keyCol, targetRows, topN),
-        keyCol),
-      singleKeyPlan(
-        saltingPlanPreserved(right, left, keyCol, targetRows, topN),
-        keyCol))
-
-  /** Convenience form: diagnose and treat in one call (fixture/test
-    * scale — a recurring 100 TB join should persist the plan once via
-    * [[saltingPlan]] and pass it to the primary form). */
-  def saltedJoin(left: DataFrame, right: DataFrame, keyCol: String,
-      targetRows: Long, topN: Int): DataFrame = {
-    validateSaltedJoin(left, right, Seq(keyCol), semiLike = false)
-    saltedJoin(left, right, keyCol,
-      saltingPlan(left, right, keyCol, targetRows, topN))
-  }
-
-  /** Diagnose-and-treat convenience for the preserved-side forms
-    * (left outer / semi / anti — diagnosed with
-    * [[saltingPlanPreserved]]'s probe-pile pricing). */
-  def saltedJoin(left: DataFrame, right: DataFrame, keyCol: String,
-      targetRows: Long, topN: Int, joinType: String): DataFrame = {
-    val jt = normalizeJoinType(joinType)
-    validateSaltedJoin(left, right, Seq(keyCol),
-      jt == "left_semi" || jt == "left_anti")
-    val plan =
-      if (jt == "inner") saltingPlan(left, right, keyCol, targetRows, topN)
-      else saltingPlanPreserved(left, right, keyCol, targetRows, topN)
-    saltedJoin(left, right, keyCol, plan,
-      roundRobinSalt = false, joinType = joinType)
   }
 }

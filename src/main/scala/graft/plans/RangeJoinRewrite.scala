@@ -10,9 +10,8 @@ import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.{NumericType, TimestampNTZType, TimestampType}
 
 /** Opt-in optimizer rule promoting [[graft.scale.RangeJoin]] from a
-  * library call to ENGINE BEHAVIOR — the [[SkewJoinRewrite]] pattern
-  * pointed at the OTHER join Catalyst cannot plan well: a join whose
-  * only cross-side predicate is `point BETWEEN lo AND hi` plans as
+  * library call to ENGINE BEHAVIOR for a join Catalyst cannot plan
+  * well: a join whose only cross-side predicate is `point BETWEEN lo AND hi` plans as
   * BroadcastNestedLoopJoin (or a cartesian when neither side
   * broadcasts), O(|L|·|R|) however selective the range is. When
   * `spark.graft.rangeJoin.rewrite=true`, such joins are rewritten to
@@ -44,9 +43,9 @@ import org.apache.spark.sql.types.{NumericType, TimestampNTZType, TimestampType}
   * (the planner runs those as equi-joins — rewriting could only add
   * work; see the keyed opt-in below), mixed-family or
   * non-timestamp/non-numeric bounds, and already-rewritten subtrees
-  * (the `__graft_range` marker). Unlike [[SkewJoinRewrite]] no
-  * plan-time jobs run — the pattern match is pure, so the only cost of
-  * enabling the conf is the match itself.
+  * (the `__graft_range` marker). No plan-time jobs run — the pattern
+  * match is pure, so the only cost of enabling the conf is the match
+  * itself.
   *
   * KEYED ranges (r17): `spark.graft.rangeJoin.keyedRewrite=true`
   * additionally treats equality-PLUS-range conditions — the
@@ -65,9 +64,8 @@ import org.apache.spark.sql.types.{NumericType, TimestampNTZType, TimestampType}
   * equality connector that is not attribute=attribute still declines
   * (the lift is proven for attribute pairs only).
   *
-  * MEASURED decisions (r17, the [[SkewJoinRewrite]] sampled-diagnosis
-  * discipline applied to this rule's two remaining blind knobs —
-  * both are conf-gated because, unlike the pure pattern match above,
+  * MEASURED decisions (r17, a deterministic sampled diagnosis applied
+  * to this rule's two remaining blind knobs — both are conf-gated because, unlike the pure pattern match above,
   * they run bounded plan-time jobs, cached per plan shape and
   * bypassable via `spark.graft.rangeJoin.rediagnose`):
   *
@@ -111,11 +109,11 @@ import org.apache.spark.sql.types.{NumericType, TimestampNTZType, TimestampType}
   *     dies exactly when some key's hash group is a pile — nL·nR
   *     candidate rows scanned by the range filter, nL probe rows on
   *     one shuffle partition — and the pile detector already exists),
-  *     so this reuses [[JoinSkew.saltingPlanMulti]] (preserved
-  *     pricing, points side as left: `greatest(nL·nR, nL)` — both
-  *     terms are real per-key costs the (keys…, bucket) shuffle
-  *     splits) / [[JoinSkew.saltingPlanSampled]] under
-  *     `spark.graft.rangeJoin.sampleRate` < 1, fires when any
+  *     so this reuses [[JoinSkew.pilesAtOrAbove]] (points side as
+  *     left, priced `greatest(nL·nR, nL)` — both terms are real
+  *     per-key costs the (keys…, bucket) shuffle splits), exact or
+  *     hash-sampled under `spark.graft.rangeJoin.sampleRate` < 1,
+  *     fires when any
   *     fully-non-NULL key tuple's price reaches
   *     `spark.graft.rangeJoin.keyedTargetRows`, and otherwise leaves
   *     the planner's hash join alone — which for high-cardinality
@@ -154,13 +152,13 @@ case class RangeJoinRewrite(spark: SparkSession)
   private def keyedAuto: Boolean =
     spark.conf.get("spark.graft.rangeJoin.keyedAuto", "false") == "true"
   /** Per-key candidate rows (points × exploded-interval work) one
-    * shuffle partition may take before the keyed lift fires — same
-    * units and default as the skew rewrite's targetRows. */
+    * shuffle partition may take before the keyed lift fires (5M by
+    * default). */
   private def keyedTargetRows: Long =
     spark.conf.get("spark.graft.rangeJoin.keyedTargetRows", "5000000")
       .toLong
   /** Deterministic full-row-hash sample rate for BOTH measured
-    * diagnoses (1.0 = exact) — [[JoinSkew.saltingPlanSampled]]'s
+    * diagnoses (1.0 = exact) — [[JoinSkew.hashSampleCond]]'s
     * hash, so diagnosis decisions survive stage retries and re-runs
     * unchanged. */
   private def sampleRate: Double =
@@ -168,7 +166,7 @@ case class RangeJoinRewrite(spark: SparkSession)
   private def rediagnose: Boolean =
     spark.conf.get("spark.graft.rangeJoin.rediagnose", "false") == "true"
 
-  /** Diagnosis caches, the [[SkewJoinRewrite]] discipline: decisions
+  /** Diagnosis caches: decisions
     * are FROZEN PER SESSION per canonicalized (plan, conf) key —
     * bounded plan-time jobs run once per shape, not once per
     * fixed-point iteration — LRU-evicted at 64 shapes
@@ -366,15 +364,14 @@ case class RangeJoinRewrite(spark: SparkSession)
     * intervals, key ordinals, target, rate).
     *
     * The decision goes through [[JoinSkew.pilesAtOrAbove]] — an
-    * existence probe with NO topN ranking and NO salt cap (second
-    * review pass: the planners rank by a salt-capped lower-bound
-    * statistic, so a 1-point key over a 10M-row intervals side capped
-    * to salt 1, and under sampling the only point-estimate-provable
-    * key could be evicted from the topN by lower-bound-ranked keys
-    * that all failed the threshold — both structural false declines
-    * for a question that is just "does such a key EXIST"). Point-
-    * estimate pricing is the routing discipline; see the probe's
-    * scaladoc for the full estimator argument. */
+    * existence probe with NO topN ranking and NO salt cap: a ranking
+    * by a salt-capped statistic would cap a 1-point key over a
+    * 10M-row intervals side to salt 1, and under sampling could evict
+    * the only point-estimate-provable key from a topN — both
+    * structural false declines for a question that is just "does
+    * such a key EXIST". Point-estimate pricing is the routing
+    * discipline; see the probe's scaladoc for the estimator
+    * argument. */
   private def keyedPileProven(points: LogicalPlan,
       intervals: LogicalPlan,
       pairs: Seq[(Attribute, Attribute)]): Boolean = {

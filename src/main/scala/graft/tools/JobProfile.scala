@@ -24,6 +24,18 @@ object JobProfile {
     @volatile var cpuNs = 0L
   }
 
+  /** Seconds covered by the union of the [start, end] millisecond
+    * intervals: jobs that overlap (a `Par` fan-out) count once, so wall
+    * time minus this is the time no job was running. */
+  private[graft] def busySeconds(intervals: Seq[(Long, Long)]): Double = {
+    val (total, _) = intervals.sortBy(_._1).foldLeft((0L, Long.MinValue)) {
+      case ((sum, reach), (start, end)) =>
+        if (end <= reach) (sum, reach)
+        else (sum + end - math.max(start, reach), end)
+    }
+    total / 1e3
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args.drop(1).toSeq
@@ -94,8 +106,10 @@ object JobProfile {
           f"sw=${r.shuffleWrite / 1e6}%8.1fMB spill=${r.spill / 1e6}%6.1fMB " +
           s"${r.desc.take(80)}")
       }
-      val busy = recs.map { case (_, r) => (r.end - r.start) / 1e3 }.sum
-      println(f"  sum(job walls) ${busy}%.3f s — driver gaps ${wall - busy}%.3f s")
+      val walls = recs.map { case (_, r) => (r.end - r.start) / 1e3 }.sum
+      val busy = busySeconds(recs.map { case (_, r) => (r.start, r.end) })
+      println(f"  sum(job walls) ${walls}%.3f s, jobs busy ${busy}%.3f s " +
+        f"— driver ${wall - busy}%.3f s")
     }
     spark.stop()
   }

@@ -93,9 +93,9 @@ class CatalogAnalysisSpec extends AnyFunSuite {
     * `range_join_rewrite` — with their r16 outer/anti/numeric twins
     * `salted_join_rewrite_outer`, `salted_join_rewrite_anti`, and
     * `range_join_rewrite_num` — are
-    * the two-relation exemptions
-    * (`salted_join` / the range-join library call) applied through
-    * conf-gated optimizer rules; `containment_incremental`,
+    * the same two-relation exemption (the planted-skew join under
+    * AQE's skew split / the range-join library call through its
+    * conf-gated optimizer rule); `containment_incremental`,
     * `stream_containment`, and the r16 `paragraph_incremental` need a
     * persisted/accumulated index artifact (their one-relation
     * diagnosis halves `containment_join_exact` / `paragraph_dedup` ARE

@@ -50,21 +50,14 @@ class PlanAuditSpec extends AnyFunSuite {
       s"no degenerate join strategies:\n$p")
   }
 
-  test("q_salted_join: the plan broadcasts to tag both sides (plan is " +
-    "hot-key-bounded), no cartesian, and the union carries the two " +
-    "join paths") {
-    val p = plan("q_salted_join")
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"),
-      s"the treatment must never degenerate:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"the ≤topN salt plan must broadcast onto both sides:\n$p")
-    assert(p.contains("Union"),
-      s"cold path + hot path must union:\n$p")
-    // the hot-side replication is a generator over sequence(0, salt-1),
-    // never a join against an exploded corpus-sized relation
-    assert(p.contains("Generate"),
-      s"right-side replication must be a generator:\n$p")
+  test("q_salted_join: the in-entry skew-split require holds — the " +
+    "plain join's final adaptive plan reads the planted hot key's " +
+    "partition in splits") {
+    // the require lives INSIDE the entry, on the executed plan of the
+    // materialized join, so constructing it here runs it
+    val df = SparkEntry.queries("q_salted_join")(
+      spark, SparkTestSession.fixtureDir)
+    assert(df.count() > 0)
   }
 
   test("q_dedup_spans_shifted: pair work rides the banded candidates — " +
@@ -395,10 +388,10 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q_salted_join_rewrite's in-entry fired/no-cartesian requires " +
     "hold") {
-    // same contract as the cosine rewrite entry: the rule-fired and
-    // no-cartesian assertions are requires INSIDE the entry (on the
-    // pre-checkpoint executed plan), so constructing it here runs them —
-    // a silently-disabled rewrite throws instead of passing vacuously
+    // the AQE-split-fired and no-cartesian assertions are requires
+    // INSIDE the entry (on the executed plan of the materialized join),
+    // so constructing it here runs them — a split that silently stopped
+    // firing throws instead of passing vacuously
     val df = SparkEntry.queries("q_salted_join_rewrite")(
       spark, SparkTestSession.fixtureDir)
     assert(df.count() > 0)
@@ -419,20 +412,21 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q_range_join_rewrite's in-entry no-nested-loop require holds") {
-    // same contract as the cosine/skew rewrite entries: the assertion
-    // lives INSIDE the entry on the pre-checkpoint executed plan, so
-    // constructing it here runs it — a silently-disabled rewrite throws
+    // same contract as the cosine rewrite and skew-join entries: the
+    // assertion lives INSIDE the entry on the pre-checkpoint executed
+    // plan, so constructing it here runs it — a silently-disabled
+    // rewrite throws
     val df = SparkEntry.queries("q_range_join_rewrite")(
       spark, SparkTestSession.fixtureDir)
     assert(df.count() > 0)
   }
 
   test("q_salted_join_rewrite_outer: the in-entry fired/no-cartesian " +
-    "requires hold and null-filled registry gaps survive the salting") {
+    "requires hold and null-filled registry gaps survive the split") {
     val df = SparkEntry.queries("q_salted_join_rewrite_outer")(
       spark, SparkTestSession.fixtureDir)
-    // keys ≡ 2 (mod 5) are missing from the registry: the left-outer
-    // decomposition must preserve those rows with a NULL n_r
+    // keys ≡ 2 (mod 5) are missing from the registry: the split left
+    // outer join must preserve those rows with a NULL n_r
     import org.apache.spark.sql.functions.{col => c}
     assert(df.filter(c("n_r").isNull).count() > 0,
       "the fixture's registry gaps must null-fill, not vanish")
@@ -461,23 +455,23 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(df.filter(c("k") === 0 && c("day") === 7).count() > 0)
   }
 
-  test("q_salted_join_rewrite_full: the composed full outer fires, " +
-    "left gaps (keys ≡ 2 mod 5) null-fill n_r, and the planted " +
-    "right-only pile (k = 1000) survives null-filled on the left") {
+  test("q_salted_join_rewrite_full: the plain full outer join under " +
+    "the skew confs null-fills left gaps (keys ≡ 2 mod 5) in n_r, and " +
+    "the planted right-only pile (k = 1000) survives null-filled on " +
+    "the left") {
     val df = SparkEntry.queries("q_salted_join_rewrite_full")(
       spark, SparkTestSession.fixtureDir)
     import org.apache.spark.sql.functions.{col => c}
     assert(df.filter(c("n_r").isNull && c("k") % 5 === 2).count() > 0,
-      "registry gaps must null-fill through the left-outer leg")
+      "registry gaps must null-fill on the right")
     assert(df.filter(c("k") === 1000L).count() > 0,
-      "the right-only pile must ride the anti leg")
+      "the right-only pile must survive")
     assert(df.filter(c("k") === 1000L && c("event_id").isNotNull)
       .count() == 0, "right-only rows must be genuinely left-NULL")
   }
 
-  test("q_salted_join_rewrite_sampled: the in-entry fired require " +
-    "holds — the deterministic sampled diagnosis proves the planted " +
-    "hot pile at the audit fixture scale") {
+  test("q_salted_join_rewrite_sampled: the in-entry skew-split " +
+    "require holds at the audit fixture scale") {
     val df = SparkEntry.queries("q_salted_join_rewrite_sampled")(
       spark, SparkTestSession.fixtureDir)
     assert(df.count() > 0)

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,7 +8,9 @@ import graft.SparkTestSession
 
 /** Join-skew diagnostic card: hand-computed hot keys, one-sided keys in
   * the totals, NULL join keys as first-class skew rows (round-14 advice
-  * fix), and the NULL-share guard on an empty join. */
+  * fix), and the NULL-share guard on an empty join; the sampled pile
+  * probe; and AQE's skew split on the planted hot key, the treatment
+  * the catalog's skew-join entries rely on. */
 class JoinSkewSpec extends AnyFunSuite {
 
   private def spark = SparkTestSession.withTables()
@@ -80,212 +83,6 @@ class JoinSkewSpec extends AnyFunSuite {
     assert(e.getMessage.contains("targetRows"))
   }
 
-  test("saltedJoin: result-identical to the plain inner join on a " +
-    "planted-skew corpus (hot key, cold keys, NULL keys, one-sided " +
-    "keys), and the hot key's max per-task shuffle read drops") {
-    val s = spark
-    import s.implicits._
-    // 2000 rows on hot key 0, 40 cold keys x 50 rows, NULL keys both
-    // sides, a left-only and a right-only key
-    val left = ((1L to 2000L).map(i => (Some(0L), i)) ++
-      (1L to 40L).flatMap(k => (1L to 50L).map(i => (Some(k), k * 1000 + i))) ++
-      Seq((Option.empty[Long], 900001L), (Some(777L), 900002L)))
-      .toDF("k", "l_payload")
-    val right = ((1L to 2L).map(j => (Some(0L), j)) ++
-      (1L to 40L).map(k => (Some(k), k)) ++
-      Seq((Option.empty[Long], 800001L), (Some(888L), 800002L)))
-      .toDF("k", "r_payload")
-    val plain = left.join(right, Seq("k"))
-    val salted = JoinSkew.saltedJoin(left, right, "k",
-      targetRows = 200L, topN = 5)
-    def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(canon(salted) == canon(plain),
-      "salted join must be row-for-row the plain inner join " +
-        "(NULL keys dropped, one-sided keys dropped, duplicates kept)")
-    // no cartesian anywhere in the treatment
-    val phys = salted.queryExecution.executedPlan.toString
-    assert(!phys.contains("CartesianProduct"), phys)
-
-    // measured treatment: with AQE's own skew handling off and
-    // broadcast disabled (so both paths shuffle), the max per-task
-    // shuffle read of the salted plan must be well under the plain
-    // plan's hot-partition read
-    val conf = s.conf
-    val aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val bct = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val maxRead = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          maxRead.updateAndGet(m => math.max(m,
-            t.taskMetrics.shuffleReadMetrics.recordsRead))
-    }
-    def measure(body: => Unit): Long = {
-      maxRead.set(0L)
-      body
-      var last = -1L; var spins = 0
-      while (maxRead.get != last && spins < 40) {
-        last = maxRead.get; spins += 1; Thread.sleep(250)
-      }
-      maxRead.get
-    }
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.sparkContext.addSparkListener(listener)
-    try {
-      val maxPlain = measure(left.join(right, Seq("k")).write
-        .format("noop").mode("overwrite").save())
-      val maxSalted = measure(JoinSkew.saltedJoin(left, right, "k",
-        targetRows = 200L, topN = 5).write
-        .format("noop").mode("overwrite").save())
-      // hot key: 2000 left rows in ONE task plain; salt 20 spreads its
-      // sub-keys over the 4 shuffle partitions (~500 + replicated
-      // right rows per task)
-      assert(maxPlain >= 2000L,
-        s"fixture must actually be skewed, max plain read $maxPlain")
-      assert(maxSalted * 2 <= maxPlain,
-        s"salting must at least halve the max task read at 4 " +
-          s"partitions: plain $maxPlain vs salted $maxSalted")
-    } finally {
-      s.sparkContext.removeSparkListener(listener)
-      conf.set("spark.sql.adaptive.enabled", aqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", bct)
-    }
-  }
-
-  test("saltedJoin: map-bearing payloads (top-level AND nested) are " +
-    "excluded from the deterministic salt, keys-only left falls back " +
-    "to round-robin — both stay result-identical") {
-    val s = graft.SparkTestSession.spark
-    import s.implicits._
-    val left = s.range(0, 300)
-      .select(col("id").as("lid"),
-        when(col("id") % 2 === 0, 0L).otherwise(col("id") % 10 + 1).as("k"),
-        map(lit("a"), col("id")).as("m"),
-        struct(map(lit("b"), col("id")).as("inner")).as("nested"))
-    val right = s.range(0, 11).select(col("id").as("k"),
-      (col("id") + 100).as("rv"))
-    // map at top level AND inside a struct: both must be dropped from
-    // the hash (Spark rejects hashing maps recursively) — the join
-    // still runs deterministically off lid
-    val plain = left.join(right, Seq("k")).count()
-    assert(JoinSkew.saltedJoin(left, right, "k",
-      targetRows = 20L, topN = 3).count() == plain)
-    // keys-only left: content hashing would be constant per hot key, so
-    // the round-robin fallback kicks in — identity still holds
-    val keysOnly = left.select("k")
-    val plainKo = keysOnly.join(right, Seq("k")).count()
-    assert(JoinSkew.saltedJoin(keysOnly, right, "k",
-      targetRows = 20L, topN = 3).count() == plainKo)
-  }
-
-  test("saltedJoin semi/anti (direct library calls): identical to the " +
-    "plain joins across hot/cold/NULL/one-sided/missing-hot keys, " +
-    "keys-only left falls back to round-robin, empty plan " +
-    "short-circuits, colliding payloads are legal for semi/anti") {
-    val s = spark
-    import s.implicits._
-    // hot key 0 present on the right; hot-ish key 1 MISSING from the
-    // right; NULL keys both sides; one-sided keys
-    val left = ((1L to 800L).map(i => (Some(0L), i)) ++
-      (1L to 400L).map(i => (Some(1L), 10000 + i)) ++
-      (2L to 20L).flatMap(k => (1L to 10L).map(i => (Some(k), k * 1000 + i))) ++
-      Seq((Option.empty[Long], 900001L), (Some(777L), 900002L)))
-      .toDF("k", "v")
-    val right = ((1L to 2L).map(j => (Some(0L), j)) ++
-      (2L to 20L).map(k => (Some(k), k)) ++
-      Seq((Option.empty[Long], 800001L), (Some(888L), 800002L)))
-      .toDF("k", "v") // SAME payload name: legal for semi/anti
-    // anti KEEPS NULL-key left rows — canon must tolerate them
-    def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (if (r.isNullAt(0)) Long.MinValue else r.getLong(0),
-        r.getLong(1))).sorted.toSeq
-    for (jt <- Seq("left_semi", "left_anti")) {
-      val plain = left.join(right.select("k"), Seq("k"), jt)
-      val salted = JoinSkew.saltedJoin(left, right, "k",
-        targetRows = 100L, topN = 5, joinType = jt)
-      assert(canon(salted) == canon(plain), s"$jt diverged")
-      // empty plan (nothing hot) short-circuits to the plain join
-      val lazyPlan = JoinSkew.saltingPlan(left, right, "k",
-        targetRows = 1000000L, topN = 5)
-      assert(canon(JoinSkew.saltedJoin(left, right, "k", lazyPlan,
-        joinType = jt)) == canon(plain), s"$jt empty-plan diverged")
-    }
-    // keys-only left: the deterministic salt has no non-key payload to
-    // hash, so the documented round-robin fallback engages — identity
-    // must still hold for semi/anti
-    val keysOnly = left.select("k")
-    for (jt <- Seq("left_semi", "left_anti")) {
-      val plain = keysOnly.join(right.select("k"), Seq("k"), jt)
-        .collect().map(r => if (r.isNullAt(0)) -1L else r.getLong(0))
-        .sorted.toSeq
-      val salted = JoinSkew.saltedJoin(keysOnly, right, "k",
-        targetRows = 100L, topN = 5, joinType = jt)
-        .collect().map(r => if (r.isNullAt(0)) -1L else r.getLong(0))
-        .sorted.toSeq
-      assert(salted == plain, s"$jt keys-only diverged")
-    }
-    // preserved pricing salts the missing-hot key 1 (out_rows 0)
-    val plan = JoinSkew.saltingPlanPreserved(left, right, "k",
-      targetRows = 100L, topN = 5).collect()
-      .filter(!_.isNullAt(0))
-      .map(r => r.getLong(0) -> r.getLong(4)).toMap
-    assert(plan.getOrElse(1L, 0L) >= 2L,
-      s"key 1 (n_left 400, n_right 0) must salt under preserved " +
-        s"pricing: $plan")
-  }
-
-  test("saltedJoin: guards — missing key column, colliding payload " +
-    "columns, reserved _salt name") {
-    val s = spark
-    import s.implicits._
-    val l = Seq((1L, 2L)).toDF("k", "v")
-    val r = Seq((1L, 3L)).toDF("k", "w")
-    val e1 = intercept[IllegalArgumentException](
-      JoinSkew.saltedJoin(l, r.withColumnRenamed("k", "kk"), "k", 10L, 5))
-    assert(e1.getMessage.contains("join key"))
-    val e2 = intercept[IllegalArgumentException](
-      JoinSkew.saltedJoin(l, r.withColumnRenamed("w", "v"), "k", 10L, 5))
-    assert(e2.getMessage.contains("collide"))
-    val e3 = intercept[IllegalArgumentException](
-      JoinSkew.saltedJoin(l.withColumnRenamed("v", "_salt"), r, "k",
-        10L, 5))
-    assert(e3.getMessage.contains("_salt"))
-  }
-
-  test("saltingPlanMulti: tuple counts with hand-computed salts, " +
-    "NULL-safe tuple grouping, preserved pricing by the left pile") {
-    val s = spark
-    import s.implicits._
-    val left = (Seq.fill(3)((Option(1L), 1L)) ++ Seq((Option(1L), 2L)) ++
-      Seq.fill(2)((Option.empty[Long], 1L))).toDF("k", "day")
-    val right = (Seq.fill(4)((Option(1L), 1L)) ++
-      Seq((Option.empty[Long], 1L))).toDF("k", "day")
-    val plan = JoinSkew.saltingPlanMulti(left, right, Seq("k", "day"),
-      targetRows = 5L).collect()
-      .map(r => (Option(r.get(0)), r.getLong(1)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
-    // (1,1): 3x4 = 12 -> salt ceil(12/5) = 3; (1,2): 1x0 = 0 -> 0;
-    // (NULL,1): null-safe tuple grouping meets in ONE row, 2x1 = 2 -> 1
-    assert(plan == Map(
-      (Option(1L), 1L) -> ((3L, 4L, 12L, 3L)),
-      (Option(1L), 2L) -> ((1L, 0L, 0L, 0L)),
-      (Option.empty[Long], 1L) -> ((2L, 1L, 2L, 1L))))
-    // preserved pricing: (1,2) is a probe tuple MISSING on the right —
-    // out_rows 0 but n_left 1, so its price (and salt base) is the pile
-    val pres = JoinSkew.saltingPlanMulti(left, right, Seq("k", "day"),
-      targetRows = 1L, preserved = true).collect()
-      .map(r => (Option(r.get(0)), r.getLong(1)) -> r.getLong(5)).toMap
-    assert(pres((Option(1L), 2L)) == 1L,
-      "preserved pricing must salt-base the unmatched probe pile")
-    // (1,1): price 12 at target 1 would ceil to 12, but the salt CAPS
-    // at n_left = 3 — splitting 3 rows more than 3 ways buys nothing
-    // and each extra bucket is one more full right-side replica
-    assert(pres((Option(1L), 1L)) == 3L)
-  }
-
   test("salt caps at n_left: a 1-row left key with a huge right side " +
     "prices salt 1 (nothing to split), never a six-digit replication " +
     "factor (r17 diagnosis fix)") {
@@ -297,133 +94,126 @@ class JoinSkewSpec extends AnyFunSuite {
       col("id").as("rv"))
     // key 0: n_left 1, n_right 300k, out 300k — uncapped ceil would be
     // 1500 at target 200; the cap must pin it to n_left = 1
-    val plan = JoinSkew.saltingPlanMulti(left, right, Seq("k"),
-      targetRows = 200L, topN = 5, preserved = true).collect()
+    val plan = JoinSkew.saltingPlan(left, right, "k",
+      targetRows = 200L, topN = 5).collect()
       .map(r => r.getLong(0) -> r.getLong(4)).toMap
     assert(plan(0L) == 1L, s"salt must cap at n_left: $plan")
-    // the treatment therefore leaves it on the cold path (salt < 2) —
-    // and stays result-identical
-    val plain = left.join(right, Seq("k")).collect().map(_.toSeq).toSet
-    val salted = JoinSkew.saltedJoin(left, right, "k",
-      targetRows = 200L, topN = 5).collect().map(_.toSeq).toSet
-    assert(salted == plain)
   }
 
-  test("saltingPlanSampled: rate 1.0 falls through to the exact plan; " +
-    "a low deterministic rate still finds the planted hot key and " +
-    "inflation over-salts rather than under-salts") {
+  test("pilesAtOrAbove: rate 1.0 equals the exact counts; a low " +
+    "deterministic rate still finds the planted pile, and the same " +
+    "call returns the same rows") {
     val s = spark
+    // key 0: 2000 left rows; keys 2, 4, …, 100: 40 left rows each;
+    // right: one row per key 0..100
     val left = s.range(0, 4000).select(
       when(col("id") % 2 === 0, 0L).otherwise(col("id") % 100 + 1).as("k"),
       col("id").as("payload"))
     val right = s.range(0, 101).select(col("id").as("k"),
       (col("id") * 7).as("rv"))
-    // the sampled planner prices pile-aware (greatest(out, n_left)) at
-    // every rate — rate 1.0 is exact COUNTS under that pricing
-    val exact = JoinSkew.saltingPlanMulti(left, right, Seq("k"),
-      targetRows = 200L, topN = 5, preserved = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(4)).toMap
-    val exact2 = JoinSkew.saltingPlanSampled(left, right, Seq("k"),
-      targetRows = 200L, topN = 5, sampleRate = 1.0).collect()
-      .map(r => r.getLong(0) -> r.getLong(4)).toMap
-    assert(exact2 == exact, "rate 1.0 must be the exact-count plan")
-    val sampled = JoinSkew.saltingPlanSampled(left, right, Seq("k"),
-      targetRows = 200L, topN = 5, sampleRate = 0.05).collect()
-      .map(r => r.getLong(0) -> r.getLong(4)).toMap
-    // the planted hot key (2000 left rows x 1 right row -> exact salt
-    // ceil(2000/200) = 10) must salt under the sample too, and the
-    // 3-sigma inflation biases UP: within [exact, 4x exact]
-    assert(sampled.contains(0L), s"hot key missed by the sample: $sampled")
-    assert(sampled(0L) >= exact(0L) / 2 && sampled(0L) <= exact(0L) * 4,
-      s"sampled salt ${sampled(0L)} vs exact ${exact(0L)}")
-    // determinism: the same call yields the same plan (hash sample,
-    // never arrival-order)
-    val again = JoinSkew.saltingPlanSampled(left, right, Seq("k"),
-      targetRows = 200L, topN = 5, sampleRate = 0.05).collect()
-      .map(r => r.getLong(0) -> r.getLong(4)).toMap
-    assert(again == sampled)
+    def piles(target: Long, rate: Double) = JoinSkew.pilesAtOrAbove(
+        left, right, Seq("k"), targetRows = target, sampleRate = rate)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    // target 1 keeps every key with a left row, at its exact counts
+    // (right-only keys price greatest(0, 0) and drop)
+    val exact = (2L to 100L by 2L).map(k => k -> ((40L, 1L, 40L))).toMap +
+      (0L -> ((2000L, 1L, 2000L)))
+    assert(piles(1L, 1.0) == exact, "rate 1.0 must be the exact counts")
+    // at 5% only the planted pile can reach 1000 (a 40-row key would
+    // need all 40 rows sampled and then some); its point estimate
+    // stays near the true 2000 left rows
+    val sampled = piles(1000L, 0.05)
+    assert(sampled.keySet == Set(0L), s"planted pile missed: $sampled")
+    assert(sampled(0L)._1 >= 1000L && sampled(0L)._1 <= 4000L,
+      s"sampled n_left ${sampled(0L)._1} vs exact 2000")
+    // determinism: a payload hash sample, never arrival order
+    assert(piles(1000L, 0.05) == sampled)
   }
 
-  test("saltingPlanSampled: a keys-only side (no hashable non-key " +
-    "payload) is counted EXACTLY — a key-only hash would sample whole " +
-    "keys all-or-nothing and hide hot keys") {
+  test("pilesAtOrAbove: a keys-only side (no hashable non-key payload) " +
+    "is counted EXACTLY — a key-only hash would sample whole keys " +
+    "all-or-nothing and hide hot keys") {
     val s = spark
+    // key 0: 1000 left rows; keys 2, 4, …, 50: 40 left rows each
     val left = s.range(0, 2000).select(
       when(col("id") % 2 === 0, 0L).otherwise(col("id") % 50 + 1).as("k"))
     val right = s.range(0, 51).select(col("id").as("k"))
-    val sampled = JoinSkew.saltingPlanSampled(left, right, Seq("k"),
-      targetRows = 100L, topN = 5, sampleRate = 0.01).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(4))).toMap
-    // both sides are keys-only -> exact counts -> exact salts
-    assert(sampled(0L) == ((1000L, 10L)),
-      s"keys-only sides must count exactly: $sampled")
+    val piles = JoinSkew.pilesAtOrAbove(left, right, Seq("k"),
+        targetRows = 100L, sampleRate = 0.01).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(piles == Map(0L -> ((1000L, 1L))),
+      s"keys-only sides must count exactly: $piles")
   }
 
-  test("saltedJoinMulti: result-identical to the plain composite-key " +
-    "join for inner/left/anti, NULL key components riding the cold " +
-    "path") {
+  test("AQE's skew split on the planted hot key: inner, left outer, " +
+    "right outer, left semi, left anti and composite-key joins read a " +
+    "skew-split shuffle, cap the largest task read at a quarter of the " +
+    "unsplit join's, and return the unsplit join's rows") {
     val s = spark
-    val left = s.range(0, 3000).select(
-      col("id").as("lid"),
-      when(col("id") % 2 === 0, 0L).otherwise(col("id") % 40 + 1).as("k"),
-      when(col("id") % 2 === 0, 7L)
-        .otherwise(when(col("id") % 11 === 0, lit(null).cast("bigint"))
-          .otherwise(col("id") % 5)).as("day"),
-      (col("id") * 3).as("lv"))
-    val right = s.range(0, 41).select(col("id").as("k"))
-      .crossJoin(s.range(0, 8).select(col("id").as("day")))
-      .filter(col("day") =!= 2)
-      .withColumn("rv", col("k") * 1000 + col("day"))
-    for (jt <- Seq("inner", "left", "left_anti")) {
-      val cols = if (jt == "left_anti") Seq("lid", "k", "day", "lv")
-        else Seq("lid", "k", "day", "lv", "rv")
-      val plain = left.join(right, Seq("k", "day"), jt)
-        .select(cols.map(col): _*).collect().map(_.toSeq).toSet
-      val plan = JoinSkew.saltingPlanMulti(left, right, Seq("k", "day"),
-        targetRows = 100L, topN = 5, preserved = jt != "inner")
-      val salted = JoinSkew.saltedJoinMulti(left, right, Seq("k", "day"),
-        plan, joinType = jt).select(cols.map(col): _*)
-        .collect().map(_.toSeq).toSet
-      assert(salted == plain, s"composite $jt identity broke")
+    // the q_salted_join* entries' planted hot key over 12k events: every
+    // 3rd on k = 0 (and day = 7), the rest over ≤ 500 keys × 5 days.
+    // The fact side is spread over 16 partitions, so its map stage has
+    // 16 tasks (AQE splits a skewed partition at map-output
+    // granularity), and every dimension is materialized (AQE splits
+    // only between two plain shuffle reads)
+    val fact = s.range(0, 12000, 1, 16).select(col("id").as("event_id"),
+        ((col("id") * 7919L) % 1000L).as("user_id"),
+        (col("id") % 97L).cast("double").as("value"))
+      .select(col("event_id"),
+        when(col("event_id") % 3 === 0, 0L)
+          .otherwise(pmod(col("user_id"), lit(500L)) + 1L).as("k"),
+        when(col("event_id") % 3 === 0, 7L)
+          .otherwise(pmod(col("event_id"), lit(5L))).as("day"),
+        col("value"))
+    def counts(df: DataFrame, keys: String*) = df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_r")).localCheckpoint(true)
+    val dim = counts(fact, "k")
+    val registry = counts(fact.filter(col("k") % 5 =!= 2), "k")
+    val block = fact.filter(col("k") % 7 === 0).select("k").distinct()
+      .localCheckpoint(true)
+    val dimMulti = counts(fact, "k", "day")
+    val shapes: Seq[(String, () => DataFrame)] = Seq(
+      "inner" -> (() => fact.join(dim, Seq("k"))),
+      "left outer" -> (() => fact.join(registry, Seq("k"), "left")),
+      "right outer" -> (() => registry.join(fact, Seq("k"), "right")),
+      "left semi" -> (() => fact.join(block, Seq("k"), "left_semi")),
+      "left anti" -> (() => fact.join(block, Seq("k"), "left_anti")),
+      "composite key" -> (() => fact.join(dimMulti, Seq("k", "day"))))
+
+    val maxRead = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null)
+          maxRead.accumulateAndGet(
+            t.taskMetrics.shuffleReadMetrics.recordsRead, math.max)
     }
-  }
-
-  test("saltedJoinFull: result-identical to the plain FULL OUTER join " +
-    "— null-fills on both sides, right-only keys, NULL keys on both " +
-    "sides — and still composes when neither leg trips (plain legs)") {
-    val s = spark
-    val left = s.range(0, 2000).select(
-      col("id").as("lid"),
-      when(col("id") % 2 === 0, 0L)
-        .otherwise(when(col("id") % 9 === 0, lit(null).cast("bigint"))
-          .otherwise(col("id") % 50 + 1)).as("k"),
-      (col("id") * 2).as("lv"))
-    val right = s.range(0, 81).filter(col("id") % 4 === 0).select(
-      when(col("id") === 80L, lit(null).cast("bigint"))
-        .otherwise(col("id")).as("k"),
-      (col("id") + 100).as("rv"))
-    val cols = Seq("lid", "k", "lv", "rv").map(col)
-    val plain = left.join(right, Seq("k"), "full")
-      .select(cols: _*).collect().map(_.toSeq).toSet
-    val saltedDf = JoinSkew.saltedJoinFull(left, right, "k",
-      targetRows = 100L, topN = 5).select(cols: _*)
-    val salted = saltedDf.collect().map(_.toSeq).toSet
-    assert(salted == plain, "full-outer composition identity broke")
-    // the Set is blind to once-per-replica duplicate emission — the
-    // exact hazard the composition avoids; pin the multiset via count.
-    // The fixture has no fully-duplicate rows (lid/rv distinct), so
-    // set size == row count on the plain side
-    assert(saltedDf.count() == plain.size,
-      "composition must emit each row exactly once")
-    // untripped both legs: a flat join still equals the plain full join
-    val flat = s.range(0, 200).select(col("id").as("lid"),
-      (col("id") % 50).as("k"), col("id").as("lv"))
-    val plainFlat = flat.join(right, Seq("k"), "full")
-      .select(cols: _*).collect().map(_.toSeq).toSet
-    val saltedFlat = JoinSkew.saltedJoinFull(flat, right, "k",
-      targetRows = 1000L, topN = 5).select(cols: _*)
-      .collect().map(_.toSeq).toSet
-    assert(saltedFlat == plainFlat)
+    // rows, the executed plan's skew-split reads, and the largest
+    // per-task shuffle read of one run
+    def run(join: () => DataFrame) = {
+      maxRead.set(0L)
+      val df = join()
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      org.apache.spark.ListenerBusDrain(s.sparkContext)
+      (rows, graft.operators.EventQueries.skewSplitReads(
+        df.queryExecution.executedPlan), maxRead.get)
+    }
+    val splitConf = "spark.sql.adaptive.skewJoin.enabled"
+    s.sparkContext.addSparkListener(listener)
+    try graft.operators.EventQueries.withSkewSplitConfs(s) {
+      for ((shape, join) <- shapes) {
+        val (rows, splits, splitMax) = run(join)
+        s.conf.set(splitConf, "false")
+        val (plainRows, plainSplits, plainMax) =
+          try run(join) finally s.conf.unset(splitConf)
+        assert(plainSplits == 0, s"$shape: the unsplit baseline split")
+        assert(splits > 0, s"$shape: AQE did not split the hot partition")
+        assert(splitMax * 4 <= plainMax,
+          s"$shape: largest task read $splitMax split vs $plainMax unsplit")
+        assert(rows == plainRows, s"$shape: the split changed the rows")
+      }
+    } finally s.sparkContext.removeSparkListener(listener)
   }
 
   test("joinSkewCard: disjoint keys yield zero output and NULL shares") {

@@ -932,4 +932,25 @@ class StreamingPipelineSpec extends AnyFunSuite {
         "after its scope is reclaimed")
     pi.close(); pi.close()
   }
+
+  test("streaming dedup with watermark drops replayed events") {
+    val s = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-sdedup").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-sdedup-ckpt").toString
+    // replay the fixture log twice — at-least-once delivery
+    s.table("events").limit(200).write.mode("append").parquet(dir)
+    s.table("events").limit(200).write.mode("append").parquet(dir)
+    val deduped = s.readStream
+      .schema(graft.dml.events.Events.schema).parquet(dir)
+      .withWatermark("ts", "24 hours")
+      .dropDuplicates("event_id")
+    val q = deduped.writeStream.format("memory").queryName("dedup_out")
+      .outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    assert(s.table("dedup_out").count() == 200)
+    assert(s.table("dedup_out").select("event_id").distinct().count() == 200)
+  }
 }
