@@ -263,18 +263,23 @@ object EventQueries {
     }
   }
 
-  /** The planted-hot-key inner join shared by q_salted_join,
-    * q_salted_join_rewrite and q_salted_join_rewrite_sampled: the
-    * spread fact side joined to its materialized per-key count table
-    * under [[aqeSkewJoin]]. */
-  private def plantedInnerJoin(s: SparkSession, dir: String): DataFrame = {
-    val e = plantedHotKey(s, dir)
-    val r = e.groupBy("k").agg(count(lit(1)).cast("bigint").as("n_r"))
-      .localCheckpoint(true)
-    aqeSkewJoin(s) {
-      spreadFact(e).join(r, Seq("k"))
-        .select("event_id", "k", "value", "n_r")
-    }
+  /** Plans `join` with the range-join rule on and returns it
+    * materialized (the rule acts while planning, so the conf must be
+    * in force until then). Fails if the join planned as a nested loop,
+    * the plan the rule exists to replace. */
+  private def rangeRewritten(s: SparkSession)(join: => DataFrame)
+      : DataFrame = {
+    graft.functions.GraftExtensions.register(s)
+    val prev = s.conf.get("spark.graft.rangeJoin.rewrite", "false")
+    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
+    try {
+      val out = join
+      val plan = out.queryExecution.executedPlan.toString
+      require(!plan.contains("BroadcastNestedLoopJoin") &&
+        !plan.contains("CartesianProduct"),
+        "range join planned as a nested loop")
+      out.localCheckpoint(true)
+    } finally s.conf.set("spark.graft.rangeJoin.rewrite", prev)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -326,10 +331,14 @@ object EventQueries {
     // split did not fire; measurements in BASELINE.md "AQE skew split
     // vs the salted rewrite"). The oracles are the plain joins, so the
     // hash gate proves the split result-identical every round
-    "q_salted_join" -> { (s, dir) => plantedInnerJoin(s, dir) },
-    "q_salted_join_rewrite" -> { (s, dir) => plantedInnerJoin(s, dir) },
-    "q_salted_join_rewrite_sampled" -> { (s, dir) =>
-      plantedInnerJoin(s, dir)
+    "q_salted_join" -> { (s, dir) =>
+      val e = plantedHotKey(s, dir)
+      val r = e.groupBy("k").agg(count(lit(1)).cast("bigint").as("n_r"))
+        .localCheckpoint(true)
+      aqeSkewJoin(s) {
+        spreadFact(e).join(r, Seq("k"))
+          .select("event_id", "k", "value", "n_r")
+      }
     },
 
     // the ENRICHMENT shape: the planted-hot-key stream LEFT-joining a
@@ -676,233 +685,63 @@ object EventQueries {
     // join written as a PLAIN range-predicate join — which Catalyst
     // alone plans as a BroadcastNestedLoopJoin — rewritten
     // automatically by the conf-gated RangeJoinRewrite rule into the
-    // bucketed equi-join + exact re-filter. The oracle is the naive
-    // range predicate, so the hash gate re-proves the rewrite's result
-    // identity every round; the entry hard-fails if the nested loop
-    // survives and eagerly materializes before the conf restores
+    // bucketed equi-join + exact re-filter, at the measured width (the
+    // windows' median span, 36 hours). The oracle is the naive range
+    // predicate, so the hash gate re-proves the rewrite's result
+    // identity every round
     "q_range_join_rewrite" -> { (s, dir) =>
-      graft.functions.GraftExtensions.register(s)
       val e = events(s, dir)
       val win = e.filter(col("event_id") % 499 === 0)
         .select(col("event_id").as("window_id"), col("ts").as("lo"),
           (col("ts") + expr("INTERVAL 36 HOURS")).as("hi"))
-      val prevOn = s.conf.get("spark.graft.rangeJoin.rewrite", "false")
-      // getOption/unset restore: re-setting the DEFAULT would convert
-      // an unset conf into an explicitly-set one, which (since the
-      // measured-width modes) suppresses bucketSecAuto for the session
-      val prevW = s.conf.getOption("spark.graft.rangeJoin.bucketSec")
-      s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-      s.conf.set("spark.graft.rangeJoin.bucketSec", (24 * 3600).toString)
-      try {
-        val out = e.select("event_id", "ts")
+      rangeRewritten(s) {
+        e.select("event_id", "ts")
           .join(win, col("ts") >= col("lo") && col("ts") <= col("hi"))
           .select("event_id", "window_id")
-        val plan = out.queryExecution.executedPlan.toString
-        require(!plan.contains("BroadcastNestedLoopJoin") &&
-          !plan.contains("CartesianProduct"),
-          "range-join rewrite did not fire; the nested loop survived")
-        out.localCheckpoint(true)
-      } finally {
-        s.conf.set("spark.graft.rangeJoin.rewrite", prevOn)
-        prevW match {
-          case Some(w) => s.conf.set("spark.graft.rangeJoin.bucketSec", w)
-          case None => s.conf.unset("spark.graft.rangeJoin.bucketSec")
-        }
       }
     },
 
-    // the KEYED range join as engine behavior (r17): the production
+    // the KEYED range join as engine behavior: the production
     // (key, ts BETWEEN lo AND hi) shape — events joined to PER-TYPE
-    // time windows. Without the keyed opt-in the rule correctly
-    // declines (the planner hash-joins the equality), but event_type
-    // is LOW-cardinality, so each hash group is a per-type cartesian
-    // scanned by the range filter; with
-    // spark.graft.rangeJoin.keyedRewrite=true the equality lifts into
-    // the bucketed join's key list and the shuffle partitions on
-    // (type, day-bucket). The oracle is the naive equality+range
-    // predicate, so the hash gate re-proves the lift's identity —
-    // including that NULL-free key equality and strict bucket
-    // completeness survive — every round
+    // time windows. event_type is LOW-cardinality, so each planner
+    // hash group is a per-type cartesian scanned by the range filter;
+    // the rule lifts the equality into the bucketed join's key list
+    // (the shuffle partitions on (type, bucket)) once the hottest
+    // type's candidate pairs reach RangeJoinRewrite.KeyedLiftPairs.
+    // That happens at sf0.1 (about 2.0 M pairs); at sf0.001 and sf0.01
+    // (420 and 25,753 pairs) the planner's hash join stays. The oracle
+    // is the naive equality+range predicate, so the hash gate proves
+    // either plan's identity every round
     "q_range_join_keyed" -> { (s, dir) =>
-      graft.functions.GraftExtensions.register(s)
       val e = events(s, dir)
       val win = e.filter(col("event_id") % 223 === 0)
         .select(col("event_id").as("window_id"),
           col("event_type").as("wtype"), col("ts").as("lo"),
           (col("ts") + expr("INTERVAL 36 HOURS")).as("hi"))
-      val prevOn = s.conf.get("spark.graft.rangeJoin.rewrite", "false")
-      val prevK = s.conf.get("spark.graft.rangeJoin.keyedRewrite", "false")
-      // getOption/unset restore: re-setting the DEFAULT would convert
-      // an unset conf into an explicitly-set one, which (since the
-      // measured-width modes) suppresses bucketSecAuto for the session
-      val prevW = s.conf.getOption("spark.graft.rangeJoin.bucketSec")
-      s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-      s.conf.set("spark.graft.rangeJoin.keyedRewrite", "true")
-      s.conf.set("spark.graft.rangeJoin.bucketSec", (24 * 3600).toString)
-      try {
-        val out = e.select("event_id", "event_type", "ts")
+      rangeRewritten(s) {
+        e.select("event_id", "event_type", "ts")
           .join(win, col("event_type") === col("wtype") &&
             col("ts") >= col("lo") && col("ts") <= col("hi"))
           .select("event_id", "event_type", "window_id")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_range"),
-          "keyed range rewrite did not fire; the entry would not " +
-            "exercise it")
-        require(!plan.contains("BroadcastNestedLoopJoin") &&
-          !plan.contains("CartesianProduct"),
-          "keyed range rewrite must not leave a nested loop")
-        out.localCheckpoint(true)
-      } finally {
-        s.conf.set("spark.graft.rangeJoin.rewrite", prevOn)
-        s.conf.set("spark.graft.rangeJoin.keyedRewrite", prevK)
-        prevW match {
-          case Some(w) => s.conf.set("spark.graft.rangeJoin.bucketSec", w)
-          case None => s.conf.unset("spark.graft.rangeJoin.bucketSec")
-        }
       }
     },
 
-    // the range rewrite on a NUMERIC band (r15 verdict task 5): value
-    // bands ±1.0 around sampled anchor scores — lo goes NEGATIVE at
-    // the distribution's left edge and the conf width is FRACTIONAL
-    // (2.5), exercising exactly the floor-of-negative-quotient and
-    // fractional-bucket arithmetic the type-generic bucketing claims.
-    // Catalyst alone plans the BETWEEN as a BroadcastNestedLoopJoin;
-    // the oracle is the naive predicate, so the hash gate re-proves
-    // the numeric path's result identity every round
+    // the range rewrite on a NUMERIC band: value bands ±1.0 around
+    // sampled anchor scores — lo goes NEGATIVE at the distribution's
+    // left edge, exercising the floor-of-negative-quotient bucketing
+    // at the measured (double) width. Catalyst alone plans the BETWEEN
+    // as a BroadcastNestedLoopJoin; the oracle is the naive predicate,
+    // so the hash gate re-proves the numeric path's result identity
+    // every round
     "q_range_join_rewrite_num" -> { (s, dir) =>
-      graft.functions.GraftExtensions.register(s)
       val e = events(s, dir)
       val win = e.filter(col("event_id") % 997 === 0)
         .select(col("event_id").as("window_id"),
           (col("value") - 1.0).as("lo"), (col("value") + 1.0).as("hi"))
-      val prevOn = s.conf.get("spark.graft.rangeJoin.rewrite", "false")
-      // the numeric width has NO default (unset = numeric family
-      // declines), so restore means unset when it was not set before
-      val prevW = s.conf.getOption("spark.graft.rangeJoin.numBucketWidth")
-      s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-      s.conf.set("spark.graft.rangeJoin.numBucketWidth", "2.5")
-      try {
-        val out = e.select(col("event_id"), col("value"))
+      rangeRewritten(s) {
+        e.select(col("event_id"), col("value"))
           .join(win, col("value") >= col("lo") && col("value") <= col("hi"))
           .select("event_id", "window_id")
-        val plan = out.queryExecution.executedPlan.toString
-        require(!plan.contains("BroadcastNestedLoopJoin") &&
-          !plan.contains("CartesianProduct"),
-          "numeric range-join rewrite did not fire; the nested loop " +
-            "survived")
-        out.localCheckpoint(true)
-      } finally {
-        s.conf.set("spark.graft.rangeJoin.rewrite", prevOn)
-        prevW match {
-          case Some(w) =>
-            s.conf.set("spark.graft.rangeJoin.numBucketWidth", w)
-          case None =>
-            s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-        }
-      }
-    },
-
-    // the MEASURED numeric width (r17): the same BNLJ-cliff band join
-    // as q_range_join_rewrite_num, but with NO width conf at all —
-    // spark.graft.rangeJoin.numWidthAuto=true diagnoses the width from
-    // the intervals side (median valid span; the spans here vary
-    // 2.0..3.5 by event_id, so the median is a real distribution
-    // statistic, not a constant echo). The oracle is the naive
-    // predicate, so the hash gate re-proves that the measured width is
-    // performance-only — the emission set is the nested loop's exactly
-    "q_range_join_rewrite_auto" -> { (s, dir) =>
-      graft.functions.GraftExtensions.register(s)
-      val e = events(s, dir)
-      val win = e.filter(col("event_id") % 1009 === 0)
-        .select(col("event_id").as("window_id"),
-          (col("value") - 1.0).as("lo"),
-          (col("value") + 1.0 + (col("event_id") % 7) * 0.25).as("hi"))
-      val prevOn = s.conf.get("spark.graft.rangeJoin.rewrite", "false")
-      val prevW = s.conf.getOption("spark.graft.rangeJoin.numBucketWidth")
-      val prevA = s.conf.get("spark.graft.rangeJoin.numWidthAuto", "false")
-      s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-      s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-      s.conf.set("spark.graft.rangeJoin.numWidthAuto", "true")
-      try {
-        val out = e.select(col("event_id"), col("value"))
-          .join(win, col("value") >= col("lo") && col("value") <= col("hi"))
-          .select("event_id", "window_id")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_range"),
-          "measured-width rewrite did not fire; the entry would not " +
-            "exercise it")
-        require(!plan.contains("BroadcastNestedLoopJoin") &&
-          !plan.contains("CartesianProduct"),
-          "measured-width rewrite must not leave a nested loop")
-        out.localCheckpoint(true)
-      } finally {
-        s.conf.set("spark.graft.rangeJoin.rewrite", prevOn)
-        s.conf.set("spark.graft.rangeJoin.numWidthAuto", prevA)
-        prevW match {
-          case Some(w) =>
-            s.conf.set("spark.graft.rangeJoin.numBucketWidth", w)
-          case None =>
-            s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-        }
-      }
-    },
-
-    // the MEASURED keyed decision (r17): the q_range_join_keyed shape
-    // with NO blind opt-in — spark.graft.rangeJoin.keyedAuto=true asks
-    // the per-key pile detector (JoinSkew's count-table pass, points
-    // side preserved-priced) whether any event_type's planner hash
-    // group reaches keyedTargetRows, and only then lifts the equality
-    // into the bucketed join. 300 is fixture-scale (the hottest type
-    // prices 398 at sf0.001, ~16k at sf0.01, ~1.6M at sf0.1 — the
-    // smallest fixture must trip too, the analysis gate drives every
-    // entry there; the production default stays 5M).
-    // The oracle is the naive equality+range predicate — identity is
-    // unconditional under any diagnosis outcome
-    "q_range_join_keyed_auto" -> { (s, dir) =>
-      graft.functions.GraftExtensions.register(s)
-      val e = events(s, dir)
-      val win = e.filter(col("event_id") % 307 === 0)
-        .select(col("event_id").as("window_id"),
-          col("event_type").as("wtype"), col("ts").as("lo"),
-          (col("ts") + expr("INTERVAL 36 HOURS")).as("hi"))
-      val prevOn = s.conf.get("spark.graft.rangeJoin.rewrite", "false")
-      val prevA = s.conf.get("spark.graft.rangeJoin.keyedAuto", "false")
-      val prevT = s.conf.getOption("spark.graft.rangeJoin.keyedTargetRows")
-      // getOption/unset restore: re-setting the DEFAULT would convert
-      // an unset conf into an explicitly-set one, which (since the
-      // measured-width modes) suppresses bucketSecAuto for the session
-      val prevW = s.conf.getOption("spark.graft.rangeJoin.bucketSec")
-      s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-      s.conf.set("spark.graft.rangeJoin.keyedAuto", "true")
-      s.conf.set("spark.graft.rangeJoin.keyedTargetRows", "300")
-      s.conf.set("spark.graft.rangeJoin.bucketSec", (24 * 3600).toString)
-      try {
-        val out = e.select("event_id", "event_type", "ts")
-          .join(win, col("event_type") === col("wtype") &&
-            col("ts") >= col("lo") && col("ts") <= col("hi"))
-          .select("event_id", "event_type", "window_id")
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_range"),
-          "measured keyed rewrite did not fire; the entry would not " +
-            "exercise it")
-        require(!plan.contains("BroadcastNestedLoopJoin") &&
-          !plan.contains("CartesianProduct"),
-          "measured keyed rewrite must not leave a nested loop")
-        out.localCheckpoint(true)
-      } finally {
-        s.conf.set("spark.graft.rangeJoin.rewrite", prevOn)
-        s.conf.set("spark.graft.rangeJoin.keyedAuto", prevA)
-        prevW match {
-          case Some(w) => s.conf.set("spark.graft.rangeJoin.bucketSec", w)
-          case None => s.conf.unset("spark.graft.rangeJoin.bucketSec")
-        }
-        prevT match {
-          case Some(t) =>
-            s.conf.set("spark.graft.rangeJoin.keyedTargetRows", t)
-          case None =>
-            s.conf.unset("spark.graft.rangeJoin.keyedTargetRows")
-        }
       }
     },
 
@@ -1063,18 +902,6 @@ object EventQueries {
         |SELECT l.event_id, l.k, l.value, r.n_r
         |FROM l JOIN r USING (k)""".stripMargin,
 
-    // identical plain-join oracle
-    "q_salted_join_rewrite" ->
-      """WITH l AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_id % 3 = 0 THEN 0
-        |      ELSE user_id % 500 + 1 END AS k,
-        |    value
-        |  FROM events),
-        |r AS (SELECT k, CAST(count(*) AS BIGINT) AS n_r FROM l GROUP BY 1)
-        |SELECT l.event_id, l.k, l.value, r.n_r
-        |FROM l JOIN r USING (k)""".stripMargin,
-
     // identical plain LEFT JOIN oracle, null-filled rows included
     "q_salted_join_rewrite_outer" ->
       """WITH l AS (
@@ -1134,17 +961,6 @@ object EventQueries {
         |SELECT l.event_id, COALESCE(l.k, r.k) AS k, l.value, r.n_r
         |FROM l FULL JOIN r ON l.k = r.k""".stripMargin,
 
-    // identical plain-join oracle again
-    "q_salted_join_rewrite_sampled" ->
-      """WITH l AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_id % 3 = 0 THEN 0
-        |      ELSE user_id % 500 + 1 END AS k,
-        |    value
-        |  FROM events),
-        |r AS (SELECT k, CAST(count(*) AS BIGINT) AS n_r FROM l GROUP BY 1)
-        |SELECT l.event_id, l.k, l.value, r.n_r
-        |FROM l JOIN r USING (k)""".stripMargin,
 
     // the skew-card replay filtered to key rows with the integer-ceil
     // salt factor, capped at n_left (r17: a factor beyond the left row
@@ -1413,27 +1229,6 @@ object EventQueries {
         |  FROM events WHERE event_id % 997 = 0) w
         |ON e.value >= w.lo AND e.value <= w.hi""".stripMargin,
 
-    // identical naive-predicate oracle for the MEASURED-width rewrite:
-    // the diagnosis is performance-only, so the emission set is the
-    // nested loop's under any width outcome
-    "q_range_join_rewrite_auto" ->
-      """SELECT e.event_id, w.window_id
-        |FROM events e JOIN (
-        |  SELECT event_id AS window_id, value - 1.0 AS lo,
-        |    value + 1.0 + CAST(event_id % 7 AS DOUBLE) * 0.25 AS hi
-        |  FROM events WHERE event_id % 1009 = 0) w
-        |ON e.value >= w.lo AND e.value <= w.hi""".stripMargin,
-
-    // identical naive-predicate oracle for the MEASURED keyed lift
-    "q_range_join_keyed_auto" ->
-      """SELECT e.event_id, e.event_type, w.window_id
-        |FROM events e JOIN (
-        |  SELECT event_id AS window_id, event_type AS wtype, ts AS lo,
-        |    ts + INTERVAL 36 HOUR AS hi
-        |  FROM events WHERE event_id % 307 = 0) w
-        |ON e.event_type = w.wtype AND e.ts >= w.lo AND e.ts <= w.hi"""
-        .stripMargin,
-
     // identical naive-predicate oracle: the optimizer-rule path must
     // emit exactly the nested loop's set
     "q_range_join_rewrite" ->
@@ -1494,23 +1289,19 @@ object EventQueries {
     "q_join_skew_card" -> Seq("is_total", "key"),
     "q_salting_plan" -> Seq("key"),
     "q_salted_join" -> Seq("event_id"),
-    "q_salted_join_rewrite" -> Seq("event_id"),
     "q_salted_join_rewrite_outer" -> Seq("event_id"),
     "q_salted_join_rewrite_anti" -> Seq("event_id"),
     "q_salted_join_rewrite_multi" -> Seq("event_id"),
     // right-only rows have NULL event_id; (k, n_r) disambiguates them
     // (the planted pile's n_r values are distinct event ids)
     "q_salted_join_rewrite_full" -> Seq("event_id", "k", "n_r"),
-    "q_salted_join_rewrite_sampled" -> Seq("event_id"),
     "q_event_transitions" -> Seq("from_type", "to_type"),
     "q_events_lag" -> Seq("user_id", "event_id"),
     "q_events_asof" -> Seq("event_id"),
     "q_events_range_join" -> Seq("event_id", "window_id"),
     "q_range_join_rewrite" -> Seq("event_id", "window_id"),
     "q_range_join_keyed" -> Seq("event_id", "window_id"),
-    "q_range_join_keyed_auto" -> Seq("event_id", "window_id"),
     "q_range_join_rewrite_num" -> Seq("event_id", "window_id"),
-    "q_range_join_rewrite_auto" -> Seq("event_id", "window_id"),
     "q_events_psi" -> Seq("event_type"),
     "q_events_priority" -> Seq("deliver_pos"),
     "q_events_retention" -> Seq("cohort_day", "day_offset"),

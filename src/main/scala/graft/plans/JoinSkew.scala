@@ -86,60 +86,23 @@ object JoinSkew {
         .agg(count(lit(1)).as("_cr")),
       keyCols)
 
-  /** Shared SAMPLED count relation: one row per distinct key tuple
-    * with (keyCols…, n_left, n_right, out_rows), n_* the point
-    * estimates `ceil(c / rate)`; a side with NO hashable non-key
-    * payload column is counted EXACTLY (a key-only hash samples each
-    * key all-or-nothing and would hide a hot key with probability
-    * 1−rate). The sample predicate is [[hashSampleCond]] — the one
-    * definition of the sampling discipline. */
-  private def sampledCounts(left: DataFrame, right: DataFrame,
-      keyCols: Seq[String], sampleRate: Double): DataFrame = {
-    val eff = effectiveRate(sampleRate)
-    def sideCounts(df: DataFrame, keyAlias: String => String,
-        cntName: String): DataFrame = {
-      val nonKey = df.columns.toSeq
-        .filterNot(c => containsMap(df.schema(c).dataType))
-        .filterNot(keyCols.contains)
-      val keys = keyCols.map(c => col(c).as(keyAlias(c)))
-      if (nonKey.isEmpty)
-        df.groupBy(keys: _*).agg(count(lit(1)).as(cntName))
-      else
-        df.filter(hashSampleCond(df, sampleRate))
-          .groupBy(keys: _*).agg(count(lit(1)).as("_c"))
-          .select(keyCols.map(c => col(keyAlias(c))) :+
-            ceil(col("_c") / lit(eff)).as(cntName): _*)
-    }
-    joinCounts(sideCounts(left, identity, "_cl"),
-      sideCounts(right, c => s"_kr_$c", "_cr"), keyCols)
-  }
-
   /** EXISTS-style pile probe for ROUTING decisions (the keyed range
-    * lift): the key tuples whose POINT estimate
+    * lift): the key tuples whose exact price
     * `greatest(n_left·n_right, n_left)` reaches `targetRows`, as
-    * (keyCols…, n_left, n_right, out_rows), exact at `sampleRate` 1
-    * and from the deterministic hash sample below it. Deliberately NO
-    * topN ranking and NO salt cap — a ranking by one statistic with a
-    * filter on another can evict the only provable key, and an
-    * existence question needs no ranking at all. Point-estimate
-    * pricing is the ROUTING discipline: a fluke-lifted borderline key
-    * costs bucket replication, a missed pile keeps its cartesian on
-    * one partition. NULL key components are the caller's business
-    * (prune them first if the consuming join drops them). */
+    * (keyCols…, n_left, n_right, out_rows). Deliberately NO topN
+    * ranking and NO salt cap — a ranking by one statistic with a
+    * filter on another can evict the only qualifying key, and an
+    * existence question needs no ranking at all. NULL key components
+    * are the caller's business (prune them first if the consuming join
+    * drops them). */
   def pilesAtOrAbove(left: DataFrame, right: DataFrame,
-      keyCols: Seq[String], targetRows: Long,
-      sampleRate: Double = 1.0): DataFrame = {
+      keyCols: Seq[String], targetRows: Long): DataFrame = {
     require(targetRows >= 1, s"targetRows must be >= 1, got $targetRows")
-    require(sampleRate > 0.0 && sampleRate <= 1.0,
-      s"sampleRate must be in (0, 1], got $sampleRate")
     require(keyCols.nonEmpty && keyCols.distinct == keyCols,
       s"keyCols must be non-empty and distinct, got $keyCols")
-    val counts =
-      if (sampleRate >= 1.0)
-        keyCountsMulti(left.select(keyCols.map(col): _*),
-          right.select(keyCols.map(col): _*), keyCols)
-      else sampledCounts(left, right, keyCols, sampleRate)
-    counts.filter(greatest(col("out_rows"), col("n_left")) >= targetRows)
+    keyCountsMulti(left.select(keyCols.map(col): _*),
+        right.select(keyCols.map(col): _*), keyCols)
+      .filter(greatest(col("out_rows"), col("n_left")) >= targetRows)
       .select(keyCols.map(col) ++ Seq(col("n_left"), col("n_right"),
         col("out_rows")): _*)
   }
@@ -186,65 +149,5 @@ object JoinSkew {
           .otherwise(round(col("_topsum").cast("double") /
             col("out_rows").cast("double"), 6)).as("out_share"))
     topRows.unionByName(summary)
-  }
-
-  /** Sampling constants of the ONE deterministic row-sample primitive
-    * shared by every plan-time diagnosis (this object's sampled
-    * counts, [[RangeJoinRewrite]]'s width/keyed diagnoses): a single
-    * definition so the modulus / rounding discipline cannot silently
-    * diverge between components — each copy of these constants is a
-    * place the cross-component "same rows sampled everywhere"
-    * determinism guarantee can rot. */
-  private val SampleModulus = 1L << 20
-  private def sampleThreshold(rate: Double): Long =
-    math.max(1L, math.round(rate * SampleModulus))
-  /** The rate actually applied after threshold rounding — per-key
-    * sampled counts scale back by THIS, not the requested rate. */
-  private def effectiveRate(rate: Double): Double =
-    sampleThreshold(rate).toDouble / SampleModulus
-
-  /** The sample membership PREDICATE:
-    * `pmod(xxhash64(hashable cols), 2^20) < rate·2^20` — payload-
-    * deterministic, so the same rows are sampled on every re-run and
-    * stage retry; MapType columns are excluded from the hash
-    * ([[containsMap]]). Exposed as a predicate (not a filtered frame)
-    * so callers can sample one aggregate's input while computing
-    * another exactly over the same scan (e.g. a sampled median next
-    * to an exact max). `lit(true)` at rate ≥ 1. */
-  private[plans] def hashSampleCond(df: DataFrame, rate: Double)
-      : org.apache.spark.sql.Column =
-    if (rate >= 1.0) lit(true)
-    else {
-      val hashable = df.columns.toSeq
-        .filterNot(c => containsMap(df.schema(c).dataType))
-      pmod(xxhash64(hashable.map(col): _*), lit(SampleModulus)) <
-        lit(sampleThreshold(rate))
-    }
-
-  /** Bounded synchronized LRU for plan-time decision caches
-    * (access-ordered, eldest-entry eviction at 64 plan shapes — a
-    * plan-shape cardinality, not a data one — never a whole-cache
-    * clear), factored here so every rewrite rule builds the SAME cache
-    * semantics. */
-  private[plans] def boundedLru[K, V](): java.util.Map[K, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[K, V]): Boolean = size() > 64
-      })
-
-  /** xxhash64 rejects MapType anywhere in a column's type tree (its
-    * own check recurses), so the hashed-column filter must too.
-    * Package-visible: [[RangeJoinRewrite]]'s width diagnosis samples
-    * rows by the same deterministic full-row hash and needs the same
-    * exclusion. */
-  private[plans] def containsMap(dt: org.apache.spark.sql.types.DataType)
-      : Boolean = dt match {
-    case _: org.apache.spark.sql.types.MapType => true
-    case s: org.apache.spark.sql.types.StructType =>
-      s.fields.exists(f => containsMap(f.dataType))
-    case a: org.apache.spark.sql.types.ArrayType =>
-      containsMap(a.elementType)
-    case _ => false
   }
 }

@@ -149,8 +149,8 @@ object RangeJoin {
             col(loCol).cast("string"), lit(", hi="),
             col(hiCol).cast("string"),
             lit("); widen the bucket (bucketWidthSec / " +
-              "spark.graft.rangeJoin.numBucketWidth) or keep " +
-              "unbounded intervals on the nested-loop path")))
+              "bucketWidth) or keep unbounded intervals on the " +
+              "nested-loop path")))
           .cast("long"))
     }
     val r = iKeyed

@@ -1,8 +1,8 @@
 // Per-JOB micro-profiler: runs one catalog entry and prints every Spark
 // job's wall time plus its aggregate task metrics (shuffle bytes, spill,
 // peak input), so "which of an entry's ~15 sequential jobs is the cost"
-// stops being a guess. Complements tools/Profile (per-entry wall) and
-// tools/QProbe (floor adjudication).
+// stops being a guess. Complements tools/QProbe (per-entry wall times
+// after a warm-up round, for floor adjudication).
 // Run: sbt "runMain graft.tools.JobProfile /root/testdata/sf0.1 q_jaccard_join_exact"
 package graft.tools
 

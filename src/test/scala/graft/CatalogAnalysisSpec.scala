@@ -89,11 +89,9 @@ class CatalogAnalysisSpec extends AnyFunSuite {
     * r15 store-maintenance entries `ann_index_append`/`ann_ivfpq_append`
     * are save→append→load round-trips over persisted stores — the same
     * stored-artifact exemption; their search halves are covered by the
-    * existing ANN kernels. `salted_join_rewrite` and
-    * `range_join_rewrite` — with their r16 outer/anti/numeric twins
-    * `salted_join_rewrite_outer`, `salted_join_rewrite_anti`, and
-    * `range_join_rewrite_num` — are
-    * the same two-relation exemption (the planted-skew join under
+    * existing ANN kernels. `range_join_rewrite`,
+    * `range_join_rewrite_num`, `salted_join_rewrite_outer` and
+    * `salted_join_rewrite_anti` are the same two-relation exemption (the planted-skew join under
     * AQE's skew split / the range-join library call through its
     * conf-gated optimizer rule); `containment_incremental`,
     * `stream_containment`, and the r16 `paragraph_incremental` need a

@@ -8,7 +8,7 @@ import graft.SparkTestSession
 
 /** Join-skew diagnostic card: hand-computed hot keys, one-sided keys in
   * the totals, NULL join keys as first-class skew rows (round-14 advice
-  * fix), and the NULL-share guard on an empty join; the sampled pile
+  * fix), and the NULL-share guard on an empty join; the exact pile
   * probe; and AQE's skew split on the planted hot key, the treatment
   * the catalog's skew-join entries rely on. */
 class JoinSkewSpec extends AnyFunSuite {
@@ -100,9 +100,8 @@ class JoinSkewSpec extends AnyFunSuite {
     assert(plan(0L) == 1L, s"salt must cap at n_left: $plan")
   }
 
-  test("pilesAtOrAbove: rate 1.0 equals the exact counts; a low " +
-    "deterministic rate still finds the planted pile, and the same " +
-    "call returns the same rows") {
+  test("pilesAtOrAbove: exact per-key counts; a target keeps only the " +
+    "keys priced at or above it") {
     val s = spark
     // key 0: 2000 left rows; keys 2, 4, …, 100: 40 left rows each;
     // right: one row per key 0..100
@@ -111,39 +110,17 @@ class JoinSkewSpec extends AnyFunSuite {
       col("id").as("payload"))
     val right = s.range(0, 101).select(col("id").as("k"),
       (col("id") * 7).as("rv"))
-    def piles(target: Long, rate: Double) = JoinSkew.pilesAtOrAbove(
-        left, right, Seq("k"), targetRows = target, sampleRate = rate)
+    def piles(target: Long) = JoinSkew.pilesAtOrAbove(
+        left, right, Seq("k"), targetRows = target)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     // target 1 keeps every key with a left row, at its exact counts
     // (right-only keys price greatest(0, 0) and drop)
     val exact = (2L to 100L by 2L).map(k => k -> ((40L, 1L, 40L))).toMap +
       (0L -> ((2000L, 1L, 2000L)))
-    assert(piles(1L, 1.0) == exact, "rate 1.0 must be the exact counts")
-    // at 5% only the planted pile can reach 1000 (a 40-row key would
-    // need all 40 rows sampled and then some); its point estimate
-    // stays near the true 2000 left rows
-    val sampled = piles(1000L, 0.05)
-    assert(sampled.keySet == Set(0L), s"planted pile missed: $sampled")
-    assert(sampled(0L)._1 >= 1000L && sampled(0L)._1 <= 4000L,
-      s"sampled n_left ${sampled(0L)._1} vs exact 2000")
-    // determinism: a payload hash sample, never arrival order
-    assert(piles(1000L, 0.05) == sampled)
-  }
-
-  test("pilesAtOrAbove: a keys-only side (no hashable non-key payload) " +
-    "is counted EXACTLY — a key-only hash would sample whole keys " +
-    "all-or-nothing and hide hot keys") {
-    val s = spark
-    // key 0: 1000 left rows; keys 2, 4, …, 50: 40 left rows each
-    val left = s.range(0, 2000).select(
-      when(col("id") % 2 === 0, 0L).otherwise(col("id") % 50 + 1).as("k"))
-    val right = s.range(0, 51).select(col("id").as("k"))
-    val piles = JoinSkew.pilesAtOrAbove(left, right, Seq("k"),
-        targetRows = 100L, sampleRate = 0.01).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(piles == Map(0L -> ((1000L, 1L))),
-      s"keys-only sides must count exactly: $piles")
+    assert(piles(1L) == exact, "target 1 must return the exact counts")
+    // only the planted pile reaches 1000
+    assert(piles(1000L) == Map(0L -> ((2000L, 1L, 2000L))))
   }
 
   test("AQE's skew split on the planted hot key: inner, left outer, " +

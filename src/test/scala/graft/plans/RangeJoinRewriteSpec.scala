@@ -9,7 +9,8 @@ import graft.functions.GraftExtensions
 
 /** The conf-gated bucketed range-join rewrite: a plain
   * point-in-interval predicate join — a nested loop to Catalyst —
-  * becomes the bucketed equi-join + exact re-filter, result-identical. */
+  * becomes the bucketed equi-join + exact re-filter, result-identical,
+  * at a width and keying measured from the data. */
 class RangeJoinRewriteSpec extends AnyFunSuite {
 
   private def spark = SparkTestSession.withTables()
@@ -27,7 +28,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   /** Count the Spark jobs launched while `body` runs — used to pin
-    * which plannings pay a diagnosis and which are cached/job-free.
+    * which plannings pay a measurement and which are cached/job-free.
     * The listener bus is async, so quiesce (no new events for 500 ms)
     * before reading. */
   private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
@@ -59,12 +60,20 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
   private def withRewrite[T](s: SparkSession)(body: => T): T = {
     GraftExtensions.register(s)
     s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.set("spark.graft.rangeJoin.bucketSec", "21600")
     try body
-    finally {
-      s.conf.set("spark.graft.rangeJoin.rewrite", "false")
-      s.conf.set("spark.graft.rangeJoin.bucketSec", "86400")
-    }
+    finally s.conf.set("spark.graft.rangeJoin.rewrite", "false")
+  }
+
+  private def fired(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("__graft_range")
+
+  /** (row count, order-free checksum) of a join's (id, id) output, for
+    * results too large to compare as collected sets. */
+  private def digest(df: DataFrame, a: String, b: String): (Long, Long) = {
+    val r = df.agg(count(lit(1)),
+      coalesce(sum(pmod(xxhash64(col(a), col(b)), lit(1000000007L))),
+        lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   test("inclusive range join: nested loop gone, result identical") {
@@ -127,8 +136,8 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     }
   }
 
-  /** Typed fixture for the keyed opt-in: per-type windows, so the
-    * equality is low-cardinality (the shape the keyed lift targets). */
+  /** Per-type windows: a low-cardinality equality connector, the
+    * shape the keyed lift targets. */
   private def typedSides(s: SparkSession): (DataFrame, DataFrame) = {
     val e = s.table("events").select("event_id", "event_type", "ts")
     val win = s.table("events").filter(col("event_id") % 97 === 0)
@@ -138,58 +147,22 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     (e, win)
   }
 
-  test("keyedRewrite lifts a cross-side attribute equality into the " +
-    "bucketed join's keys — fires, stays result-identical, and keeps " +
-    "declining without the opt-in (r17)") {
-    val s = spark
-    val (e, w) = typedSides(s)
-    def q = e.join(w, col("event_type") === col("wtype") &&
-        col("ts") >= col("lo") && col("ts") <= col("hi"))
-      .select("event_id", "event_type", "window_id")
-    val plain = q.collect().map(_.toSeq).toSet
-    withRewrite(s) {
-      // without the keyed opt-in: the established equi-decline holds
-      assert(!q.queryExecution.executedPlan.toString
-        .contains("__graft_range"),
-        "equality+range must still decline without keyedRewrite")
-      s.conf.set("spark.graft.rangeJoin.keyedRewrite", "true")
-      try {
-        val p = q.queryExecution.executedPlan.toString
-        assert(p.contains("__graft_range"),
-          s"keyed lift did not fire:\n$p")
-        assert(!p.contains("BroadcastNestedLoopJoin") &&
-          !p.contains("CartesianProduct"), p)
-        assert(q.collect().map(_.toSeq).toSet == plain,
-          "keyed lift identity broke")
-        assert(q.count() == plain.size,
-          "keyed lift must emit each row exactly once")
-      } finally s.conf.unset("spark.graft.rangeJoin.keyedRewrite")
-    }
-  }
-
   test("keyedRewrite declines non-liftable equality connectors: a " +
     "computed equality and a null-safe <=> both keep the plain plan " +
     "(the lift is proven for attribute pairs only)") {
     val s = spark
     val (e, w) = typedSides(s)
     withRewrite(s) {
-      s.conf.set("spark.graft.rangeJoin.keyedRewrite", "true")
-      try {
-        // computed (non-attribute) equality
-        val comp = e.join(w,
-          concat(col("event_type"), lit("")) === col("wtype") &&
-            col("ts") >= col("lo") && col("ts") <= col("hi"))
-        assert(!comp.queryExecution.executedPlan.toString
-          .contains("__graft_range"),
-          "a computed equality must decline the keyed lift")
-        // null-safe equality: <=> keeps NULL=NULL pairs the bucketed
-        // join's key equality would drop — must decline
-        val nsafe = e.join(w, col("event_type") <=> col("wtype") &&
+      // computed (non-attribute) equality
+      val comp = e.join(w,
+        concat(col("event_type"), lit("")) === col("wtype") &&
           col("ts") >= col("lo") && col("ts") <= col("hi"))
-        assert(!nsafe.queryExecution.executedPlan.toString
-          .contains("__graft_range"),
-          "a null-safe equality must decline the keyed lift")
-      } finally s.conf.unset("spark.graft.rangeJoin.keyedRewrite")
+      assert(!fired(comp), "a computed equality must decline the keyed lift")
+      // null-safe equality: <=> keeps NULL=NULL pairs the bucketed
+      // join's key equality would drop — must decline
+      val nsafe = e.join(w, col("event_type") <=> col("wtype") &&
+        col("ts") >= col("lo") && col("ts") <= col("hi"))
+      assert(!fired(nsafe), "a null-safe equality must decline the keyed lift")
     }
   }
 
@@ -212,48 +185,25 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     }
   }
 
-  /** Numeric score bands: values spanning negatives and fractions, a
-    * fractional bucket width, bounds straddling zero. */
+  /** Numeric score bands: values spanning negatives and fractions,
+    * bounds straddling zero, and spans of 2.5, 2.75 and 3.0 by window
+    * id, so the measured (median) width is fractional. */
   private def numSides(s: SparkSession): (DataFrame, DataFrame) = {
     val e = s.table("events").select(col("event_id"),
       (col("value") - 50.0).as("score"))
     val win = s.table("events").filter(col("event_id") % 97 === 0)
       .select(col("event_id").as("window_id"),
-        (col("value") - 51.25).as("lo"), (col("value") - 48.75).as("hi"))
+        (col("value") - 51.25).as("lo"),
+        (col("value") - 48.75 + (col("event_id") % 3) * 0.25).as("hi"))
     (e, win)
   }
 
-  private def withNumRewrite[T](s: SparkSession, width: String = "2.5")
-      (body: => T): T = {
-    GraftExtensions.register(s)
-    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.set("spark.graft.rangeJoin.numBucketWidth", width)
-    try body
-    finally {
-      s.conf.set("spark.graft.rangeJoin.rewrite", "false")
-      s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-    }
-  }
-
-  test("the numeric family DECLINES when no explicit width is set (a " +
-    "session-wide numeric default is a single-bucket trap) and when an " +
-    "interval would cover >= 1M buckets it fails LOUDLY, not as an " +
+  test("an interval covering >= 1M buckets fails LOUDLY, not as an " +
     "executor array blow-up") {
     val s = spark
-    GraftExtensions.register(s)
-    val (e, w) = numSides(s)
-    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-    try {
-      val q = e.join(w,
-        col("score") >= col("lo") && col("score") <= col("hi"))
-      assert(!q.queryExecution.optimizedPlan.toString
-        .contains("__graft_range"),
-        "numeric rewrite must decline without an explicit width")
-    } finally s.conf.set("spark.graft.rangeJoin.rewrite", "false")
+    import s.implicits._
     // span cap: an open upper bound encoded as a sentinel throws with
     // the interval's bounds instead of exploding sequence()
-    import s.implicits._
     val pts = Seq((1L, 5.0)).toDF("event_id", "score")
     val open = Seq((1L, 0.0, Double.MaxValue)).toDF("window_id", "lo", "hi")
     val err = intercept[Exception] {
@@ -276,14 +226,20 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     val plain = pairs(q)
     assert(q.queryExecution.executedPlan.toString
       .contains("BroadcastNestedLoopJoin"))
-    withNumRewrite(s) {
+    withRewrite(s) {
       val p = q.queryExecution.executedPlan.toString
-      assert(!p.contains("BroadcastNestedLoopJoin") &&
+      assert(p.contains("__graft_range") &&
+        !p.contains("BroadcastNestedLoopJoin") &&
         !p.contains("CartesianProduct"), s"nested loop survived:\n$p")
       assert(pairs(q) == plain)
     }
-    // sanity: the fixture genuinely exercises negative bounds
+    // sanity: the fixture genuinely exercises negative bounds and a
+    // fractional median span (the width the rule measures)
     assert(w.filter(col("lo") < 0).count() > 0)
+    val med = w.select(percentile_approx(col("hi") - col("lo"), lit(0.5),
+      lit(10000))).head().getDouble(0)
+    assert(math.abs(med - math.rint(med)) > 0.1,
+      s"median span $med must be fractional")
   }
 
   test("NUMERIC (integer family) strict bounds + extra conjunct " +
@@ -299,7 +255,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     def q = e.join(w, col("score") > col("lo") && col("score") < col("hi")
       && col("event_id") % 2 === 0)
     val plain = pairs(q)
-    withNumRewrite(s, width = "40") {
+    withRewrite(s) {
       val p = q.queryExecution.executedPlan.toString
       assert(!p.contains("BroadcastNestedLoopJoin"), p)
       assert(pairs(q) == plain)
@@ -317,268 +273,155 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
       .select(col("event_id").as("window_id"),
         col("ts").cast("date").as("lo"),
         date_add(col("ts").cast("date"), 2).as("hi"))
-    withNumRewrite(s) {
-      s.conf.set("spark.graft.rangeJoin.bucketSec", "21600")
-      try {
-        val q = e.join(w, col("d") >= col("lo") && col("d") <= col("hi"))
-        val p = q.queryExecution.optimizedPlan.toString
-        assert(!p.contains("__graft_range"),
-          s"unsupported family must decline:\n$p")
-        // cross-width numerics (bigint point, double bounds): the
-        // analyzer wraps the point in a cast, the attribute pattern
-        // cannot match, the plan stays untouched — same decline
-        val mixed = s.table("events")
-          .select(col("event_id"),
-            pmod(col("user_id"), lit(100L)).as("score"))
-          .join(s.table("events").filter(col("event_id") % 97 === 0)
-              .select(col("event_id").as("window_id"),
-                (col("value") / 10.0 - 2.5).as("lo"),
-                (col("value") / 10.0 + 2.5).as("hi")),
-            col("score") >= col("lo") && col("score") <= col("hi"))
-        assert(!mixed.queryExecution.optimizedPlan.toString
-          .contains("__graft_range"))
-      } finally s.conf.set("spark.graft.rangeJoin.bucketSec", "86400")
-    }
-  }
-
-  test("numWidthAuto: the numeric family fires WITHOUT an explicit " +
-    "width — the measured median-span width — and stays " +
-    "result-identical; an explicit width still wins (r17)") {
-    val s = spark
-    val (e, w) = numSides(s)
-    def q = e.join(w,
-      col("score") >= col("lo") && col("score") <= col("hi"))
-    val plain = pairs(q)
-    GraftExtensions.register(s)
-    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-    s.conf.set("spark.graft.rangeJoin.numWidthAuto", "true")
-    try {
-      val p = q.queryExecution.executedPlan.toString
-      assert(p.contains("__graft_range"),
-        s"auto width did not fire:\n$p")
-      assert(!p.contains("BroadcastNestedLoopJoin") &&
-        !p.contains("CartesianProduct"), p)
-      assert(pairs(q) == plain, "auto-width identity broke")
-      // explicit width set: still fires (explicit wins, same identity)
-      s.conf.set("spark.graft.rangeJoin.numBucketWidth", "2.5")
-      assert(q.queryExecution.executedPlan.toString
+    withRewrite(s) {
+      val q = e.join(w, col("d") >= col("lo") && col("d") <= col("hi"))
+      val p = q.queryExecution.optimizedPlan.toString
+      assert(!p.contains("__graft_range"),
+        s"unsupported family must decline:\n$p")
+      // cross-width numerics (bigint point, double bounds): the
+      // analyzer wraps the point in a cast, the attribute pattern
+      // cannot match, the plan stays untouched — same decline
+      val mixed = s.table("events")
+        .select(col("event_id"),
+          pmod(col("user_id"), lit(100L)).as("score"))
+        .join(s.table("events").filter(col("event_id") % 97 === 0)
+            .select(col("event_id").as("window_id"),
+              (col("value") / 10.0 - 2.5).as("lo"),
+              (col("value") / 10.0 + 2.5).as("hi")),
+          col("score") >= col("lo") && col("score") <= col("hi"))
+      assert(!mixed.queryExecution.optimizedPlan.toString
         .contains("__graft_range"))
-      assert(pairs(q) == plain)
-    } finally {
-      s.conf.set("spark.graft.rangeJoin.rewrite", "false")
-      s.conf.unset("spark.graft.rangeJoin.numWidthAuto")
-      s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
     }
   }
 
-  test("numWidthAuto DECLINES the unsound-width distributions: all " +
-    "point intervals (median span 0), an unbounded sentinel interval " +
-    "(non-finite max), and a >=1e5x tail span (median width would " +
-    "manufacture the bucket-cap error the nested loop never raises)") {
+  test("the measured numeric width DECLINES the unsound-width " +
+    "distributions: all point intervals (median span 0), an unbounded " +
+    "sentinel interval (non-finite max), and a >=1e5x tail span (median " +
+    "width would manufacture the bucket-cap error the nested loop never " +
+    "raises)") {
     val s = spark
     import s.implicits._
-    GraftExtensions.register(s)
     val pts = Seq((1L, 5.0), (2L, -3.0)).toDF("pid", "p")
     def q(iv: DataFrame) =
       pts.join(iv, col("p") >= col("ilo") && col("p") <= col("ihi"))
-    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.set("spark.graft.rangeJoin.numWidthAuto", "true")
-    try {
+    withRewrite(s) {
       // all spans zero: no width is measurable
       val zero = Seq((1L, 5.0, 5.0), (2L, -3.0, -3.0))
         .toDF("wid", "ilo", "ihi")
       assert(!q(zero).queryExecution.optimizedPlan.toString
         .contains("__graft_range"),
-        "zero-span intervals must decline auto width")
+        "zero-span intervals must decline the numeric width")
       // an unbounded sentinel interval: max span is infinite — only
       // the nested loop is sound, and it still returns the right rows
       val open = Seq((1L, 4.0, 6.0), (2L, 0.0, Double.PositiveInfinity))
         .toDF("wid", "ilo", "ihi")
       assert(!q(open).queryExecution.optimizedPlan.toString
         .contains("__graft_range"),
-        "an infinite-span interval must decline auto width")
+        "an infinite-span interval must decline the numeric width")
       assert(q(open).count() == 2) // 5∈[4,6], 5∈[0,inf), and nothing else
       // tail span >= 1e5x the median: no single sound width
       val tail = Seq((1L, 0.0, 1.0), (2L, 0.5, 1.5),
           (3L, 0.0, 2.0e5)).toDF("wid", "ilo", "ihi")
       assert(!q(tail).queryExecution.optimizedPlan.toString
         .contains("__graft_range"),
-        "a 1e5x tail span must decline auto width")
-    } finally {
-      s.conf.set("spark.graft.rangeJoin.rewrite", "false")
-      s.conf.unset("spark.graft.rangeJoin.numWidthAuto")
+        "a 1e5x tail span must decline the numeric width")
     }
   }
 
-  test("keyedAuto: the keyed lift fires from MEASURED per-key piles " +
-    "(planner-hash-group price >= keyedTargetRows), declines when no " +
-    "key's pile reaches the target, and stays result-identical (r17)") {
+  test("an unsound TIMESTAMP width (all point intervals) falls back to " +
+    "one-day buckets: the rewrite still fires, result identical") {
     val s = spark
-    val (e, w) = typedSides(s)
-    def q = e.join(w, col("event_type") === col("wtype") &&
-        col("ts") >= col("lo") && col("ts") <= col("hi"))
-      .select("event_id", "event_type", "window_id")
-    val plain = q.collect().map(_.toSeq).toSet
+    val e = s.table("events").select("event_id", "ts")
+    val w = s.table("events").filter(col("event_id") % 97 === 0)
+      .select(col("event_id").as("window_id"), col("ts").as("lo"),
+        (col("ts") + expr("INTERVAL 0 SECONDS")).as("hi"))
+    def q = e.join(w, col("ts") >= col("lo") && col("ts") <= col("hi"))
+    val plain = pairs(q)
+    assert(plain.nonEmpty)
     withRewrite(s) {
-      s.conf.set("spark.graft.rangeJoin.keyedAuto", "true")
-      // sf0.001 fixture: ~200 points x ~2 windows per type — price
-      // ~400 per key; 200 trips, 100000 cannot
-      s.conf.set("spark.graft.rangeJoin.keyedTargetRows", "200")
-      try {
-        val p = q.queryExecution.executedPlan.toString
-        assert(p.contains("__graft_range"),
-          s"measured keyed lift did not fire:\n$p")
-        assert(!p.contains("BroadcastNestedLoopJoin") &&
-          !p.contains("CartesianProduct"), p)
-        assert(q.collect().map(_.toSeq).toSet == plain,
-          "measured keyed lift identity broke")
-        // no key's price reaches the target: the planner's hash join
-        // is the measured-right plan and stays
-        s.conf.set("spark.graft.rangeJoin.keyedTargetRows", "100000")
-        assert(!q.queryExecution.executedPlan.toString
-          .contains("__graft_range"),
-          "an untripped keyed diagnosis must keep the planner's plan")
-      } finally {
-        s.conf.unset("spark.graft.rangeJoin.keyedAuto")
-        s.conf.unset("spark.graft.rangeJoin.keyedTargetRows")
-      }
+      val p = q.queryExecution.executedPlan.toString
+      assert(p.contains("__graft_range") &&
+        !p.contains("BroadcastNestedLoopJoin"), p)
+      assert(pairs(q) == plain)
+    }
+  }
+
+  /** One key ("hot") carrying `nPoints` × `nIntervals` candidate pairs
+    * plus a cold key, numeric positions spread so each point matches
+    * only a few intervals. */
+  private def hotKeySides(s: SparkSession, nPoints: Long, nIntervals: Long)
+      : (DataFrame, DataFrame) = {
+    val pts = s.range(nPoints + 10).select(col("id").as("pid"),
+      when(col("id") < nPoints, "hot").otherwise("cold").as("pk"),
+      (col("id") * 0.01).as("p"))
+    val ivs = s.range(nIntervals + 10).select(
+      (col("id") + 1000000L).as("wid"),
+      when(col("id") < nIntervals, "hot").otherwise("cold").as("wk"),
+      (col("id") * 0.013).as("ilo"), (col("id") * 0.013 + 0.05).as("ihi"))
+    (pts, ivs)
+  }
+
+  test("the keyed lift is MEASURED: a key priced at or above " +
+    "KeyedLiftPairs lifts, a high-cardinality key below it keeps the " +
+    "planner's hash join, and both plans return the rule-off rows") {
+    val s = spark
+    // 800 x 500 = 400k candidate pairs on one key
+    val (pts, ivs) = hotKeySides(s, 800, 500)
+    assert(800L * 500L >= RangeJoinRewrite.KeyedLiftPairs)
+    def hot = pts.join(ivs, col("pk") === col("wk") &&
+      col("p") >= col("ilo") && col("p") <= col("ihi"))
+    val hotPlain = digest(hot, "pid", "wid")
+    assert(hotPlain._1 > 0)
+    // user_id: ~15 users over the sf0.001 fixture, a few windows each
+    val e = s.table("events").select("event_id", "user_id", "ts")
+    val w = s.table("events").filter(col("event_id") % 97 === 0)
+      .select(col("event_id").as("window_id"), col("user_id").as("wuser"),
+        col("ts").as("lo"), (col("ts") + expr("INTERVAL 3 DAYS")).as("hi"))
+    def cold = e.join(w, col("user_id") === col("wuser") &&
+      col("ts") >= col("lo") && col("ts") <= col("hi"))
+      .select("event_id", "window_id")
+    val coldPlain = pairs(cold)
+    assert(coldPlain.nonEmpty)
+    withRewrite(s) {
+      val p = hot.queryExecution.executedPlan.toString
+      assert(p.contains("__graft_range") &&
+        !p.contains("BroadcastNestedLoopJoin") &&
+        !p.contains("CartesianProduct"), s"keyed lift did not fire:\n$p")
+      assert(digest(hot, "pid", "wid") == hotPlain,
+        "keyed lift identity broke")
+      assert(!fired(cold),
+        "a key below KeyedLiftPairs must keep the planner's hash join")
+      assert(pairs(cold) == coldPlain)
     }
   }
 
   test("measured decisions run their plan-time jobs ONCE per shape " +
-    "(cached); rediagnose=true bypasses the cache READ; the sampled " +
-    "diagnosis (deterministic full-row hash) reaches the same " +
-    "decisions on the planted fixture") {
+    "(cached)") {
     val s = spark
-    // count Spark jobs launched while materializing the OPTIMIZED plan
-    // only (the diagnosis collects are the only plan-time job source;
-    // the bucketed assembly itself runs none)
-    def planJobs(body: => Unit): Int = jobsDuring(s)(body)
-    val (e0, w0) = typedSides(s)
-    // numeric keyed shape so ONE query exercises BOTH diagnoses (NTZ
-    // timestamps cast to double through TIMESTAMP, as RangeJoin does)
-    val e = e0.withColumn("score",
-        col("ts").cast("timestamp").cast("double"))
-      .drop("ts")
-    val w = w0.withColumn("nlo",
-        col("lo").cast("timestamp").cast("double"))
-      .withColumn("nhi", col("hi").cast("timestamp").cast("double"))
-      .drop("lo", "hi")
-    def q = e.join(w, col("event_type") === col("wtype") &&
-      col("score") >= col("nlo") && col("score") <= col("nhi"))
-    GraftExtensions.register(s)
-    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-    s.conf.set("spark.graft.rangeJoin.numWidthAuto", "true")
-    s.conf.set("spark.graft.rangeJoin.keyedAuto", "true")
-    // 777: a target no other test uses, so this test's cache keys are
-    // disjoint in the session-shared rule instance
-    s.conf.set("spark.graft.rangeJoin.keyedTargetRows", "777")
-    try {
-      def plan() = q.queryExecution.executedPlan
-      assert(plan().toString.contains("__graft_range"),
-        "the fixture must trip both measured gates")
-      val first = planJobs { plan() }
-      // first==0 would mean the diagnoses were cached by the assert
-      // above — which is the point; re-check against a fresh target
-      s.conf.set("spark.graft.rangeJoin.keyedTargetRows", "778")
-      val fresh = planJobs { plan() }
-      assert(fresh >= 1,
-        s"a fresh conf must re-run the keyed diagnosis, ran $fresh")
-      val second = planJobs { plan() }
-      assert(second == 0,
-        s"cached decisions must plan job-free, ran $second")
-      s.conf.set("spark.graft.rangeJoin.rediagnose", "true")
-      try {
-        val third = planJobs { plan() }
-        assert(third >= 1,
-          "rediagnose=true must bypass the cache read and re-diagnose")
-      } finally s.conf.unset("spark.graft.rangeJoin.rediagnose")
-      val fourth = planJobs { plan() }
-      assert(fourth == 0,
-        s"the re-cached decision must be honored again, ran $fourth")
-      // sampled diagnosis: fires on the planted fixture too. The
-      // keyed ROUTING decision prices on the plan's point estimates
-      // (ceil(c/rate) — not the 3-sigma salt-factor lower bounds;
-      // over-lifting a borderline key costs only bucket replication,
-      // see keyedPileProven's scaladoc), but a sparse side can still
-      // be under-sampled, so the target sits well under the
-      // fixture's estimated price: 100 against a ~200-point-per-type
-      // pile is provable at rate 0.5 under any sampling outcome
-      s.conf.set("spark.graft.rangeJoin.keyedTargetRows", "100")
-      s.conf.set("spark.graft.rangeJoin.sampleRate", "0.5")
-      try {
-        val p = plan().toString
-        assert(p.contains("__graft_range"),
-          s"sampled diagnosis missed the planted piles:\n$p")
-      } finally s.conf.unset("spark.graft.rangeJoin.sampleRate")
-      val _ = first // silence: first's value is timing-dependent
-    } finally {
-      s.conf.set("spark.graft.rangeJoin.rewrite", "false")
-      s.conf.unset("spark.graft.rangeJoin.numWidthAuto")
-      s.conf.unset("spark.graft.rangeJoin.keyedAuto")
-      s.conf.unset("spark.graft.rangeJoin.keyedTargetRows")
-    }
-  }
-
-  test("bucketSecAuto: the TS family's width is MEASURED when " +
-    "bucketSec is UNSET (a diagnosis job runs at plan time; identity " +
-    "holds), while an explicitly-set bucketSec — even the default " +
-    "value — wins job-free (r17)") {
-    val s = spark
-    GraftExtensions.register(s)
-    val (e, w) = sides(s)
-    def q = e.join(w, col("ts") >= col("lo") && col("ts") <= col("hi"))
-    val plain = pairs(q)
-    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.unset("spark.graft.rangeJoin.bucketSec")
-    s.conf.set("spark.graft.rangeJoin.bucketSecAuto", "true")
-    try {
-      val jobs = jobsDuring(s) { q.queryExecution.executedPlan }
-      assert(jobs >= 1,
-        s"the first TS-width planning must run the diagnosis, ran $jobs")
-      val p = q.queryExecution.executedPlan.toString
-      assert(p.contains("__graft_range") &&
-        !p.contains("BroadcastNestedLoopJoin"), p)
-      assert(pairs(q) == plain, "measured TS width identity broke")
-      // cached: re-planning the same shape is job-free
-      assert(jobsDuring(s) { q.queryExecution.executedPlan } == 0,
-        "the cached TS width must plan job-free")
-      // explicit bucketSec (the default value, set explicitly) wins
-      // without jobs even on a FRESH shape
-      s.conf.set("spark.graft.rangeJoin.bucketSec", "86400")
-      val w2 = s.table("events").filter(col("event_id") % 89 === 0)
-        .select(col("event_id").as("window_id"), col("ts").as("lo"),
-          (col("ts") + expr("INTERVAL 12 HOURS")).as("hi"))
-      def q2 = e.join(w2,
-        col("ts") >= col("lo") && col("ts") <= col("hi"))
-      val jobs2 = jobsDuring(s) { q2.queryExecution.executedPlan }
-      assert(jobs2 == 0,
-        s"an explicit bucketSec must never run diagnosis jobs, ran $jobs2")
-      assert(q2.queryExecution.executedPlan.toString
-        .contains("__graft_range"))
-    } finally {
-      s.conf.set("spark.graft.rangeJoin.rewrite", "false")
-      s.conf.unset("spark.graft.rangeJoin.bucketSecAuto")
-      s.conf.set("spark.graft.rangeJoin.bucketSec", "86400")
+    // a shape no other test plans, so the session-shared rule
+    // instance has not cached it yet
+    val (pts, ivs) = hotKeySides(s, 700, 600)
+    def plan() = pts.join(ivs, col("pk") === col("wk") &&
+        col("p") >= col("ilo") && col("p") <= col("ihi"))
+      .queryExecution.executedPlan
+    withRewrite(s) {
+      val first = jobsDuring(s) { plan() }
+      assert(first >= 2,
+        s"the first planning must measure the keyed pile and the width, " +
+          s"ran $first jobs")
+      assert(plan().toString.contains("__graft_range"))
+      val second = jobsDuring(s) { plan() }
+      assert(second == 0, s"cached decisions must plan job-free, ran $second")
     }
   }
 
   test("review-pass pins (r17): duplicate lifted equalities diagnose " +
     "without crashing, lo==hi (one bound attribute) declines cleanly, " +
-    "an unsampled tail span still declines via the EXACT max, an " +
-    "explicit width=0 kill-switch beats numWidthAuto job-free, and a " +
-    "declined numeric band FALLS THROUGH to a TS triple instead of " +
-    "vetoing the join") {
+    "and a declined numeric band FALLS THROUGH to a TS triple instead " +
+    "of vetoing the join") {
     val s = spark
     import s.implicits._
-    GraftExtensions.register(s)
-    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.set("spark.graft.rangeJoin.numWidthAuto", "true")
-    s.conf.set("spark.graft.rangeJoin.keyedAuto", "true")
-    s.conf.set("spark.graft.rangeJoin.keyedTargetRows", "2")
-    try {
+    withRewrite(s) {
       // (1) one points attribute backing TWO lifted equalities:
       // e.etype = w.t1 AND e.etype = w.t2 — the diagnosis must not
       // die on the rename (it once left _dk_1 unresolved)
@@ -603,37 +446,9 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
       assert(!same.queryExecution.optimizedPlan.toString
         .contains("__graft_range"), "lo==hi must decline, not crash")
       assert(same.count() == 1)
-      // (3) a >=1e5x tail interval must decline under SAMPLING too:
-      // the max span is computed exactly over all valid rows, so the
-      // decline cannot depend on whether the tail row was sampled
-      s.conf.set("spark.graft.rangeJoin.sampleRate", "0.5")
-      val tailIv = ((1 to 50).map(i => (i.toLong, i * 10.0,
-        i * 10.0 + 1.0)) :+ (99L, 0.0, 2.0e5))
-        .toDF("wid", "ilo", "ihi")
-      val tailQ = pts.join(tailIv,
-        col("p") >= col("ilo") && col("p") <= col("ihi"))
-      assert(!tailQ.queryExecution.optimizedPlan.toString
-        .contains("__graft_range"),
-        "the exact max must catch the tail at any sample rate")
-      s.conf.unset("spark.graft.rangeJoin.sampleRate")
-      // (4) explicit numBucketWidth=0 is the documented kill-switch:
-      // the family declines, and auto must not override it (and runs
-      // no diagnosis jobs)
-      s.conf.set("spark.graft.rangeJoin.numBucketWidth", "0")
-      val band = Seq((7L, 4.0, 6.0)).toDF("wid2", "blo", "bhi")
-      def killed = pts.join(band,
-        col("p") >= col("blo") && col("p") <= col("bhi"))
-      val jobs = jobsDuring(s) {
-        assert(!killed.queryExecution.optimizedPlan.toString
-          .contains("__graft_range"),
-          "width=0 must disable the numeric family even under auto")
-      }
-      assert(jobs == 0,
-        s"the kill-switch must not run diagnosis jobs, ran $jobs")
-      s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-      // (5) a numeric band whose measurement declines (all spans 0,
+      // (3) a numeric band whose measurement declines (all spans 0,
       // distinct lo/hi attributes) must fall through to the TS triple
-      // in the same condition, which rewrites with the default bucket
+      // in the same condition, which rewrites at its measured width
       val e2 = Seq((1L, 5.0, java.sql.Timestamp.valueOf(
           "2024-01-01 12:00:00"))).toDF("eid2", "v2", "ts2")
       val w2 = Seq((20L, 5.0, 5.0,
@@ -647,13 +462,6 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
       assert(p.contains("__graft_range"),
         s"the TS triple must fire after the numeric decline:\n$p")
       assert(mixed.count() == 1)
-    } finally {
-      s.conf.set("spark.graft.rangeJoin.rewrite", "false")
-      s.conf.unset("spark.graft.rangeJoin.numWidthAuto")
-      s.conf.unset("spark.graft.rangeJoin.keyedAuto")
-      s.conf.unset("spark.graft.rangeJoin.keyedTargetRows")
-      s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
-      s.conf.unset("spark.graft.rangeJoin.sampleRate")
     }
   }
 
@@ -664,31 +472,24 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     "intervals side and the (key, bucket) shuffle splits it anyway") {
     val s = spark
     import s.implicits._
-    GraftExtensions.register(s)
-    // one point for the hot key; 300 intervals all containing it —
-    // price greatest(1*300, 1) = 300, old salt = least(3, nL=1) = 1
-    val pts = Seq(("h", 5.0), ("cold", 50.0)).toDF("ptype", "p")
-    val ivs = (1 to 300).map(i => (i.toLong, "h", 4.0, 6.0))
-      .toDF("wid", "wtype", "ilo", "ihi")
+    // one point for the hot key; KeyedLiftPairs intervals all
+    // containing it — price greatest(1 * n, 1) = n, salt-capped 1
+    val n = RangeJoinRewrite.KeyedLiftPairs
+    val pts = Seq((1L, "h", 5.0), (2L, "cold", 50.0)).toDF("pid", "ptype", "p")
+    // computed (not literal) columns, so the optimizer cannot fold the
+    // key and bounds into one-sided filters
+    val ivs = s.range(n).select(col("id").as("wid"),
+      when(col("id") >= 0, "h").as("wtype"),
+      (lit(4.0) - (col("id") % 2) * 0.5).as("ilo"),
+      (lit(6.0) + (col("id") % 3) * 0.5).as("ihi"))
     def q = pts.join(ivs, col("ptype") === col("wtype") &&
       col("p") >= col("ilo") && col("p") <= col("ihi"))
-    val plain = q.collect().map(_.toSeq).toSet
-    assert(plain.size == 300)
-    s.conf.set("spark.graft.rangeJoin.rewrite", "true")
-    s.conf.set("spark.graft.rangeJoin.keyedAuto", "true")
-    s.conf.set("spark.graft.rangeJoin.keyedTargetRows", "100")
-    s.conf.set("spark.graft.rangeJoin.numBucketWidth", "2.5")
-    try {
-      val p = q.queryExecution.executedPlan.toString
-      assert(p.contains("__graft_range"),
-        s"a 1-point x 300-interval key must route keyed (salt-cap " +
-          s"pricing would have declined it):\n$p")
-      assert(q.collect().map(_.toSeq).toSet == plain)
-    } finally {
-      s.conf.set("spark.graft.rangeJoin.rewrite", "false")
-      s.conf.unset("spark.graft.rangeJoin.keyedAuto")
-      s.conf.unset("spark.graft.rangeJoin.keyedTargetRows")
-      s.conf.unset("spark.graft.rangeJoin.numBucketWidth")
+    val plain = digest(q, "pid", "wid")
+    assert(plain._1 == n)
+    withRewrite(s) {
+      assert(fired(q), "a 1-point x n-interval key must route keyed " +
+        "(salt-cap pricing would have declined it)")
+      assert(digest(q, "pid", "wid") == plain)
     }
   }
 
