@@ -45,6 +45,15 @@ object Evaluation {
     }
   }
 
+  /** The [[computeMetrics]] key of an [[evaluatorFor]] evaluator's metric. */
+  def metricKey(evaluator: Evaluator): String =
+    evaluator.getOrDefault(evaluator.getParam("metricName")) match {
+      case "areaUnderROC"      => "auc"
+      case "weightedPrecision" => "precision"
+      case "weightedRecall"    => "recall"
+      case other               => other.toString
+    }
+
   /** Standard metric map per task over a transformed (predictions)
     * DataFrame, one pass per metric family: every classification metric
     * reads the one confusion matrix of a single `MulticlassMetrics`, every

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.{GraftPipelineAccess, PipelineModel}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,9 +17,14 @@ import graft.dml.{PyJson, Value}
   * as a parquet table beside the saved PipelineModels.
   *
   * Layout: `basePath/registry` (parquet, append-only) and
-  * `basePath/models/<name>/v<version>` (PipelineModel.save). Both tables
-  * are read with their fixed schema, so no read infers one from the
-  * parquet footers (a Spark job per read).
+  * `basePath/models/<name>/v<version>`, in exactly the layout of
+  * `PipelineModel.write.save`. [[register]] runs the writer's saves (the
+  * pipeline metadata and one per stage, each under its own directory)
+  * concurrently rather than one after another, through
+  * `GraftPipelineAccess`; a model with a stage that cannot be written
+  * throws before anything is saved. Both tables are read with their
+  * fixed schema, so no read infers one from the parquet footers (a
+  * Spark job per read).
   *
   * In-memory slot: the registry keeps, per model name, the latest version
   * this instance registered or loaded, with its fitted `PipelineModel`.
@@ -60,11 +65,14 @@ final class ModelRegistry(spark: SparkSession, basePath: String) {
   def nextVersion(name: String): Int = latestVersion(name).fold(1)(_ + 1)
 
   /** Persist the fitted model and append its registry row; returns the
-    * assigned version. The model then fills the name's in-memory slot. */
+    * assigned version. The row is appended only after every save of the
+    * model has finished, and not at all if one failed. The model then
+    * fills the name's in-memory slot. */
   def register(report: Trainer.TrainReport): Int = {
     val spec = report.spec
     val version = nextVersion(spec.name)
-    report.model.write.overwrite().save(modelPath(spec.name, version))
+    graft.scale.Par.runAll(
+      GraftPipelineAccess.overwriteSaves(report.model, modelPath(spec.name, version), spark): _*)
     val metricsJson = PyJson.dumps(
       report.metrics.toList.sortBy(_._1).map { case (k, v) => k -> Value.VFloat(v) })
     val configJson = PyJson.dumps(spec.params)

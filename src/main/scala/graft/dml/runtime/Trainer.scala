@@ -3,12 +3,12 @@ package graft.dml.runtime
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
 import org.apache.spark.ml.evaluation._
-import org.apache.spark.ml.feature.{SQLTransformer, StandardScaler, StringIndexer, VectorAssembler}
+import org.apache.spark.ml.feature.{SQLTransformer, StandardScaler, StringIndexerModel, VectorAssembler}
 import org.apache.spark.ml.param.Params
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
 
 import graft.dml._
 import AlgorithmRegistry.{Classification, Clustering, Regression, Task}
@@ -30,10 +30,19 @@ import AlgorithmRegistry.{Classification, Clustering, Regression, Task}
   * the reference's DISTRIBUTED.md tier aspires to (SURVEY §2.7).
   *
   * Fixed cost: a step that needs a scan takes one pass, not one per
-  * column, split or metric — the string label and string features share one
-  * multi-column StringIndexer (one fit job), the split sizes come from one
-  * grouped query over the tagged splits, and the metrics from one pass
-  * per metric family ([[Evaluation.computeMetrics]]).
+  * column, split or metric. The balance class counts are one
+  * `countByValue` job. The split sizes and the label sets of the string
+  * label and string features come from ONE observed no-shuffle pass over
+  * the tagged splits ([[observeSplits]]); the labels build the fitted
+  * multi-column `StringIndexerModel` directly, the model
+  * `StringIndexer.fit` would return on the training split (same labels,
+  * same params), so neither the fit nor a cv fold or STOP WHEN chunk
+  * re-runs it. The metrics take one pass per metric family
+  * ([[Evaluation.computeMetrics]]). Under cv the indexer's labels come
+  * from the whole training split, not from each fold's part of it: a
+  * category seen only in a fold's held-out part has its index there
+  * instead of the unseen-label bucket. The returned model is the same,
+  * as its final fit is on the whole training split.
   */
 object Trainer {
 
@@ -92,14 +101,15 @@ object Trainer {
     }
 
     // O2: SPLIT DATA k=r,... (seeded randomSplit in declared order)
-    val (namedSplits, trainDf, evalDf) = split(df1, spec, seed)
+    val (parts, trainIdx, evalDf) = split(df1, spec, seed)
+    val trainDf = parts(trainIdx)._2
 
     // Pipeline stages: label stage + either a text pipeline
     // (Tokenizer→HashingTF→IDF over one text feature) or categorical
     // indexing → assembler → optional scaler. A string label and the
-    // string features share ONE multi-column StringIndexer, whose fit
-    // collects every column's sorted label set in a single job (same
-    // labels, same indices as one indexer per column).
+    // string features share ONE multi-column StringIndexerModel, built
+    // from the label sets observed on the split pass (same labels, same
+    // indices as one indexer per column).
     val isString = (c: String) => df0.schema(c).dataType == StringType
     val vectorFeature = isVectorFeature(df0, featureNames)
     val indexed = Seq.newBuilder[(String, String)] // input → output column
@@ -115,11 +125,14 @@ object Trainer {
       else featureNames.filter(isString).toSet
     categorical.toSeq.sorted.foreach(fn => indexed += fn -> s"${fn}_idx")
     val indexedCols = indexed.result()
-    if (indexedCols.nonEmpty)
-      stages += new StringIndexer()
+    val (partCounts, labels) = observeSplits(parts.map(_._2), trainIdx, indexedCols.map(_._1))
+    if (indexedCols.nonEmpty) {
+      val indexer = new StringIndexerModel(labels.toArray)
         .setInputCols(indexedCols.map(_._1).toArray)
         .setOutputCols(indexedCols.map(_._2).toArray)
-        .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
+        .setHandleInvalid("keep")
+      stages += indexer.set(indexer.stringOrderType, "alphabetAsc")
+    }
     val featureCols: Seq[String] =
       if (vectorFeature) {
         // single Array[Float]/Array[Double] feature (e.g. an embedding
@@ -269,6 +282,7 @@ object Trainer {
 
     var checkpoints = List.empty[String]
     var epochs = 0
+    var cvMetric = Option.empty[(String, Double)]
     val model: PipelineModel =
       if (useCv) {
         val folds = spec.validate.flatMap(_.params).flatMap(_.collectFirst {
@@ -281,7 +295,10 @@ object Trainer {
           .setEstimatorParamMaps(new ParamGridBuilder().build())
           .setNumFolds(folds)
           .setSeed(seed)
-        cv.fit(trainDf).bestModel.asInstanceOf[PipelineModel]
+        val fitted = cv.fit(trainDf)
+        // one param map: its metric averaged over the folds
+        cvMetric = Some(s"cv_${Evaluation.metricKey(evaluator)}" -> fitted.avgMetrics(0))
+        fitted.bestModel.asInstanceOf[PipelineModel]
       } else spec.stopCondition match {
         // O5: STOP WHEN — chunked fitting loop over the iteration param
         case Some(condText) if alg.iterParam.isDefined =>
@@ -336,10 +353,11 @@ object Trainer {
       case None        => evalDf.getOrElse(trainDf)
     }
     val metrics = Evaluation.computeMetrics(model.transform(metricsFrame), alg.task) ++
-      (if (epochs > 0) Map("epochs" -> epochs.toDouble) else Map.empty)
+      (if (epochs > 0) Map("epochs" -> epochs.toDouble) else Map.empty) ++ cvMetric
 
     TrainReport(spec, model, metrics, epochs, checkpoints,
-      splitCounts(namedSplits),
+      // a name given twice counts its last part, as a map of the parts
+      parts.map(_._1).zip(partCounts).toMap,
       // a param that BOUND this run (list-form holidays) is not inert
       ignoredParams = spec.params.map(_._1)
         .filter(n => alg.noopParams(n) && !consumedParams(n)))
@@ -384,33 +402,51 @@ object Trainer {
   private def isVectorFeature(df: DataFrame, names: Seq[String]): Boolean =
     names.size == 1 && df.schema(names.head).dataType.typeName == "vector"
 
+  /** The named parts in declared order (one "training" part without a
+    * SPLIT clause), the position of the training part, and the
+    * evaluation part if there is one. */
   private def split(
       df: DataFrame, spec: TrainSpec, seed: Long)
-      : (Map[String, DataFrame], DataFrame, Option[DataFrame]) =
+      : (IndexedSeq[(String, DataFrame)], Int, Option[DataFrame]) =
     spec.split match {
-      case None => (Map("training" -> df), df, None)
+      case None => (Vector("training" -> df), 0, None)
       case Some(s) =>
-        val names = s.ratios.map(_._1)
-        val parts = df.randomSplit(s.ratios.map(_._2).toArray, seed)
-        val named = names.zip(parts).toMap
+        val parts = s.ratios.map(_._1)
+          .zip(df.randomSplit(s.ratios.map(_._2).toArray, seed)).toVector
+        val named = parts.toMap
         val trainDf = named.collectFirst {
           case (k, d) if k.startsWith("train") => d
-        }.getOrElse(parts.head)
+        }.getOrElse(parts.head._2)
         val evalDf = named.collectFirst {
           case (k, d) if k.startsWith("val") => d
         }.orElse(named.collectFirst { case (k, d) if k.startsWith("test") => d })
-        (named, trainDf, evalDf)
+        (parts, parts.indexWhere(_._2 eq trainDf), evalDf)
     }
 
-  /** Row count of every named split from ONE grouped query over the
-    * splits tagged with their names — each split's sample is the same as
-    * on its own, so the counts equal per-split `count()`s. */
-  private def splitCounts(named: Map[String, DataFrame]): Map[String, Long] = {
-    val tagged = named.toSeq.map { case (k, d) => d.select(lit(k).as("split")) }
-      .reduce(_ unionAll _)
-    val counts = tagged.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    named.keys.map(k => k -> counts.getOrElse(k, 0L)).toMap
+  /** Each part's row count and, over the training part, each of the
+    * `indexed` string columns' sorted non-NULL values, from ONE observed
+    * noop write over the parts tagged with their position (no shuffle;
+    * each part's sample is the same as on its own, so the counts equal
+    * per-part `count()`s). The values are what `StringIndexer.fit` with
+    * `alphabetAsc` collects and sorts: `collect_set` per column, NULLs
+    * dropped, sorted as JVM strings. */
+  private def observeSplits(parts: Seq[DataFrame], train: Int, indexed: Seq[String])
+      : (Seq[Long], Seq[Array[String]]) = {
+    val tag = col("part")
+    val tagged = parts.zipWithIndex.map { case (d, i) =>
+      d.select(lit(i).as("part") +: indexed.zipWithIndex.map { case (c, j) => col(c).as(s"c$j") }: _*)
+    }.reduce(_ unionAll _)
+    val counts = parts.indices.map(i => count_if(tag === i).as(s"n$i"))
+    val sets = indexed.indices.map(j =>
+      collect_set(when(tag === train, col(s"c$j"))).as(s"labels$j"))
+    val seen = Observation()
+    val metrics = counts ++ sets
+    tagged.observe(seen, metrics.head, metrics.tail: _*)
+      .write.format("noop").mode("overwrite").save()
+    val m = seen.get
+    (parts.indices.map(i => m(s"n$i").asInstanceOf[Long]),
+      indexed.indices.map(j => m(s"labels$j").asInstanceOf[scala.collection.Seq[String]]
+        .filter(_ != null).sorted.toArray))
   }
 
   private def configure(
@@ -440,9 +476,17 @@ object Trainer {
     * which follows the shuffle layout (partition count, AQE) — so the
     * balanced rows do not depend on the layout. */
   private object Balance {
-    private def counts(df: DataFrame, target: String): Map[Any, Long] =
-      df.groupBy(target).count().collect()
-        .map(r => r.get(0) -> r.getLong(1)).toMap
+    /** Rows per class, as one `countByValue` job. Grouping counts -0.0
+      * with 0.0; adding 0.0 to a floating-point class does the same
+      * before the values are compared as JVM objects. */
+    private def counts(df: DataFrame, target: String): Map[Any, Long] = {
+      val dt = df.schema(target).dataType
+      val cls = dt match {
+        case FloatType | DoubleType => col(target) + lit(0.0).cast(dt)
+        case _ => col(target)
+      }
+      df.select(cls).rdd.map(_.get(0)).countByValue().toMap
+    }
 
     /** (class, count, per-class seed), in sorted class order. */
     private def seeded(cs: Map[Any, Long], seed: Long): Seq[(Any, Long, Long)] =

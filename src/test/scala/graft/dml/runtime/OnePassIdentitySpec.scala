@@ -1,16 +1,20 @@
 package graft.dml.runtime
 
+import java.nio.file.Files
+
 import scala.collection.mutable
 
-import org.apache.spark.ml.{Pipeline, PipelineStage}
+import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.{LogisticRegression, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator, RegressionEvaluator}
-import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
+import org.apache.spark.ml.feature.{StringIndexer, StringIndexerModel, VectorAssembler}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.regression.LinearRegression
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.Metadata
+import org.json4s.JsonAST.JObject
+import org.json4s.jackson.JsonMethods.parse
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -104,6 +108,91 @@ class OnePassIdentitySpec extends AnyFunSuite {
       m.transform(score.drop("outcome")).select("id", "prediction").orderBy("id")
         .collect().toSeq
     assert(unlabelled(merged) == unlabelled(perColumn))
+  }
+
+  /** The parts TRAIN draws for `spec` at seed 42, in declared order: the
+    * training frame, oversampled when the statement balances, then
+    * split. */
+  private def splitParts(spec: TrainSpec): Array[DataFrame] = {
+    val df = TrainCompiler.trainingDataFrame(spark, spec)
+    val balanced =
+      if (spec.balanceMethod.contains("oversampling")) Trainer.oversampleForTest(df, spec.target, 42L)
+      else df
+    balanced.randomSplit(spec.split.get.ratios.map(_._2).toArray, 42L)
+  }
+
+  /** A saved model's metadata JSON without its timestamp, and with its
+    * uid (which also names the default output column) as `<uid>`. */
+  private def savedParams(m: StringIndexerModel): JObject = {
+    val dir = Files.createTempDirectory("graft-indexer").toString
+    m.write.overwrite().save(dir)
+    val json = spark.read.text(s"$dir/metadata").collect().map(_.getString(0)).mkString
+    JObject(parse(json.replace(m.uid, "<uid>")).asInstanceOf[JObject].obj
+      .filterNot(_._1 == "timestamp"))
+  }
+
+  test("TRAIN's prebuilt StringIndexerModel equals StringIndexer.fit on the " +
+    "training split, and its observed split sizes equal each split's count(): " +
+    "plain, BALANCE, cv(folds=2) and STOP WHEN, at shuffle partitions 1 and 7") {
+    val s = spark
+    // a string target, and string features with NULLs and case variants
+    val base = DmlFixture.table(s, 37, 700, 0L)
+      .withColumn("cat", when(col("id") % 9 === 0, lit(null))
+        .when(col("id") % 7 === 0, upper(col("cat"))).otherwise(col("cat")))
+      .withColumn("tier", when(col("id") % 11 === 0, lit(null)).otherwise(col("tier")))
+    val score = DmlFixture.table(s, 37, 400, 900000L)
+      .withColumn("cat", when(col("id") % 5 === 0, lit(null))
+        .when(col("id") % 3 === 0, upper(col("cat")))
+        .when(col("id") % 17 === 0, lit("unseen")).otherwise(col("cat")))
+    val tail = "FROM indexer_train PREDICT outcome WITH FEATURES(x1, cat, tier, x2) " +
+      "SPLIT DATA training=0.8, test=0.2 "
+    val statements = Seq(
+      "TRAIN MODEL idx_plain USING random_forest(n_estimators=4, max_depth=4) " + tail,
+      "TRAIN MODEL idx_bal USING random_forest(n_estimators=4, max_depth=4) " + tail +
+        "BALANCE CLASSES BY oversampling",
+      "TRAIN MODEL idx_cv USING random_forest(n_estimators=4, max_depth=4) " + tail +
+        "VALIDATE USING cv(folds=2) OPTIMIZE FOR accuracy",
+      "TRAIN MODEL idx_stop USING logistic_regression " + tail + "STOP WHEN epochs >= 20")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    for (partitions <- Seq(1, 7); text <- statements) try {
+      s.conf.set(key, partitions.toString)
+      val spec = DmlParser.parse(text).asInstanceOf[TrainSpec]
+      // one category only on test rows: rows are split in x1 order (the
+      // first column), so relabelling a category moves no row
+      base.createOrReplaceTempView("indexer_train")
+      val Array(train0, test0) = splitParts(spec)
+      val testOnly = test0.select("x1").except(train0.select("x1")).orderBy("x1")
+        .head().getDouble(0)
+      base.withColumn("cat", when(col("x1") === testOnly, lit("test_only"))
+        .otherwise(col("cat"))).createOrReplaceTempView("indexer_train")
+      val parts = splitParts(spec)
+      assert(parts(1).filter(col("cat") === "test_only").count() > 0)
+      assert(parts(0).filter(col("cat") === "test_only").count() == 0)
+
+      val report = Trainer.train(s, spec)
+      val where = s"$text at $partitions partitions"
+      assert(report.splitCounts == Map("training" -> parts(0).count(),
+        "test" -> parts(1).count()), where)
+      val built = report.model.stages.collect { case m: StringIndexerModel => m }.head
+      val fitted = new StringIndexer().setInputCols(Array("outcome", "cat", "tier"))
+        .setOutputCols(Array("label", "cat_idx", "tier_idx"))
+        .setHandleInvalid("keep").setStringOrderType("alphabetAsc").fit(parts(0))
+      assert(built.labelsArray.map(_.toSeq).toSeq == fitted.labelsArray.map(_.toSeq).toSeq, where)
+      assert(!built.labelsArray(1).contains("test_only"))
+      assert(built.labelsArray(1).contains("A") && built.labelsArray(1).contains("a"))
+      assert(savedParams(built) == savedParams(fitted), where)
+      // the pipeline with the fitted indexer in its place predicts the same
+      val swapped = new Pipeline().setStages(report.model.stages.map {
+        case _: StringIndexerModel => fitted
+        case t => t
+      }.map(_.asInstanceOf[PipelineStage])).fit(parts(0))
+      def scored(m: PipelineModel): Seq[Row] =
+        m.transform(score).select(col("id"), col("label"), col("cat_idx"), col("tier_idx"),
+          col("prediction"), vector_to_array(col("probability")).as("p"))
+          .orderBy("id").collect().toSeq
+      assert(scored(report.model) == scored(swapped), where)
+    } finally s.conf.set(key, prev)
   }
 
   /** The replaced drift statistics: one aggregate per side. */

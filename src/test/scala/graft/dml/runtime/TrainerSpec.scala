@@ -2,7 +2,11 @@ package graft.dml.runtime
 
 import java.nio.file.Files
 
-import org.apache.spark.ml.feature.StandardScalerModel
+import org.apache.spark.ml.{Pipeline, PipelineStage}
+import org.apache.spark.ml.evaluation.RegressionEvaluator
+import org.apache.spark.ml.feature.{SQLTransformer, StandardScalerModel, VectorAssembler}
+import org.apache.spark.ml.regression.LinearRegression
+import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -151,6 +155,33 @@ class TrainerSpec extends AnyFunSuite {
         "VALIDATE USING cv(folds=3) OPTIMIZE FOR f1")
     val r = Trainer.train(spark, spec)
     assert(r.metrics.contains("f1"))
+  }
+
+  test("VALIDATE USING cv(folds=2) reports its fold-averaged metric as " +
+    "cv_<metric>, equal to CrossValidator's avgMetrics") {
+    val s = spark
+    DmlFixture.table(s, 41, 600, 0L).createOrReplaceTempView("cv_train")
+    val spec = parseTrain(
+      "TRAIN MODEL cv_lin USING linear_regression(max_iter=10) FROM cv_train " +
+        "PREDICT y WITH FEATURES(x1, x2, amount) VALIDATE USING cv(folds=2) OPTIMIZE FOR r2")
+    val r = Trainer.train(s, spec)
+    // the replaced form: the same pipeline under a CrossValidator of its own
+    val pipeline = new Pipeline().setStages(Array[PipelineStage](
+      new SQLTransformer().setStatement("SELECT *, CAST(`y` AS DOUBLE) AS label FROM __THIS__"),
+      new VectorAssembler().setInputCols(Array("x1", "x2", "amount"))
+        .setOutputCol("features").setHandleInvalid("keep"),
+      new LinearRegression().setMaxIter(10)))
+    val cv = new CrossValidator().setEstimator(pipeline)
+      .setEvaluator(new RegressionEvaluator().setMetricName("r2"))
+      .setEstimatorParamMaps(new ParamGridBuilder().build())
+      .setNumFolds(2).setSeed(42L)
+      .fit(graft.dml.TrainCompiler.trainingDataFrame(s, spec))
+    assert(r.metrics("cv_r2") == cv.avgMetrics(0))
+    assert(r.metrics("cv_r2") > 0.5 && r.metrics.contains("r2"))
+    // without cv there is no cv metric
+    assert(!Trainer.train(s, parseTrain("TRAIN MODEL plain_lin USING " +
+      "linear_regression(max_iter=10) FROM cv_train PREDICT y WITH FEATURES(x1, x2) " +
+      "OPTIMIZE FOR r2")).metrics.keys.exists(_.startsWith("cv_")))
   }
 
   test("scale() feature adds a StandardScaler stage") {
